@@ -1,0 +1,40 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.functions.{count, lit}
+
+/** Size gate for iterative graph operators (connected components, label
+  * propagation): pick the execution strategy from the measured size of
+  * the edge relation at run time.
+  *
+  * Every distributed fixpoint round is a handful of Spark jobs, so a
+  * graph of a few hundred edges pays seconds of scheduling for
+  * microseconds of work. The gate materializes the edge relation ONCE
+  * and compares rows × the planner's per-row size estimate against
+  * `spark.sql.autoBroadcastJoinThreshold` — the budget Spark already
+  * uses to ship a relation to every task, so a relation under it is by
+  * the engine's own standard cheap to hold on the driver. Under it the
+  * caller collects the rows and finishes the fixpoint on the driver;
+  * over it the distributed rounds run from the same materialized edges
+  * (the O(log d)-round path at scale). A threshold ≤ 0 turns the
+  * driver path off. No option of its own: one existing Spark setting
+  * and the input's size decide.
+  */
+private[graft] object SmallGraph {
+
+  /** `edges` materialized by an eager local checkpoint, with its row
+    * count observed inside the same job (no separate count pass). */
+  def materialize(edges: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val cp = edges.observe(rows, count(lit(1)).as("n")).localCheckpoint(eager = true)
+    (cp, rows.get("n").asInstanceOf[Long])
+  }
+
+  /** Whether `rows` rows of `df` fit the broadcast budget. */
+  def fits(df: DataFrame, rows: Long): Boolean = {
+    val budget = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    budget > 0 &&
+      BigInt(rows) * EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output) <= budget
+  }
+}

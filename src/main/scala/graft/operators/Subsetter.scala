@@ -195,9 +195,10 @@ object Subsetter {
       seeds: Map[String, DataFrame],
       maxIters: Int = 50,
       materialize: Boolean = true): Map[String, DataFrame] = {
-    // LAZY checkpoints: each normalized seed materializes inside the
-    // first closure job that consumes it instead of paying one eager
-    // driver-job barrier per table up front.
+    // LAZY checkpoints: no eager checkpoint job per table up front. Under
+    // AQE the call still runs the `distinct` shuffle stage of each seed;
+    // the persisted final stage materializes inside the first closure
+    // job that consumes it.
     val norm = seeds.map { case (t, rows) =>
       t -> rows.select(graph.pks(t).map(col): _*).distinct().localCheckpoint(false)
     }
@@ -282,11 +283,12 @@ object Subsetter {
         .na.drop()
         .distinct()
 
-    // Per-edge fresh keys materialize + measure in ONE job: a LAZY
-    // localCheckpoint persists its partitions on the first action, so
-    // count() both truncates lineage and answers the convergence probe
-    // (vs eager-checkpoint-then-isEmpty = two jobs per edge, each a
-    // full cluster barrier at scale).
+    // Per-edge fresh keys: a LAZY localCheckpoint persists its final
+    // stage on the first action, so count() both truncates lineage and
+    // answers the convergence probe (vs eager-checkpoint-then-isEmpty,
+    // which adds a job per edge). Under AQE the call itself already
+    // runs every shuffle and broadcast stage beneath the checkpoint, so
+    // this saves the final-stage pass, not the stage jobs.
 
     // All edges out of one child consume the same delta, so ONE
     // semi-join scan of the child table (projected to the union of the
@@ -400,14 +402,14 @@ object Subsetter {
         ready.foreach { case (c, _) => done += c }
         pending.filterInPlace { case (c, _) => !done.contains(c) }
       }
-      // The whole DAG closure above was PLAN construction only — zero
-      // Spark jobs. ONE job now materializes every lazily-checkpointed
-      // key set (shared stages dedup inside the job), replacing the
-      // per-edge count barriers: ~2 driver round-trips total instead of
-      // ~2 per edge. Downstream CONCURRENT consumers (child pull) need
-      // this; callers whose next step is itself a single materializing
-      // job (the top-up loop's measure()) pass materialize=false and
-      // skip the barrier entirely.
+      // The DAG closure above ran no per-edge count barriers, but it is
+      // not job-free: under AQE each lazy localCheckpoint ran the
+      // shuffle and broadcast stages beneath it at the call. ONE job now
+      // persists the final stage of every lazily-checkpointed key set,
+      // replacing the per-edge count barriers. Downstream CONCURRENT
+      // consumers (child pull) need this; callers whose next step is
+      // itself a single materializing job (the top-up loop's measure())
+      // pass materialize=false and skip the barrier entirely.
       if (materialize && keys.nonEmpty)
         keys.values.map(_.select(lit(1).as("__m"))).reduce(_ union _).count()
     } else {

@@ -13,8 +13,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 object GraftSets {
   final class LongSet(expected: Int) {
     private[this] val cap = {
+      // Long arithmetic: 2·expected overflows Int for huge inputs, and a
+      // table that silently shrank would make `add` probe forever once
+      // full — fail fast instead, before allocating
+      val target = math.max(expected.toLong, 1L) * 2
+      require(target <= (1L << 29),
+        s"LongSet: $expected elements exceed the ${1 << 28}-element limit")
       var c = 8
-      val target = math.min(math.max(expected, 1) * 2, 1 << 30)
       while (c < target) c <<= 1
       c
     }

@@ -63,25 +63,29 @@ object GraftHashes {
     * skipping a second concat+hash pass over every position (the
     * LSH/keeper tier computes both representations per row; PlansSpec
     * pins `graft_minhash_hashes(graft_shingle_hashes(t, n), k) ==
-    * graft_minhash(t, n, k)` on the real corpus). */
+    * graft_minhash(t, n, k)` on the real corpus). Null slots are
+    * skipped, so the signature is that of the non-null hashes (empty
+    * when there are none). */
   def minhashFromHashes(hashes: ArrayData, numHashes: Int): ArrayData = {
     val nSh = hashes.numElements()
-    if (nSh <= 0) return new GenericArrayData(Array.empty[Long])
     val mins = Array.fill(numHashes)(Long.MaxValue)
+    var seen = false
     var i = 0
     while (i < nSh) {
-      val h64 = hashes.getLong(i)
-      val m = h64 % MersennePrime
-      val h = if (m < 0) m + MersennePrime else m
-      var k = 0
-      while (k < numHashes) {
-        val v = (h * (1L + 2L * k) + 7919L * (k + 1)) % MersennePrime
-        if (v < mins(k)) mins(k) = v
-        k += 1
+      if (!hashes.isNullAt(i)) {
+        seen = true
+        val m = hashes.getLong(i) % MersennePrime
+        val h = if (m < 0) m + MersennePrime else m
+        var k = 0
+        while (k < numHashes) {
+          val v = (h * (1L + 2L * k) + 7919L * (k + 1)) % MersennePrime
+          if (v < mins(k)) mins(k) = v
+          k += 1
+        }
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    new GenericArrayData(if (seen) mins else Array.empty[Long])
   }
 
   /** [[shingleHash64]] reduced mod 2³¹−1 — the minhash-permutation

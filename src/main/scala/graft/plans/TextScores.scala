@@ -44,23 +44,25 @@ object GraftScores {
     * ascii(substring(t,1,1))), 0L, (h,x) => (h*31+x) % 1000000007)`:
     * per token code = numChars*131 + first code point (0 for the empty
     * token, exactly `ascii('')`), folded left in array order. All
-    * integer arithmetic; h stays < 1e9+7 so h*31+x never overflows. */
+    * integer arithmetic; h stays < 1e9+7 so h*31+x never overflows.
+    * A null token makes the HOF fold NULL; here it returns
+    * [[NullFingerprint]], which `graft_fingerprint` maps to NULL. */
   def fingerprint(tokens: ArrayData): Long = {
     val n = tokens.numElements()
     var h = 0L
     var i = 0
     while (i < n) {
-      // precondition: tokens come from split() and are never null (the
-      // HOF form would collapse the whole fold to NULL on one); a null
-      // slot here scores as the empty token (code 0) instead of NPEing.
-      val t = if (tokens.isNullAt(i)) null else tokens.getUTF8String(i)
-      val code =
-        if (t == null) 0L else t.numChars().toLong * 131L + firstCodePoint(t)
-      h = (h * 31L + code) % 1000000007L
+      if (tokens.isNullAt(i)) return NullFingerprint
+      val t = tokens.getUTF8String(i)
+      h = (h * 31L + t.numChars().toLong * 131L + firstCodePoint(t)) % 1000000007L
       i += 1
     }
     h
   }
+
+  /** [[fingerprint]] of a token array with a null slot: outside the
+    * fold's range [0, 1e9+7). */
+  final val NullFingerprint = -1L
 
   /** First Unicode code point of a UTF8String (0 when empty) — the
     * value `ascii(substring(t, 1, 1))` computes. */
@@ -118,12 +120,17 @@ case class Fingerprint(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_fingerprint"
 
-  override def nullSafeEval(a: Any): Any =
-    GraftScores.fingerprint(a.asInstanceOf[ArrayData])
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any): Any = {
+    val h = GraftScores.fingerprint(a.asInstanceOf[ArrayData])
+    if (h == GraftScores.NullFingerprint) null else h
+  }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftScores.fingerprint($a);")
+      s"""${ev.value} = graft.plans.GraftScores.fingerprint($a);
+         |${ev.isNull} = ${ev.value} == ${GraftScores.NullFingerprint}L;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

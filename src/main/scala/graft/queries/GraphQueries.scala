@@ -1,9 +1,11 @@
 package graft.queries
 
 import graft.Catalog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Iterative graph analytics beyond connected components: PageRank-style
   * link centrality over the domain-transition graph a web corpus
@@ -249,7 +251,9 @@ object GraphQueries {
   // hash join + a map-side-combined (dst, label) weight agg + a
   // per-vertex window bounded by the vertex's distinct neighbor-label
   // count — all keyed on vertex ids; K is fixed, relations are frozen
-  // with localCheckpoint like the PageRank loop.
+  // with localCheckpoint like the PageRank loop. A weighted edge
+  // relation under the broadcast budget skips the rounds and votes on
+  // the driver (operators.SmallGraph).
   private val LpaIters = 4
 
   /** Package-visible core over an explicit (src, dst) transition list —
@@ -272,11 +276,22 @@ object GraphQueries {
     * executed). */
   private[graft] def labelPropEdgesProbed(trans: DataFrame, maxIters: Int,
       stopAtFixpoint: Boolean = true): (DataFrame, Int) = {
-    val und = trans
+    val (und, rows) = graft.operators.SmallGraph.materialize(trans
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("w"))
+      .groupBy("a", "b").agg(count(lit(1)).as("w")))
+    val out =
+      if (und.schema("a").dataType == StringType && graft.operators.SmallGraph.fits(und, rows))
+        labelPropOnDriver(und.sparkSession, und.collect(), maxIters, stopAtFixpoint)
+      else labelPropDistributed(und, maxIters, stopAtFixpoint)
+    graft.plans.Checkpoints.unpersist(und)
+    out
+  }
+
+  /** The distributed rounds over the materialized (a, b, w) edges. */
+  private def labelPropDistributed(und: DataFrame, maxIters: Int,
+      stopAtFixpoint: Boolean): (DataFrame, Int) = {
     // symmetric view: each undirected edge votes in both directions
     val e = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
@@ -307,7 +322,55 @@ object GraphQueries {
       }
       graft.plans.Checkpoints.unpersist(prev)
     }
+    graft.plans.Checkpoints.unpersist(e)
     (lbl.orderBy("domain"), rounds)
+  }
+
+  /** The same synchronous weighted vote on the driver, over the
+    * collected (a, b, w) string-vertex rows: vertices are indexed in
+    * Spark's string order (binary UTF-8, not `String.compareTo`'s
+    * UTF-16 order), so "ties to the smallest label" is the smallest
+    * index; weights sum as Long; the round count and the fixpoint probe
+    * match the distributed loop's. */
+  private def labelPropOnDriver(spark: SparkSession, edges: Array[Row], maxIters: Int,
+      stopAtFixpoint: Boolean): (DataFrame, Int) = {
+    val verts = edges.flatMap(r => Seq(r.getString(0), r.getString(1))).distinct
+      .sortWith((x, y) => UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y)) < 0)
+    val index = verts.zipWithIndex.toMap
+    val n = verts.length
+    // CSR adjacency, each undirected edge in both directions
+    val deg = new Array[Int](n + 1)
+    val ends = edges.map(r => (index(r.getString(0)), index(r.getString(1)), r.getLong(2)))
+    for ((a, b, _) <- ends) { deg(a + 1) += 1; deg(b + 1) += 1 }
+    for (v <- 0 until n) deg(v + 1) += deg(v)
+    val nbr = new Array[Int](deg(n)); val wt = new Array[Long](deg(n))
+    val fill = deg.clone()
+    for ((a, b, w) <- ends) {
+      nbr(fill(a)) = b; wt(fill(a)) = w; fill(a) += 1
+      nbr(fill(b)) = a; wt(fill(b)) = w; fill(b) += 1
+    }
+    var lbl = Array.range(0, n)
+    val acc = new Array[Long](n) // per-label weight sums, reset after each vertex
+    var rounds = 0
+    var converged = false
+    while (rounds < maxIters && !converged) {
+      val next = new Array[Int](n)
+      for (v <- 0 until n) {
+        var best = -1
+        for (j <- deg(v) until deg(v + 1)) acc(lbl(nbr(j))) += wt(j)
+        for (j <- deg(v) until deg(v + 1)) {
+          val l = lbl(nbr(j))
+          if (best < 0 || acc(l) > acc(best) || (acc(l) == acc(best) && l < best)) best = l
+        }
+        for (j <- deg(v) until deg(v + 1)) acc(lbl(nbr(j))) = 0L
+        next(v) = best
+      }
+      rounds += 1
+      if (stopAtFixpoint) converged = java.util.Arrays.equals(next, lbl)
+      lbl = next
+    }
+    import spark.implicits._
+    ((0 until n).map(v => (verts(v), verts(lbl(v)))).toDF("domain", "label"), rounds)
   }
 
   /** LPA runs on a BLOCKED host graph, not the dense 13-host one the

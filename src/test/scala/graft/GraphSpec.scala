@@ -58,7 +58,7 @@ class GraphSpec extends SparkSpecBase {
     assert(got == Map("a" -> 2L, "b" -> 1L, "c" -> 2L, "d" -> 1L, "e" -> 0L))
   }
 
-  test("labelPropEdges: hand-built two-community graph with a weak bridge") {
+  bothGateSides("labelPropEdges: hand-built two-community graph with a weak bridge") {
     // two triangles (strong, w=3 each edge) joined by one weak edge —
     // LPA must keep them separate where connected components would
     // merge them into one
@@ -73,7 +73,7 @@ class GraphSpec extends SparkSpecBase {
     assert(left != right, s"weak bridge must not merge the communities: $got")
   }
 
-  test("LPA convergence probe: fixpoint stops the loop early, output == full-K unroll") {
+  bothGateSides("LPA convergence probe: fixpoint stops the loop early, output == full-K unroll") {
     // the two-triangle graph converges in 2 rounds; a 10-round budget
     // must stop at the probe (round 3 observes zero changes) and the
     // early-stopped labels must equal the fully-unrolled ones — the
@@ -83,11 +83,31 @@ class GraphSpec extends SparkSpecBase {
       ("x", "y"), ("y", "z"), ("z", "x"))).flatten :+ ("c", "x")
     val df = spark.createDataFrame(trans).toDF("src", "dst")
     val (probed, rounds) = GraphQueries.labelPropEdgesProbed(df, maxIters = 10)
-    assert(rounds < 10, s"probe never fired: ran all $rounds rounds")
+    assert(rounds == 3, s"probe fired after $rounds rounds, not at round 3")
     val full = GraphQueries.labelPropEdges(df).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     val early = probed.collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(early == full, "early stop changed the labels")
+  }
+
+  test("labelPropEdgesProbed: driver vote == distributed rounds on random multigraphs") {
+    // duplicate/reversed/self-loop transitions, null endpoints, weight
+    // ties, and labels whose binary UTF-8 order differs from UTF-16
+    // order (U+FF5E vs U+10000): labels AND round counts must agree
+    val rnd = new scala.util.Random(5)
+    val names = Vector("a", "b", "B", "c", "\uff5e", "\ud800\udc00", "dd", "e", "f")
+    def v(): String = if (rnd.nextInt(15) == 0) null else names(rnd.nextInt(names.size))
+    for (trial <- 1 to 4; fixpoint <- Seq(true, false)) {
+      val df = spark.createDataFrame(Seq.fill(10 + rnd.nextInt(30))((v(), v())))
+        .toDF("src", "dst")
+      def run() = {
+        val (lbl, rounds) = GraphQueries.labelPropEdgesProbed(df, 6, fixpoint)
+        (lbl.collect().map(r => (r.getString(0), r.getString(1))).toSeq, rounds)
+      }
+      val driver = run()
+      val distributed = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+      assert(driver == distributed, s"trial $trial fixpoint=$fixpoint")
+    }
   }
 
   test("graph_label_propagation fixture: blocks recovered, hub keeps the graph connected") {

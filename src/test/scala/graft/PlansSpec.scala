@@ -3,6 +3,7 @@ package graft
 import graft.functions.SimilarityFunctions
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Native Catalyst expression (graft_cosine) — codegen path, SQL
   * registration, and bitwise agreement with the HOF formulation. */
@@ -170,5 +171,45 @@ class PlansSpec extends SparkSpecBase {
     val arr = Literal.create(Array(3.0, 4.0), ArrayType(DoubleType))
     val e = graft.plans.CosineSimilarity(arr, arr)
     assert(math.abs(e.eval(null).asInstanceOf[Double] - 1.0) < 1e-12)
+  }
+
+  test("graft_minhash_hashes skips null slots: == the signature of the non-null hashes") {
+    val df = Seq(
+      Seq[java.lang.Long](5L, null, 17L, 0L, -3L),
+      Seq[java.lang.Long](null, null),
+      Seq[java.lang.Long](),
+      Seq[java.lang.Long](null, 9L)).toDF("h")
+    val rows = df.select(
+      call_function("graft_minhash_hashes", $"h", lit(16)).as("k"),
+      call_function("graft_minhash_hashes", filter($"h", _.isNotNull), lit(16)).as("ref"))
+      .as[(Seq[Long], Seq[Long])].collect()
+    rows.foreach { case (k, ref) => assert(k == ref) }
+    assert(rows(1)._1.isEmpty, "all-null input has no signature")
+  }
+
+  test("graft_fingerprint: a null token slot is NULL, like the HOF it replaced") {
+    import org.apache.spark.sql.graftshim.GraftColumn
+    val df = Seq(Seq("ab", null, "c"), Seq(null), Seq("ab", "c"), Seq.empty[String]).toDF("t")
+    val hof = aggregate(
+      transform($"t", t => (length(t) * lit(131) + ascii(substring(t, 1, 1))).cast("long")),
+      lit(0L), (h, x) => (h * lit(31L) + x) % lit(1000000007L))
+    val kernel = GraftColumn.of(graft.plans.Fingerprint(GraftColumn.expr($"t")))
+    val rows = df.select(kernel.as("k"), hof.as("h"))
+      .as[(Option[Long], Option[Long])].collect()
+    rows.foreach { case (k, h) => assert(k == h, s"kernel $k != HOF $h") }
+    assert(rows.map(_._1.isEmpty).toSeq == Seq(true, true, false, false))
+    // interpreted path agrees with codegen
+    val lit3 = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Array("ab", null, "c"), ArrayType(StringType))
+    assert(graft.plans.Fingerprint(lit3).eval(null) == null)
+  }
+
+  test("LongSet: a capacity past the table limit fails fast instead of wrapping") {
+    // 2·Int.MaxValue overflowed Int into an 8-slot table that `add`
+    // probed forever once full; now it throws before allocating
+    intercept[IllegalArgumentException](new graft.plans.GraftSets.LongSet(Int.MaxValue))
+    intercept[IllegalArgumentException](new graft.plans.GraftSets.LongSet((1 << 28) + 1))
+    val set = new graft.plans.GraftSets.LongSet(20)
+    assert((1L to 20L).forall(set.add) && (1L to 20L).forall(set.contains))
   }
 }
