@@ -169,16 +169,40 @@ object SubsetCli {
     rows.map { case (t, n, tgt) => f"$t%-12s $n%10d -> $tgt%10d rows" }
       .mkString("\n")
 
+  /** The run as one JSON line, printed after the human-readable table:
+    * per table the source, target and written rows (a table written
+    * without a plan row — an excluded parent its children needed — has
+    * written rows only), the orphan total, and which side of the
+    * subsetter's size gate computed the key sets. */
+  def summaryJson(planned: Seq[(String, Long, Long)], written: Map[String, Long],
+                  orphans: Long, onDriver: Boolean): String = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.createObjectNode()
+    val rows = root.putArray("tables")
+    planned.foreach { case (t, n, tgt) =>
+      rows.addObject().put("table", t).put("source_rows", n).put("target_rows", tgt)
+        .put("written_rows", written.getOrElse(t, 0L))
+    }
+    (written.keySet -- planned.map(_._1)).toSeq.sorted.foreach { t =>
+      rows.addObject().put("table", t).put("written_rows", written(t))
+    }
+    root.put("orphans", orphans).put("key_sets", if (onDriver) "driver" else "distributed")
+    mapper.writeValueAsString(root)
+  }
+
   /** Run the subset and write each table to `<dest>/<table>.parquet`.
     * Returns per-table written row counts (totals, incl. pre-existing).
     *
     * Reference parity on a NON-EMPTY destination: rdbms-subsetter run
     * twice keeps what dest already has and inserts only missing rows
     * (its per-row existence check). Here that is detected by dest
-    * table files being present → `subsetDelta` computes the disjoint,
-    * referentially-closed gap and APPENDS it; an empty dest gets the
-    * full first-run subset. */
-  def run(spark: SparkSession, args: CliArgs): Map[String, Long] = {
+    * table files being present → a delta run (`Subsetter.subsetDelta`'s
+    * semantics) computes the disjoint, referentially-closed gap and
+    * APPENDS it; an empty dest gets the full first-run subset. */
+  def run(spark: SparkSession, args: CliArgs): Map[String, Long] = runGated(spark, args)._1
+
+  /** [[run]], also reporting whether the driver computed the key sets. */
+  private def runGated(spark: SparkSession, args: CliArgs): (Map[String, Long], Boolean) = {
     val graph = sourceGraph(args)
     if (isJdbc(args.src)) runJdbc(spark, args, graph)
     else runParquet(spark, args, graph)
@@ -193,15 +217,16 @@ object SubsetCli {
     * directory dest lands the subset as parquet — a DB→lake snapshot.
     * Delta/append detection remains a parquet-to-parquet feature. */
   private def runJdbc(spark: SparkSession, args: CliArgs,
-                      graph: FkGraph): Map[String, Long] = {
+                      graph: FkGraph): (Map[String, Long], Boolean) = {
     val props = new java.util.Properties()
     val names = graph.tables
       .filterNot(t => Subsetter.globMatch(args.cfg.excludeTables, t))
     val tables = names.map(t =>
       t -> lowerCols(Sources.readJdbc(spark, args.src, t, props))).toMap
     val counts = names.map(t => t -> jdbcRowCount(args.src, t)).toMap
-    val out = Subsetter.subset(tables, graph, args.cfg, rowCounts = counts)
-    graph.insertionOrder.filter(out.contains).map { t =>
+    val (out, onDriver) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
+      existing = Map.empty, existingClosed = false)
+    (graph.insertionOrder.filter(out.contains).map { t =>
       val df = out(t)
       if (isJdbc(args.dest)) {
         Sources.appendJdbc(df, args.dest, t, props)
@@ -210,11 +235,11 @@ object SubsetCli {
         Sources.writeParquet(df, s"${args.dest}/$t.parquet")
         t -> Sources.footerRowCount(spark, s"${args.dest}/$t.parquet")
       }
-    }.toMap
+    }.toMap, onDriver)
   }
 
   private def runParquet(spark: SparkSession, args: CliArgs,
-                         graph: FkGraph): Map[String, Long] = {
+                         graph: FkGraph): (Map[String, Long], Boolean) = {
     recoverPendingDelta(args.dest)
     val tables = Catalog.load(spark, args.src)
     val counts = Catalog.tableNames.map(t =>
@@ -236,12 +261,8 @@ object SubsetCli {
         s"[subset] WARNING: partial destination (${destExisting.size}/" +
           s"${Catalog.tableNames.size} tables present — interrupted run?); " +
           "treating existing rows as UNCLOSED and re-walking parent closure")
-    val out =
-      if (destExisting.isEmpty)
-        Subsetter.subset(tables, graph, args.cfg, rowCounts = counts)
-      else
-        Subsetter.subsetDelta(tables, graph, args.cfg, destExisting,
-          rowCounts = counts, assumeDestClosed = destComplete)
+    val (out, onDriver) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
+      existing = Subsetter.destKeys(graph, destExisting), existingClosed = destComplete)
     // Crash-atomic delta apply — the upstream's whole-run transaction
     // (`create_subset_in` commits once at the end) re-expressed for
     // files. Appending table-by-table into live dest dirs would leave
@@ -282,8 +303,8 @@ object SubsetCli {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       applyStagedDelta(args.dest)
     }
-    out.keys.map(t =>
-      t -> Sources.footerRowCount(spark, s"${args.dest}/$t.parquet")).toMap
+    (out.keys.map(t =>
+      t -> Sources.footerRowCount(spark, s"${args.dest}/$t.parquet")).toMap, onDriver)
   }
 
   private val PendingDirName = "_delta_pending"
@@ -353,9 +374,24 @@ object SubsetCli {
                    writtenTables: Set[String],
                    graph: FkGraph = FkGraph.default): DataFrame = {
     val props = new java.util.Properties()
-    val reloaded = writtenTables.map(t =>
-      t -> (if (isJdbc(dest)) lowerCols(Sources.readJdbc(spark, dest, t, props))
-            else spark.read.parquet(s"$dest/$t.parquet"))).toMap
+    val reloaded: Map[String, DataFrame] =
+      if (!isJdbc(dest))
+        writtenTables.map(t => t -> spark.read.parquet(s"$dest/$t.parquet")).toMap
+      else {
+        // each JDBC table is read ONCE however many edges use it: its key
+        // columns are snapshotted by an eager local checkpoint, one
+        // concurrent job per table, and the audit reads the snapshots
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        Await.result(Future.sequence(writtenTables.toSeq.map { t => Future {
+          val keyCols = graph.fks.flatMap(fk =>
+            (if (fk.childTable == t) fk.childCols else Nil) ++
+              (if (fk.parentTable == t) fk.parentCols else Nil)).distinct
+          val df = lowerCols(Sources.readJdbc(spark, dest, t, props))
+          t -> (if (keyCols.isEmpty) df else df.select(keyCols.map(df(_)): _*).localCheckpoint())
+        }}), Duration.Inf).toMap
+      }
     Subsetter.validateRI(reloaded, graph)
   }
 
@@ -377,7 +413,8 @@ object SubsetCli {
       // reference parity: show the per-table plan, then confirm unless
       // --yes. A non-interactive stdin (null readLine) aborts rather
       // than assuming consent.
-      println(renderPlan(plan(spark, args)))
+      val planned = plan(spark, args)
+      println(renderPlan(planned))
       if (!args.yes) {
         print("proceed? [y/N] ")
         val answer = scala.io.StdIn.readLine()
@@ -387,7 +424,7 @@ object SubsetCli {
           sys.exit(1)
         }
       }
-      val written = run(spark, args)
+      val (written, onDriver) = runGated(spark, args)
       written.toSeq.sortBy(_._1).foreach { case (t, n) =>
         println(f"$t%-12s $n%10d rows")
       }
@@ -395,6 +432,7 @@ object SubsetCli {
           sourceGraph(args))
         .agg(org.apache.spark.sql.functions.sum("orphans")).head().getLong(0)
       println(s"referential integrity: $orphanTotal orphans")
+      println(summaryJson(planned, written, orphanTotal, onDriver))
       if (orphanTotal != 0L) sys.exit(2)
     } finally spark.stop()
   }

@@ -59,7 +59,7 @@ object ConnectedComponents {
     val (e, rows) = SmallGraph.materialize(edges.select(col("src"), col("dst")))
     val longIds = (nodes.schema("id") +: e.schema.fields).forall(_.dataType == LongType)
     val out =
-      if (longIds && SmallGraph.fits(e, rows)) onDriver(nodes, e.collect())
+      if (longIds && SmallGraph.fits(e -> rows)) onDriver(nodes, e.collect())
       else distributed(nodes, e, maxIters)
     graft.plans.Checkpoints.unpersist(e)
     out

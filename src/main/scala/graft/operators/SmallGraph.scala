@@ -31,10 +31,12 @@ private[graft] object SmallGraph {
     (cp, rows.get("n").asInstanceOf[Long])
   }
 
-  /** Whether `rows` rows of `df` fit the broadcast budget. */
-  def fits(df: DataFrame, rows: Long): Boolean = {
-    val budget = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    budget > 0 &&
-      BigInt(rows) * EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output) <= budget
+  /** Whether relations of the given row counts fit the broadcast budget
+    * together (Σ rows × planner row size). */
+  def fits(parts: (DataFrame, Long)*): Boolean = {
+    val budget = parts.head._1.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    budget > 0 && parts.map { case (df, rows) =>
+      BigInt(rows) * EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+    }.sum <= budget
   }
 }

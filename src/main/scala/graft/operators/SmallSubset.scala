@@ -1,0 +1,209 @@
+package graft.operators
+
+import graft.{Fk, FkGraph}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{coalesce, col, lit, xxhash64}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+/** Steps 1–6 of [[Subsetter.subset]] — seed, parent closure, bounded
+  * child pull, re-closure and completeness top-up — on the driver, for
+  * sources whose key columns fit the broadcast budget.
+  *
+  * The distributed rounds pay several Spark jobs per closure wave, pull
+  * and top-up round (~60 on a four-table live database) for key sets of
+  * a few thousand rows. Here ONE collect job per table, all concurrent,
+  * brings back the key projection: the PK columns, `xxhash64(pk)`, a
+  * "pinned" flag (forced, or already in the destination in delta mode)
+  * and every out-FK cast to its parent's PK type. Spark computes all of
+  * them, so the driver takes the distributed path's decisions without
+  * re-implementing hashing, `isin` coercion, casts or join matching.
+  * What is left is a worklist fixpoint over hash sets and two orders:
+  * Spark's ascending PK order (strings in binary UTF-8 order) for the
+  * child pull, and `(pmod(h, 1000003), pk)` for the top-up.
+  *
+  * The gate is [[SmallGraph.fits]]: Σ rows × planner row size of the key
+  * projections ≤ `spark.sql.autoBroadcastJoinThreshold` (≤ 0 turns the
+  * driver side off). The distributed rounds also run for key types whose
+  * Row values do not compare like Spark's (anything but integral,
+  * binary-collated string, decimal, date and timestamp), for an FK that
+  * does not name its parent's PK columns in order or whose type is not
+  * the parent's (an integral widening is fine), and for a null PK value,
+  * seen only after the collect.
+  *
+  * Two differences from the distributed rounds, both where those rounds
+  * fall short of their own postcondition: a cyclic closure runs to its
+  * fixpoint (the distributed one stops after 50 rounds), and a pulled
+  * child key demands the parents of every row with that key (the
+  * distributed pull demands the pulled row's only — the same on a unique
+  * PK; on a non-unique PK its sibling rows, also written, could orphan).
+  */
+private[operators] object SmallSubset {
+
+  private type Key = IndexedSeq[Any]
+
+  /** One source row's key projection; `fks(i)` is the FK value of the
+    * table's i-th out-edge in parent-PK type, null when any column is. */
+  private final case class Rec(pk: Key, h: Long, pinned: Boolean, fks: Array[Key])
+
+  private def isIntegral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  private def keyType(dt: DataType): Boolean = dt match {
+    case s: StringType => s == StringType // the binary (UTF8_BINARY) collation
+    case _: DecimalType | DateType | TimestampType => true
+    case _ => isIntegral(dt)
+  }
+
+  /** Spark's ascending order on non-null values of the key types. */
+  private val pkOrder: Ordering[Key] = new Ordering[Key] {
+    def compare(a: Key, b: Key): Int = {
+      var i = 0
+      var c = 0
+      while (c == 0 && i < a.size) {
+        c = (a(i), b(i)) match {
+          case (x: String, y: String) =>
+            UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+          case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+        }
+        i += 1
+      }
+      c
+    }
+  }
+
+  /** The key sets of `plan.domain` as local relations, or None when the
+    * run is out of the driver side's scope (see the object doc). */
+  def keySets(tables: Map[String, DataFrame], graph: FkGraph, cfg: Subsetter.Config,
+              plan: Subsetter.Plan, existing: Map[String, DataFrame],
+              rowsOf: String => Long): Option[Map[String, DataFrame]] = {
+    // out-edges to a source table: the only ones closure and pull walk
+    val out: Map[String, IndexedSeq[Fk]] = plan.domain.map(t => t ->
+      graph.fks.filter(fk => fk.childTable == t && tables.contains(fk.parentTable))
+        .toIndexedSeq).toMap
+    def typeOf(t: String, c: String): DataType = tables(t).schema(c).dataType
+    val inScope = plan.domain.nonEmpty && plan.domain.forall { t =>
+      graph.pks(t).forall(c => keyType(typeOf(t, c))) && out(t).forall { fk =>
+        fk.parentCols == graph.pks(fk.parentTable) &&
+          fk.childCols.zip(fk.parentCols).forall { case (c, p) =>
+            val (ct, pt) = (typeOf(t, c), typeOf(fk.parentTable, p))
+            ct == pt || (isIntegral(ct) && isIntegral(pt) && ct.defaultSize <= pt.defaultSize)
+          }
+      }
+    }
+    if (!inScope) return None
+
+    val proj: Seq[(String, DataFrame)] = plan.domain.map { t =>
+      val pk = graph.pks(t)
+      // delta mode: dest membership by the same USING join the
+      // distributed seed's semi-join does
+      val dest = if (plan.delta && plan.included.contains(t)) existing.get(t) else None
+      val src = dest.fold(tables(t))(e => tables(t).join(
+        e.select(pk.map(col): _*).distinct().withColumn("__in_dest", lit(true)),
+        pk, "left_outer"))
+      val pinned = (plan.forced.get(t).flatten.toSeq ++ dest.map(_ => col("__in_dest")))
+        .map(coalesce(_, lit(false))).reduceOption(_ || _).getOrElse(lit(false))
+      val fkCols = out(t).flatMap(fk => fk.childCols.zip(fk.parentCols).map { case (c, p) =>
+        col(c).cast(typeOf(fk.parentTable, p)) })
+      t -> src.select((pk.map(col) ++ Seq(xxhash64(pk.map(col): _*), pinned) ++ fkCols): _*)
+    }
+    if (!SmallGraph.fits(proj.map { case (t, df) => df -> rowsOf(t) }: _*)) return None
+
+    val collected = {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.sequence(proj.map { case (t, df) => Future(t -> df.collect()) }),
+        Duration.Inf).toMap
+    }
+    val recs: Map[String, Array[Rec]] = collected.map { case (t, rows) =>
+      val n = graph.pks(t).size
+      t -> rows.map { r =>
+        var at = n + 2
+        val fks = out(t).map { fk =>
+          val v = (at until at + fk.childCols.size).map(r.get)
+          at += fk.childCols.size
+          if (v.contains(null)) null else v
+        }.toArray
+        Rec((0 until n).map(r.get), r.getLong(n), r.getBoolean(n + 1), fks)
+      }
+    }
+    if (recs.valuesIterator.exists(_.exists(_.pk.contains(null)))) return None
+
+    val keys = plan.domain.map(_ -> mutable.HashSet.empty[Key]).toMap
+    val rowsByPk = recs.map { case (t, rs) => t -> rs.groupBy(_.pk) }
+    val work = mutable.Queue.empty[(String, Key)]
+    def add(t: String, k: Key, expand: Boolean): Unit =
+      if (keys(t).add(k) && expand) work.enqueue(t -> k)
+    // every row with key k demands the parents its non-null FKs name
+    def demand(t: String, k: Key): Unit =
+      for (r <- rowsByPk(t).getOrElse(k, Array.empty[Rec]); i <- out(t).indices
+           if r.fks(i) != null)
+        add(out(t)(i).parentTable, r.fks(i), expand = true)
+    def close(): Unit = while (work.nonEmpty) { val (t, k) = work.dequeue(); demand(t, k) }
+
+    // 1–3. seed (hash sample at the biased target, or the dest rows in
+    // delta mode, plus pinned rows), then close
+    for (t <- plan.included) {
+      val sampled: Rec => Boolean =
+        if (plan.delta) _ => false
+        else Subsetter.seedCut(plan.targets(t), plan.sourceN(t)) match {
+          case None      => _ => true
+          case Some(cut) => r => Math.floorMod(r.h, Subsetter.SampleMod) < cut
+        }
+      for (r <- recs(t) if r.pinned || sampled(r)) add(t, r.pk, expand = !plan.seedsClosed)
+    }
+    close()
+
+    // 4–5. per FK group the first `children` child rows in PK order,
+    // matched against the key sets as they stood before the pull
+    for (_ <- 1 to cfg.childRounds) {
+      val pulled = plan.included.map { ct =>
+        ct -> out(ct).indices.flatMap { i =>
+          val parentKeys = keys(out(ct)(i).parentTable)
+          recs(ct).filter(r => r.fks(i) != null && parentKeys(r.fks(i)))
+            .groupBy(_.fks(i)).valuesIterator
+            .flatMap(_.sortBy(_.pk)(pkOrder).take(cfg.children).map(_.pk))
+        }.distinct
+      }
+      pulled.foreach { case (ct, ks) => ks.foreach(add(ct, _, expand = false)) }
+      pulled.foreach { case (ct, ks) => ks.foreach(demand(ct, _)) }
+      close()
+    }
+
+    // 6. top-up: each shortfall from the not-yet-kept keys in
+    // (pmod(h, 1000003), pk) order, until complete or exhausted
+    val topUpOrder = mutable.Map.empty[String, Array[Key]]
+    def candidates(t: String): Array[Key] = topUpOrder.getOrElseUpdate(t,
+      recs(t).map(r => (Math.floorMod(r.h, Subsetter.TopUpMod), r.pk)).distinct
+        .sorted(Ordering.Tuple2(Ordering.Long, pkOrder)).map(_._2))
+    var exhausted = Set.empty[String]
+    def measure(): Map[String, Long] = plan.included.filterNot(exhausted)
+      .map(t => t -> (plan.targets(t) - keys(t).size)).filter(_._2 > 0L).toMap
+    var shortfalls = measure()
+    var round = 0
+    while (shortfalls.nonEmpty && (cfg.topUpRounds < 0 || round < cfg.topUpRounds)) {
+      round += 1
+      val adds = shortfalls.map { case (t, gap) =>
+        t -> candidates(t).iterator.filterNot(keys(t))
+          .take(math.min(gap, Int.MaxValue.toLong).toInt).toVector
+      }
+      for ((t, extra) <- adds) {
+        if (extra.size < shortfalls(t)) exhausted += t // source can't fill the gap
+        extra.foreach(add(t, _, expand = true))
+      }
+      if (adds.valuesIterator.forall(_.isEmpty)) shortfalls = Map.empty
+      else { close(); shortfalls = measure() }
+    }
+
+    val spark = tables(plan.domain.head).sparkSession
+    Some(plan.domain.map { t =>
+      val schema = StructType(graph.pks(t).map(c => tables(t).schema(c)))
+      t -> spark.createDataFrame(keys(t).iterator.map(Row.fromSeq).toSeq.asJava, schema)
+    }.toMap)
+  }
+}

@@ -23,16 +23,23 @@ import org.apache.spark.sql.functions._
   *   4. pull at most `children` child rows per inserted parent row
   *      (windowed top-k — `create_row_in` step 4);
   *   5. close parents once more (children may reference new parents);
-  *   6. materialize each table by semi-join against its key set.
+  *   6. top up every table still short of its target, and re-close;
+  *   7. materialize each table by semi-join against its key set.
   *
   * The output satisfies the reference's postcondition: zero orphaned
   * foreign keys ([[validateRI]]).
   *
-  * Scale: key sets are `DataFrame`s end-to-end — nothing collects to the
-  * driver; the only driver-side state is per-table row *counts*. Each
-  * fixpoint pass is a handful of semi-joins whose small side (the key
-  * set) AQE broadcast-joins when it fits; `localCheckpoint` truncates
-  * lineage so cyclic graphs cannot blow up the plan.
+  * Scale: a size gate picks where steps 1–6 run. When the
+  * key columns of every table (PK, out-FKs, a hash and a flag) fit
+  * `spark.sql.autoBroadcastJoinThreshold`, [[SmallSubset]] collects them
+  * in one job per table and finishes the fixpoints on the driver.
+  * Above it the key sets stay `DataFrame`s end-to-end and nothing
+  * collects to the driver: each fixpoint pass is a handful of
+  * semi-joins whose small side (the key set) AQE broadcast-joins when it
+  * fits, and `localCheckpoint` truncates lineage so cyclic graphs cannot
+  * blow up the plan. Step 7 is shared: each table's rows come from a
+  * semi-join of the source against its key set, so wide payload columns
+  * never reach the driver.
   */
 object Subsetter {
 
@@ -100,22 +107,28 @@ object Subsetter {
   def modSample(df: DataFrame, keyCol: String, m: Long): DataFrame =
     df.filter(col(keyCol) % m === 0)
 
-  /** Deterministic pseudo-random sample of ~`target` rows out of `n`
-    * (binomial, not exact — [[subset]] step 6 tops tables up to exact
-    * targets): keep rows whose 64-bit key hash falls under the target
-    * fraction. No global sort and no limit — O(scan) at any scale.
-    * Engine-internal (`xxhash64` never reaches an oracle query).
-    * `pmod`, not `abs` (abs(Long.MinValue) is negative — a 1-in-2⁶⁴
-    * row-drop anomaly); the modulus quantizes the kept fraction to
-    * 1e-6 steps, which the ceil biases to "at least". */
-  def hashSample(df: DataFrame, pkCols: Seq[String], target: Long, n: Long): DataFrame = {
-    if (n <= 0L || target >= n) df
+  /** Modulus of the up-front hash sample and of the top-up order. */
+  private[operators] val SampleMod = 1000000L
+  private[operators] val TopUpMod = 1000003L
+
+  /** The up-front sample of [[subset]]: a deterministic pseudo-random
+    * sample of a table of `n` rows keeps the rows with
+    * `pmod(xxhash64(pk), SampleMod) < cut` (None keeps every row). No
+    * global sort and no limit — O(scan) at any scale. Engine-internal
+    * (`xxhash64` never reaches an oracle query). `pmod`, not `abs`
+    * (abs(Long.MinValue) is negative — a 1-in-2⁶⁴ row-drop anomaly); the
+    * modulus quantizes the kept fraction to 1e-6 steps, which the ceil
+    * biases to "at least". The sample is binomial, and biased ~3σ UNDER
+    * `target`: an undershoot is exactly what the top-up (step 6)
+    * repairs — to an exact count — while an overshoot can never be
+    * trimmed (a sampled key may be closure-demanded). Net effect: tables
+    * land ON target, not merely near it. */
+  private[operators] def seedCut(target: Long, n: Long): Option[Long] =
+    if (target >= n) None
     else {
-      val frac = target.toDouble / n.toDouble
-      val h = pmod(xxhash64(pkCols.map(col): _*), lit(1000000L))
-      df.filter(h < lit(math.ceil(frac * 1000000L).toLong))
+      val biased = math.max(1L, target - 3L * math.ceil(math.sqrt(target.toDouble)).toLong)
+      Some(math.ceil(biased.toDouble / n.toDouble * SampleMod).toLong)
     }
-  }
 
   /** The reference's ACTUAL sampling semantic — `ORDER BY random()
     * LIMIT k` (`rdbms_subsetter.py :: _random_rows`, ≈L20) — offered
@@ -123,7 +136,7 @@ object Subsetter {
     * A seeded `rand(seed)` keeps a run reproducible; pass a fresh seed
     * per run for the upstream's fresh-randomness behavior. NOT
     * oracle-eligible (SURVEY §7 bans rand() in oracle queries) and not
-    * used by subset closure — [[hashSample]] stays the engine default.
+    * used by subset closure — [[seedCut]]'s hash sample stays the engine default.
     * Scale shape: rand is a scan-local projection and the sort+limit
     * compiles to TakeOrderedAndProject (per-partition top-k heaps +
     * driver merge of k rows), never a global sort. */
@@ -491,12 +504,21 @@ object Subsetter {
     }
   }
 
-  /** Run the whole subsetting pipeline; returns table -> subset rows.
-    * Guarantees the reference's referential-integrity postcondition,
-    * and (step 6) the reference's completeness guarantee: every table
-    * reaches its target count exactly whenever enough source rows
-    * exist — hash sampling alone lands near the target only in
-    * expectation. */
+  /** What both sides of the size gate start from. `domain` is every
+    * table a key set can reach: the included tables plus each parent in
+    * `tables` reachable over FK edges (an excluded parent still receives
+    * the keys its children demand). `delta` marks a run against a
+    * non-empty destination, `seedsClosed` one whose destination the
+    * caller vouches is already referentially closed. */
+  private[operators] final case class Plan(
+      included: Seq[String],
+      domain: Seq[String],
+      sourceN: Map[String, Long],
+      targets: Map[String, Long],
+      forced: Map[String, Option[Column]],
+      delta: Boolean,
+      seedsClosed: Boolean)
+
   /** Second-run semantics of the reference — rdbms-subsetter pointed at
     * a NON-EMPTY destination (its insert-dedup path, §2a row 9, in its
     * real habitat): rows already in dest are kept, count toward
@@ -512,33 +534,66 @@ object Subsetter {
       cfg: Config,
       dest: Map[String, DataFrame],
       rowCounts: Map[String, Long] = Map.empty,
-      assumeDestClosed: Boolean = true): Map[String, DataFrame] = {
-    val destKeys = dest.map { case (t, df) =>
-      t -> df.select(graph.pks(t).map(col): _*).distinct()
-    }
-    subset(tables, graph, cfg, rowCounts, existing = destKeys,
-      existingClosed = assumeDestClosed)
-  }
+      assumeDestClosed: Boolean = true): Map[String, DataFrame] =
+    subsetGated(tables, graph, cfg, rowCounts, destKeys(graph, dest), assumeDestClosed)._1
 
+  /** Distinct PK tuples of each destination table — the `existing` key
+    * sets of a delta run. */
+  private[graft] def destKeys(graph: FkGraph,
+                              dest: Map[String, DataFrame]): Map[String, DataFrame] =
+    dest.map { case (t, df) => t -> df.select(graph.pks(t).map(col): _*).distinct() }
+
+  /** Run the whole subsetting pipeline; returns table -> subset rows.
+    * Guarantees the reference's referential-integrity postcondition,
+    * and (step 6) the reference's completeness guarantee: every table
+    * reaches its target count exactly whenever enough source rows
+    * exist — hash sampling alone lands near the target only in
+    * expectation. */
   def subset(
       tables: Map[String, DataFrame],
       graph: FkGraph,
       cfg: Config,
       rowCounts: Map[String, Long] = Map.empty,
       existing: Map[String, DataFrame] = Map.empty,
-      existingClosed: Boolean = false): Map[String, DataFrame] = {
+      existingClosed: Boolean = false): Map[String, DataFrame] =
+    subsetGated(tables, graph, cfg, rowCounts, existing, existingClosed)._1
 
-    // dev profiling: GRAFT_SUBSET_TIMING=1 prints per-phase wall times
-    val timing = sys.env.get("GRAFT_SUBSET_TIMING").contains("1")
-    var t0 = System.nanoTime()
-    def phase(name: String): Unit = if (timing) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[subset] $name%-18s ${(t1 - t0) / 1e9}%6.2f s")
-      t0 = t1
+  /** [[subset]], also reporting whether the driver computed the key sets. */
+  private[graft] def subsetGated(
+      tables: Map[String, DataFrame],
+      graph: FkGraph,
+      cfg: Config,
+      rowCounts: Map[String, Long],
+      existing: Map[String, DataFrame],
+      existingClosed: Boolean): (Map[String, DataFrame], Boolean) = {
+    val (keys, onDriver) = keySets(tables, graph, cfg, rowCounts, existing, existingClosed)
+    // 7. materialize rows (delta mode: only rows NOT already in dest)
+    val rows = keys.map { case (t, k) =>
+      val kept = tables(t).join(k, graph.pks(t), "left_semi")
+      t -> existing.get(t).fold(kept)(e => kept.join(e, graph.pks(t), "left_anti"))
     }
+    (rows, onDriver)
+  }
 
+  /** Steps 1–6: the PK key set of every table in the domain, and whether
+    * the driver computed them ([[SmallSubset]], when the key columns fit
+    * the broadcast budget) instead of the distributed rounds. */
+  private[graft] def keySets(
+      tables: Map[String, DataFrame],
+      graph: FkGraph,
+      cfg: Config,
+      rowCounts: Map[String, Long] = Map.empty,
+      existing: Map[String, DataFrame] = Map.empty,
+      existingClosed: Boolean = false): (Map[String, DataFrame], Boolean) = {
     val included = tables.keys.toSeq.sorted
       .filterNot(t => globMatch(cfg.excludeTables, t))
+    // a forced row in a table outside the run (a typo, or an excluded
+    // table) would be dropped silently — refuse it, like forcedPredicate
+    // refuses single values on a composite PK
+    val stray = (cfg.force.keySet ++ cfg.forceComposite.keySet).filterNot(included.contains)
+    require(stray.isEmpty,
+      s"--force ${stray.toSeq.sorted.mkString(",")}: not an included table " +
+        s"(included: ${included.mkString(",")})")
 
     // Row counts come from parquet footers when the caller has them
     // (metadata-only — no job); df.count() is the fallback.
@@ -548,57 +603,62 @@ object Subsetter {
       val full = globMatch(cfg.fullTables, t)
       t -> targetSize(sourceN(t), cfg.fraction, cfg.logarithmic, full)
     }.toMap
+    val domain = scala.collection.mutable.SortedSet(included: _*)
+    var grew = true
+    while (grew) {
+      grew = false
+      for (fk <- graph.fks if domain(fk.childTable) && tables.contains(fk.parentTable))
+        grew |= domain.add(fk.parentTable)
+    }
+    // When the caller vouches that `existing` is already referentially
+    // closed (subsetDelta's default — the reference's second run likewise
+    // assumes dest validity and just inserts), the initial closure is a
+    // no-op by construction. Everything ADDED later (child pull, top-up)
+    // still re-closes incrementally. Forced rows would re-open the
+    // closure question, so this requires no forcing.
+    val plan = Plan(included, domain.toSeq, sourceN, targets,
+      included.map(t => t -> forcedPredicate(cfg, t, graph.pks(t))).toMap,
+      delta = existing.nonEmpty,
+      seedsClosed = existing.nonEmpty && existingClosed &&
+        cfg.force.isEmpty && cfg.forceComposite.isEmpty)
+    val rowsOf = (t: String) => sourceN.getOrElse(t, rowCounts.getOrElse(t, tables(t).count()))
+    SmallSubset.keySets(tables, graph, cfg, plan, existing, rowsOf) match {
+      case Some(keys) => (keys, true)
+      case None       => (distributedKeys(tables, graph, cfg, plan, existing), false)
+    }
+  }
+
+  /** Steps 1–6 as distributed semi-join rounds — the path at any scale. */
+  private def distributedKeys(
+      tables: Map[String, DataFrame],
+      graph: FkGraph,
+      cfg: Config,
+      plan: Plan,
+      existing: Map[String, DataFrame]): Map[String, DataFrame] = {
+    val included = plan.included
 
     // 1–2. seed: per-table deterministic sample at target size + forced rows
     val seeds: Map[String, DataFrame] = included.map { t =>
       val df = tables(t)
-      val n = sourceN(t)
-      val tgt = targets(t)
       val pkCols = graph.pks(t)
-      val forced = forcedPredicate(cfg, t, pkCols)
-      val sampled =
-        if (existing.nonEmpty) {
+      def withForced(s: DataFrame): DataFrame =
+        plan.forced(t).fold(s)(pred => s.union(df.filter(pred)))
+      t -> (
+        if (plan.delta)
           // delta mode: dest rows ARE the seed; the top-up loop fills
           // each table's shortfall exactly (same law either way), so a
           // fresh up-front sample would only double-pull
-          val kept = existing.get(t) match {
-            case Some(k) => df.join(k, pkCols, "left_semi")
-            case None    => df.filter(lit(false))
-          }
-          forced match {
-            case Some(pred) => kept.union(df.filter(pred))
-            case None       => kept
-          }
-        } else if (tgt >= n) df
-        else {
-          // Bias the binomial sample ~3σ UNDER target: an undershoot is
-          // exactly what the top-up (step 6) repairs — to an exact
-          // count — while an overshoot can never be trimmed (a sampled
-          // key may be closure-demanded). Net effect: tables land ON
-          // target, not merely near it.
-          val biased = math.max(1L, tgt - 3L * math.ceil(math.sqrt(tgt.toDouble)).toLong)
-          val s = hashSample(df, pkCols, biased, n)
-          forced match {
-            case Some(pred) => s.union(df.filter(pred))
-            case None       => s
-          }
-        }
-      t -> sampled
+          withForced(existing.get(t).fold(df.filter(lit(false)))(
+            k => df.join(k, pkCols, "left_semi")))
+        else seedCut(plan.targets(t), plan.sourceN(t)).fold(df)(cut =>
+          withForced(df.filter(
+            pmod(xxhash64(pkCols.map(col): _*), lit(SampleMod)) < lit(cut)))))
     }.toMap
 
-    phase("seed")
-    // 3. parent closure to fixpoint. When the caller vouches that
-    // `existing` is already referentially closed (subsetDelta's default
-    // — the reference's second run likewise assumes dest validity and
-    // just inserts), the initial closure is a no-op by construction:
-    // every wave-0 demand would anti-join to empty. Skip straight to
-    // the existing key sets; everything ADDED later (child pull,
-    // top-up) still re-closes incrementally.
+    // 3. parent closure to fixpoint, or straight to the seed keys when
+    // they are vouched closed
     var keys =
-      if (existing.nonEmpty && existingClosed &&
-          cfg.force.isEmpty && cfg.forceComposite.isEmpty) {
-        // (forced rows would re-open the closure question, so the fast
-        // path requires no forcing)
+      if (plan.seedsClosed) {
         val k = seeds.map { case (t, rows) =>
           t -> rows.select(graph.pks(t).map(col): _*).distinct()
             .localCheckpoint(false)
@@ -609,7 +669,6 @@ object Subsetter {
           k.values.map(_.select(lit(1).as("__m"))).reduce(_ union _).count()
         k
       } else parentClosure(tables, graph, seeds)
-    phase("closure")
 
     // 4–5. bounded child pull, then re-close parents (children may
     // demand parents not yet in the subset) — `childRounds` controls how
@@ -702,7 +761,6 @@ object Subsetter {
       keys = closureFrom(tables, graph, keys, deltas.toMap,
         materialize = pullRound < cfg.childRounds)
     }
-    phase("child-pull")
 
     // 6. completeness top-up — the reference's create_subset_in main
     // loop keeps pulling rows for the least-complete table until every
@@ -731,11 +789,10 @@ object Subsetter {
         else tagged.reduce(_ union _)
           .groupBy("__t").agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      pending.map(t => t -> math.max(0L, targets(t) - have.getOrElse(t, 0L)))
+      pending.map(t => t -> math.max(0L, plan.targets(t) - have.getOrElse(t, 0L)))
         .filter(_._2 > 0L).toMap
     }
     shortfalls = measure()
-    phase("measure-0")
     // topUpRounds < 0 = the reference's until-complete semantics: loop
     // while progress is possible (each round either fills a gap or
     // marks its source exhausted, so termination is guaranteed).
@@ -751,7 +808,7 @@ object Subsetter {
           }
           val extra = remaining
             .select(pk.map(col): _*).distinct()
-            .orderBy(pmod(xxhash64(pk.map(col): _*), lit(1000003L)) +: pk.map(col): _*)
+            .orderBy(pmod(xxhash64(pk.map(col): _*), lit(TopUpMod)) +: pk.map(col): _*)
             .limit(math.min(gap, Int.MaxValue.toLong).toInt)
             .localCheckpoint(false)
           (t, extra, extra.count())
@@ -770,17 +827,10 @@ object Subsetter {
         keys = closureFrom(tables, graph, keys, deltas, materialize = false)
         shortfalls = measure()
       }
-      phase(s"topup-$round")
     }
-
-    // 7. materialize rows (delta mode: only rows NOT already in dest)
-    keys.collect { case (t, k) if tables.contains(t) =>
-      val rows = tables(t).join(k, graph.pks(t), "left_semi")
-      t -> (existing.get(t) match {
-        case Some(e) => rows.join(e, graph.pks(t), "left_anti")
-        case None    => rows
-      })
-    }
+    // every domain table gets a key set, empty where nothing reached it
+    plan.domain.map(t => t -> keys.getOrElse(t,
+      tables(t).select(graph.pks(t).map(col): _*).filter(lit(false)))).toMap
   }
 
   // ---------------------------------------------------------------------

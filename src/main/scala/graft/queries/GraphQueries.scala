@@ -282,7 +282,7 @@ object GraphQueries {
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("w")))
     val out =
-      if (und.schema("a").dataType == StringType && graft.operators.SmallGraph.fits(und, rows))
+      if (und.schema("a").dataType == StringType && graft.operators.SmallGraph.fits(und -> rows))
         labelPropOnDriver(und.sparkSession, und.collect(), maxIters, stopAtFixpoint)
       else labelPropDistributed(und, maxIters, stopAtFixpoint)
     graft.plans.Checkpoints.unpersist(und)

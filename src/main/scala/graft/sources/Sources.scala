@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.StructType
   * "Scans / sources" + "Sinks". The reference reads/writes any
   * SQLAlchemy-reachable DBMS; here every format is a declarative
   * DataFrame reader/writer, so pushdown/pruning and parallel IO come
-  * from the planner. `jdbc` is exposed for real-DB parity (untestable in
-  * this container — no database — but the call shape is the public
-  * Spark API and needs no custom code).
+  * from the planner. `jdbc` is exposed for real-DB parity; JdbcRoundTripSpec
+  * and SubsetReflectPropertySpec drive it end to end against embedded
+  * Apache Derby.
   */
 object Sources {
 
@@ -65,8 +65,8 @@ object Sources {
                wholeFile: Boolean = false): DataFrame =
     spark.read.option("wholetext", wholeFile.toString).text(path)
 
-  /** JDBC passthrough — partitioned reads via (column, bounds,
-    * numPartitions) keep a real-DB scan parallel. Exercised end-to-end
+  /** JDBC passthrough: reads the whole table in ONE task (no partition
+    * column, bounds or numPartitions are passed). Exercised end-to-end
     * against embedded Derby in JdbcRoundTripSpec. */
   def readJdbc(spark: SparkSession, url: String, table: String,
                props: java.util.Properties): DataFrame =

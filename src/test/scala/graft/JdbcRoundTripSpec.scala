@@ -26,7 +26,7 @@ class JdbcRoundTripSpec extends SparkSpecBase {
       Fk("nation", Seq("n_regionkey"), "region", Seq("r_regionkey")),
       Fk("customer", Seq("c_nationkey"), "nation", Seq("n_nationkey"))))
 
-  test("JDBC round-trip: parquet -> Derby -> subset over JDBC -> Derby -> RI") {
+  bothGateSides("JDBC round-trip: parquet -> Derby -> subset over JDBC -> Derby -> RI") {
     val src = "/root/testdata/sf0.001"
     val tables = Seq("region", "nation", "customer")
 
@@ -60,9 +60,13 @@ class JdbcRoundTripSpec extends SparkSpecBase {
     assert(orphans.forall(_ == 0L))
   }
 
-  test("catalog reflection: subset a live Derby DB end-to-end with ZERO declared edges") {
-    val srcUrl = "jdbc:derby:memory:graftsrc;create=true"
-    val dstUrl = "jdbc:derby:memory:graftdst;create=true"
+  // each run of the case below creates its schema in fresh databases
+  private val reflectRuns = new java.util.concurrent.atomic.AtomicInteger()
+
+  bothGateSides("catalog reflection: subset a live Derby DB end-to-end with ZERO declared edges") {
+    val run = reflectRuns.incrementAndGet()
+    val srcUrl = s"jdbc:derby:memory:graftsrc$run;create=true"
+    val dstUrl = s"jdbc:derby:memory:graftdst$run;create=true"
     // real DDL with enforced PK/FK constraints — the catalog facts the
     // reference reflects with SQLAlchemy and we reflect with
     // java.sql.DatabaseMetaData

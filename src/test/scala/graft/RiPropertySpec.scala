@@ -43,7 +43,7 @@ class RiPropertySpec extends SparkSpecBase {
     Map("g" -> g, "m" -> m, "l" -> l)
   }
 
-  test("subset preserves RI, forced rows, and min-1 on random populations") {
+  bothGateSides("subset preserves RI, forced rows, and min-1 on random populations") {
     val prop = Prop.forAll(popGen) { p =>
       val tables = build(p)
       val out = Subsetter.subset(tables, graph,

@@ -120,7 +120,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(picked == Set((1L, 1), (1L, 2), (1L, 3))) // first 3 by PK, order 2 absent
   }
 
-  test("subset: output satisfies the RI postcondition (zero orphans)") {
+  bothGateSides("subset: output satisfies the RI postcondition (zero orphans)") {
     val (tables, graph) = tinyGraph
     val out = Subsetter.subset(tables, graph, Subsetter.Config(fraction = 0.5))
     val orphans = Subsetter.validateRI(out, graph)
@@ -130,7 +130,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(out("leaf").count() >= 1 && out("mid").count() >= 1 && out("grand").count() >= 1)
   }
 
-  test("subsetDelta: second run into a non-empty dest inserts only the referentially-closed gap") {
+  bothGateSides("subsetDelta: second run into a non-empty dest inserts only the referentially-closed gap") {
     val (tables, graph) = tinyGraph
     val dest = Subsetter.subset(tables, graph, Subsetter.Config(fraction = 0.4))
       .map { case (t, df) => t -> df.localCheckpoint() } // freeze the first run
@@ -150,7 +150,7 @@ class SubsetterSpec extends SparkSpecBase {
       assert(merged(t).count() == tables(t).count(), s"$t not grown to target")
   }
 
-  test("subsetDelta: already-at-target dest yields an empty delta") {
+  bothGateSides("subsetDelta: already-at-target dest yields an empty delta") {
     val (tables, graph) = tinyGraph
     val dest = tables // dest == full source
     val delta = Subsetter.subsetDelta(tables, graph,
@@ -191,7 +191,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(r == 1L) // only "XX" is orphaned; a long-cast would orphan all 3
   }
 
-  test("subset + validateRI: string-keyed graph end to end") {
+  bothGateSides("subset + validateRI: string-keyed graph end to end") {
     val parent = ('a' to 'z').map(c => (c.toString, s"p$c")).toDF("code", "pname")
     val child = (1L to 52L).map(i => (i, ('a' + ((i - 1) % 26).toInt).toChar.toString))
       .toDF("cid", "code")
@@ -205,13 +205,24 @@ class SubsetterSpec extends SparkSpecBase {
     assert(orphans.forall(_ == 0L))
   }
 
-  test("subset: forced rows are present with their parent closure") {
+  bothGateSides("subset: forced rows are present with their parent closure") {
     val (tables, graph) = tinyGraph
     val out = Subsetter.subset(tables, graph,
       Subsetter.Config(fraction = 0.34, force = Map("leaf" -> Seq(102L))))
     assert(out("leaf").filter($"lid" === 102L).count() == 1)
     assert(out("mid").filter($"mid" === 11L).count() == 1)   // 102's parent
     assert(out("grand").filter($"gid" === 2L).count() == 1)  // grandparent
+  }
+
+  test("subset: --force naming a table outside the run fails loudly") {
+    val (tables, graph) = tinyGraph
+    for (cfg <- Seq(
+           Subsetter.Config(fraction = 0.5, force = Map("lef" -> Seq(100L))), // typo
+           Subsetter.Config(fraction = 0.5, excludeTables = Seq("leaf"),
+             forceComposite = Map("leaf" -> Seq(Seq(100L)))))) {          // excluded
+      val e = intercept[IllegalArgumentException](Subsetter.subset(tables, graph, cfg))
+      assert(e.getMessage.contains("not an included table"))
+    }
   }
 
   // --- composite-PK force ----------------------------------------------
@@ -226,7 +237,7 @@ class SubsetterSpec extends SparkSpecBase {
     (Map("orders" -> orders, "lines" -> lines), graph)
   }
 
-  test("subset: composite-PK forced tuples survive with their parent closure") {
+  bothGateSides("subset: composite-PK forced tuples survive with their parent closure") {
     val (tables, graph) = compositeGraph
     val out = Subsetter.subset(tables, graph,
       Subsetter.Config(fraction = 0.1, children = 0,
@@ -237,7 +248,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(orphans.forall(_ == 0L))
   }
 
-  test("subset: single-column --force on a composite-PK table fails loudly") {
+  bothGateSides("subset: single-column --force on a composite-PK table fails loudly") {
     val (tables, graph) = compositeGraph
     val e = intercept[IllegalArgumentException] {
       Subsetter.subset(tables, graph,
@@ -247,7 +258,7 @@ class SubsetterSpec extends SparkSpecBase {
   }
 
   // --- completeness top-up ---------------------------------------------
-  test("subset: completeness top-up hits targets exactly (no-FK tables)") {
+  bothGateSides("subset: completeness top-up hits targets exactly (no-FK tables)") {
     val a = (1L to 100L).map(i => (i, s"a$i")).toDF("aid", "av")
     val b = (1L to 40L).map(i => (i, s"b$i")).toDF("bid", "bv")
     val graph = FkGraph(pks = Map("a" -> Seq("aid"), "b" -> Seq("bid")), fks = Nil)
@@ -257,7 +268,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(out("b").count() == 12) // ceil(40*0.3)
   }
 
-  test("subset: top-up re-closes parents; child exact, parent at-least, RI holds") {
+  bothGateSides("subset: top-up re-closes parents; child exact, parent at-least, RI holds") {
     val parent = (1L to 50L).map(i => (i, s"p$i")).toDF("pid", "pname")
     val child = (1L to 100L).map(i => (i, (i - 1) / 2 + 1)).toDF("cid", "pid")
     val graph = FkGraph(
@@ -271,7 +282,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(orphans.forall(_ == 0L))
   }
 
-  test("subset: top-up stops at source exhaustion (target unreachable)") {
+  bothGateSides("subset: top-up stops at source exhaustion (target unreachable)") {
     // exclude-nothing, but fraction > 1 is capped; instead: tiny table,
     // full-tables glob forces n, while a sibling at fraction 0.5 tops up
     val a = (1L to 7L).map(i => (i, s"a$i")).toDF("aid", "av")
@@ -280,7 +291,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(out("a").count() == 7) // ceil(7*0.99)=7 == n, reached by exhaustion path
   }
 
-  test("subset: topUpRounds = -1 loops until complete where bounded rounds fall short") {
+  bothGateSides("subset: topUpRounds = -1 loops until complete where bounded rounds fall short") {
     // binomial sampling is biased ~3σ under target, so with the top-up
     // disabled (0 rounds) the count falls short of the exact target;
     // until-complete (-1) repairs it to exactly ceil(200*0.3) = 60.
@@ -294,7 +305,7 @@ class SubsetterSpec extends SparkSpecBase {
     assert(full("a").count() == 60)
   }
 
-  test("subset: exclude and full-table globs") {
+  bothGateSides("subset: exclude and full-table globs") {
     val (tables, graph) = tinyGraph
     val out = Subsetter.subset(tables, graph,
       Subsetter.Config(fraction = 0.34, fullTables = Seq("gra*"), excludeTables = Seq("leaf")))
