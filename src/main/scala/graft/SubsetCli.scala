@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Subsetter
+import graft.operators.{ConcurrentJobs, SmallAudit, Subsetter}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -58,16 +58,18 @@ object SubsetCli {
 
   private def isJdbc(path: String): Boolean = path.startsWith("jdbc:")
 
-  /** Driver-side row count over JDBC — the catalog-shaped peek the
-    * plan needs (one COUNT(*) per table; the DB aggregates, nothing
-    * moves). The parquet analogue is [[Sources.footerRowCount]]. */
-  private def jdbcRowCount(url: String, table: String): Long = {
+  /** Driver-side row counts over JDBC — the catalog-shaped peek the
+    * plan needs (one COUNT(*) per table over one connection; the DB
+    * aggregates, nothing moves). The parquet analogue is
+    * [[Sources.footerRowCount]]. */
+  private def jdbcRowCounts(url: String, tables: Seq[String]): Map[String, Long] = {
     val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
+    try tables.map { t =>
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
       rs.next()
-      rs.getLong(1)
-    } finally conn.close()
+      t -> rs.getLong(1)
+    }.toMap
+    finally conn.close()
   }
 
   /** Unquoted identifiers come back UPPER-cased from Derby-family
@@ -151,12 +153,13 @@ object SubsetCli {
   def plan(spark: SparkSession, args: CliArgs): Seq[(String, Long, Long)] = {
     val names =
       if (isJdbc(args.src)) sourceGraph(args).tables else Catalog.tableNames.sorted
-    names
-      .filterNot(t => Subsetter.globMatch(args.cfg.excludeTables, t))
+    val included = names.filterNot(t => Subsetter.globMatch(args.cfg.excludeTables, t))
+    val counts =
+      if (isJdbc(args.src)) jdbcRowCounts(args.src, included)
+      else included.map(t => t -> Sources.footerRowCount(spark, s"${args.src}/$t.parquet")).toMap
+    included
       .map { t =>
-        val n =
-          if (isJdbc(args.src)) jdbcRowCount(args.src, t)
-          else Sources.footerRowCount(spark, s"${args.src}/$t.parquet")
+        val n = counts(t)
         val tgt = Subsetter.targetSize(n, args.cfg.fraction, args.cfg.logarithmic,
           full = Subsetter.globMatch(args.cfg.fullTables, t))
         (t, n, tgt)
@@ -173,9 +176,10 @@ object SubsetCli {
     * per table the source, target and written rows (a table written
     * without a plan row — an excluded parent its children needed — has
     * written rows only), the orphan total, and which side of the
-    * subsetter's size gate computed the key sets. */
+    * subsetter's size gate computed the key sets and which side of the
+    * audit's gate counted the orphans. */
   def summaryJson(planned: Seq[(String, Long, Long)], written: Map[String, Long],
-                  orphans: Long, onDriver: Boolean): String = {
+                  orphans: Long, onDriver: Boolean, auditOnDriver: Boolean): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     val rows = root.putArray("tables")
@@ -186,7 +190,9 @@ object SubsetCli {
     (written.keySet -- planned.map(_._1)).toSeq.sorted.foreach { t =>
       rows.addObject().put("table", t).put("written_rows", written(t))
     }
-    root.put("orphans", orphans).put("key_sets", if (onDriver) "driver" else "distributed")
+    def side(driver: Boolean) = if (driver) "driver" else "distributed"
+    root.put("orphans", orphans).put("key_sets", side(onDriver))
+      .put("audit", side(auditOnDriver))
     mapper.writeValueAsString(root)
   }
 
@@ -223,19 +229,15 @@ object SubsetCli {
       .filterNot(t => Subsetter.globMatch(args.cfg.excludeTables, t))
     val tables = names.map(t =>
       t -> lowerCols(Sources.readJdbc(spark, args.src, t, props))).toMap
-    val counts = names.map(t => t -> jdbcRowCount(args.src, t)).toMap
+    val counts = jdbcRowCounts(args.src, names)
     val (out, onDriver) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
       existing = Map.empty, existingClosed = false)
-    (graph.insertionOrder.filter(out.contains).map { t =>
-      val df = out(t)
-      if (isJdbc(args.dest)) {
-        Sources.appendJdbc(df, args.dest, t, props)
-        t -> jdbcRowCount(args.dest, t)
-      } else {
-        Sources.writeParquet(df, s"${args.dest}/$t.parquet")
-        t -> Sources.footerRowCount(spark, s"${args.dest}/$t.parquet")
-      }
-    }.toMap, onDriver)
+    val order = graph.insertionOrder.filter(out.contains)
+    order.foreach { t =>
+      if (isJdbc(args.dest)) Sources.appendJdbc(out(t), args.dest, t, props)
+      else Sources.writeParquet(out(t), s"${args.dest}/$t.parquet")
+    }
+    (destRowCounts(spark, args.dest, order), onDriver)
   }
 
   private def runParquet(spark: SparkSession, args: CliArgs,
@@ -303,8 +305,7 @@ object SubsetCli {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       applyStagedDelta(args.dest)
     }
-    (out.keys.map(t =>
-      t -> Sources.footerRowCount(spark, s"${args.dest}/$t.parquet")).toMap, onDriver)
+    (destRowCounts(spark, args.dest, out.keys.toSeq), onDriver)
   }
 
   private val PendingDirName = "_delta_pending"
@@ -368,31 +369,50 @@ object SubsetCli {
     }
   }
 
+  /** Row counts of destination tables from metadata: parquet footers,
+    * or one JDBC `COUNT(*)` each. */
+  private def destRowCounts(spark: SparkSession, dest: String,
+                            tables: Seq[String]): Map[String, Long] =
+    if (isJdbc(dest)) jdbcRowCounts(dest, tables)
+    else tables.map(t => t -> Sources.footerRowCount(spark, s"$dest/$t.parquet")).toMap
+
   /** Reload the written destination and verify the RI postcondition —
-    * the check the reference's own tests perform on its output. */
+    * the check the reference's own tests perform on its output.
+    * Destination row counts come from metadata (parquet footers, JDBC
+    * `COUNT(*)`), so a destination whose key columns fit the broadcast
+    * budget is audited on the driver ([[SmallAudit]]): one collect job
+    * per table, all concurrent, and a local result. Above the budget
+    * [[Subsetter.validateRI]] runs, over a snapshot of each JDBC table's
+    * key columns. Either way each dest table is read once however many
+    * edges use it. */
   def validateDest(spark: SparkSession, dest: String,
                    writtenTables: Set[String],
-                   graph: FkGraph = FkGraph.default): DataFrame = {
+                   graph: FkGraph = FkGraph.default): DataFrame =
+    auditDest(spark, dest, writtenTables, graph)._1
+
+  /** [[validateDest]], also reporting whether the driver side ran. */
+  private def auditDest(spark: SparkSession, dest: String, writtenTables: Set[String],
+                        graph: FkGraph): (DataFrame, Boolean) = {
     val props = new java.util.Properties()
-    val reloaded: Map[String, DataFrame] =
-      if (!isJdbc(dest))
-        writtenTables.map(t => t -> spark.read.parquet(s"$dest/$t.parquet")).toMap
-      else {
-        // each JDBC table is read ONCE however many edges use it: its key
-        // columns are snapshotted by an eager local checkpoint, one
-        // concurrent job per table, and the audit reads the snapshots
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(writtenTables.toSeq.map { t => Future {
+    val tables = writtenTables.toSeq.sorted
+    val reloaded = tables.map(t => t -> (
+      if (isJdbc(dest)) lowerCols(Sources.readJdbc(spark, dest, t, props))
+      else spark.read.parquet(s"$dest/$t.parquet"))).toMap
+    SmallAudit.orphans(reloaded, graph, destRowCounts(spark, dest, tables)) match {
+      case Some(orphans) => (orphans, true)
+      case None if !isJdbc(dest) => (Subsetter.validateRI(reloaded, graph), false)
+      case None =>
+        // the key columns are snapshotted by an eager local checkpoint,
+        // one concurrent job per table, and the audit reads the snapshots
+        val keyed = ConcurrentJobs.map(spark, tables) { t =>
           val keyCols = graph.fks.flatMap(fk =>
             (if (fk.childTable == t) fk.childCols else Nil) ++
               (if (fk.parentTable == t) fk.parentCols else Nil)).distinct
-          val df = lowerCols(Sources.readJdbc(spark, dest, t, props))
+          val df = reloaded(t)
           t -> (if (keyCols.isEmpty) df else df.select(keyCols.map(df(_)): _*).localCheckpoint())
-        }}), Duration.Inf).toMap
-      }
-    Subsetter.validateRI(reloaded, graph)
+        }.toMap
+        (Subsetter.validateRI(keyed, graph), false)
+    }
   }
 
   def main(argv: Array[String]): Unit = {
@@ -428,11 +448,11 @@ object SubsetCli {
       written.toSeq.sortBy(_._1).foreach { case (t, n) =>
         println(f"$t%-12s $n%10d rows")
       }
-      val orphanTotal = validateDest(spark, args.dest, written.keySet,
-          sourceGraph(args))
-        .agg(org.apache.spark.sql.functions.sum("orphans")).head().getLong(0)
+      val (orphans, auditOnDriver) = auditDest(spark, args.dest, written.keySet,
+        sourceGraph(args))
+      val orphanTotal = orphans.collect().map(_.getLong(1)).sum
       println(s"referential integrity: $orphanTotal orphans")
-      println(summaryJson(planned, written, orphanTotal, onDriver))
+      println(summaryJson(planned, written, orphanTotal, onDriver, auditOnDriver))
       if (orphanTotal != 0L) sys.exit(2)
     } finally spark.stop()
   }

@@ -4,22 +4,26 @@ import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{count, lit}
 
-/** Size gate for iterative graph operators (connected components, label
-  * propagation): pick the execution strategy from the measured size of
-  * the edge relation at run time.
+/** Size gate between a distributed plan and a finish on the driver:
+  * pick the execution strategy from the measured size of the input at
+  * run time. It gates the iterative graph operators (connected
+  * components, label propagation), the subsetter's key sets
+  * ([[SmallSubset]]) and its referential-integrity audit ([[SmallAudit]]).
   *
-  * Every distributed fixpoint round is a handful of Spark jobs, so a
-  * graph of a few hundred edges pays seconds of scheduling for
-  * microseconds of work. The gate materializes the edge relation ONCE
-  * and compares rows × the planner's per-row size estimate against
+  * Every distributed fixpoint round, closure wave or per-edge join is a
+  * handful of Spark jobs, so an input of a few hundred or thousand rows
+  * pays seconds of scheduling for microseconds of work. The gate compares
+  * rows × the planner's per-row size estimate against
   * `spark.sql.autoBroadcastJoinThreshold` — the budget Spark already
   * uses to ship a relation to every task, so a relation under it is by
   * the engine's own standard cheap to hold on the driver. Under it the
-  * caller collects the rows and finishes the fixpoint on the driver;
-  * over it the distributed rounds run from the same materialized edges
-  * (the O(log d)-round path at scale). A threshold ≤ 0 turns the
-  * driver path off. No option of its own: one existing Spark setting
-  * and the input's size decide.
+  * caller collects the rows and finishes on the driver; over it the
+  * distributed plan runs. The graph operators count their edges by
+  * materializing them once ([[materialize]]) and run the distributed
+  * rounds from the same materialized edges; the subsetter and the audit
+  * take row counts from metadata (parquet footers, JDBC `COUNT(*)`). A
+  * threshold ≤ 0 turns the driver side off. No option of its own: one
+  * existing Spark setting and the input's size decide.
   */
 private[graft] object SmallGraph {
 

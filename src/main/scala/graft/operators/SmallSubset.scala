@@ -59,6 +59,12 @@ private[operators] object SmallSubset {
     case _ => isIntegral(dt)
   }
 
+  /** Whether an FK column of type `ct` cast to its parent column's type
+    * `pt` keeps every value, in a key type whose Row values compare like
+    * Spark's: equal types or an integral widening. */
+  private[operators] def castsToKey(ct: DataType, pt: DataType): Boolean = keyType(pt) &&
+    (ct == pt || (isIntegral(ct) && isIntegral(pt) && ct.defaultSize <= pt.defaultSize))
+
   /** Spark's ascending order on non-null values of the key types. */
   private val pkOrder: Ordering[Key] = new Ordering[Key] {
     def compare(a: Key, b: Key): Int = {
@@ -88,11 +94,8 @@ private[operators] object SmallSubset {
     def typeOf(t: String, c: String): DataType = tables(t).schema(c).dataType
     val inScope = plan.domain.nonEmpty && plan.domain.forall { t =>
       graph.pks(t).forall(c => keyType(typeOf(t, c))) && out(t).forall { fk =>
-        fk.parentCols == graph.pks(fk.parentTable) &&
-          fk.childCols.zip(fk.parentCols).forall { case (c, p) =>
-            val (ct, pt) = (typeOf(t, c), typeOf(fk.parentTable, p))
-            ct == pt || (isIntegral(ct) && isIntegral(pt) && ct.defaultSize <= pt.defaultSize)
-          }
+        fk.parentCols == graph.pks(fk.parentTable) && fk.childCols.zip(fk.parentCols)
+          .forall { case (c, p) => castsToKey(typeOf(t, c), typeOf(fk.parentTable, p)) }
       }
     }
     if (!inScope) return None
@@ -113,13 +116,8 @@ private[operators] object SmallSubset {
     }
     if (!SmallGraph.fits(proj.map { case (t, df) => df -> rowsOf(t) }: _*)) return None
 
-    val collected = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(proj.map { case (t, df) => Future(t -> df.collect()) }),
-        Duration.Inf).toMap
-    }
+    val spark = tables(plan.domain.head).sparkSession
+    val collected = ConcurrentJobs.map(spark, proj) { case (t, df) => t -> df.collect() }.toMap
     val recs: Map[String, Array[Rec]] = collected.map { case (t, rows) =>
       val n = graph.pks(t).size
       t -> rows.map { r =>
@@ -200,7 +198,6 @@ private[operators] object SmallSubset {
       else { close(); shortfalls = measure() }
     }
 
-    val spark = tables(plan.domain.head).sparkSession
     Some(plan.domain.map { t =>
       val schema = StructType(graph.pks(t).map(c => tables(t).schema(c)))
       t -> spark.createDataFrame(keys(t).iterator.map(Row.fromSeq).toSeq.asJava, schema)

@@ -283,7 +283,7 @@ object Subsetter {
     def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
     val (edges, acyclic) = orderEdges(graph)
     var keys = existing
-
+    val spark = tables.values.head.sparkSession
 
     // Project the demanded parent keys of one edge out of a (possibly
     // shared) child FK projection. NULL FK values demand no parent (the
@@ -335,52 +335,47 @@ object Subsetter {
       }
 
     // Expand a WAVE of child groups concurrently. All edge work runs as
-    // concurrent Spark jobs (Futures), EXCEPT edges sharing a parent
-    // table: those chain sequentially inside one future (the second
+    // concurrent Spark jobs (ConcurrentJobs), EXCEPT edges sharing a
+    // parent table: those chain sequentially inside one task (the second
     // must anti-join against the first's additions or the key-set union
-    // would double-count). Futures only read `keys` entries for their
+    // would double-count). Tasks only read `keys` entries for their
     // own parent and return their fresh sets; merging happens on this
-    // thread after the Await — no shared mutation across threads. Wall
+    // thread after all finish — no shared mutation across threads. Wall
     // clock per wave drops from Σ(edges) job latencies to max over
     // parents of the per-parent chain.
     def expandWave(wave: Seq[(String, Seq[Fk], DataFrame)],
                    onFresh: (Fk, DataFrame) => Unit,
                    probe: Boolean): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       if (wave.isEmpty) return
       // shared per-child FK projections (a ckpt job when >1 edge reads it)
-      val projs = Await.result(
-        Future.sequence(wave.map { case (child, fks, d) =>
-          Future { child -> fkProjection(child, fks, d, probe) }
-        }), Duration.Inf).toMap
+      val projs = ConcurrentJobs.map(spark, wave) { case (child, fks, d) =>
+        child -> fkProjection(child, fks, d, probe)
+      }.toMap
       val byParent = wave
         .flatMap { case (child, fks, _) => fks.map(fk => fk -> projs(child)) }
         .groupBy(_._1.parentTable).toSeq
-      val results = Await.result(
-        Future.sequence(byParent.map { case (parent, es) => Future {
-          var known = keys.get(parent)
-          val out = Seq.newBuilder[(Fk, DataFrame)]
-          for ((fk, proj) <- es) {
-            val needed = neededFrom(fk, proj)
-            val anti = known match {
-              case Some(k) => needed.join(k, graph.pks(parent), "left_anti")
-              case None    => needed
-            }
-            val fresh = anti.localCheckpoint(false)
-            // probe mode (cyclic graphs): the count() both materializes
-            // the lazy checkpoint and answers the semi-naive emptiness
-            // question — one job per edge. Lazy mode (DAGs): NO action
-            // at all; everything materializes in the single job at the
-            // end of the closure (a DAG needs no convergence probe).
-            if (!probe || fresh.count() > 0L) {
-              known = Some(known.map(_.union(fresh)).getOrElse(fresh))
-              out += ((fk, fresh))
-            }
+      val results = ConcurrentJobs.map(spark, byParent) { case (parent, es) =>
+        var known = keys.get(parent)
+        val out = Seq.newBuilder[(Fk, DataFrame)]
+        for ((fk, proj) <- es) {
+          val needed = neededFrom(fk, proj)
+          val anti = known match {
+            case Some(k) => needed.join(k, graph.pks(parent), "left_anti")
+            case None    => needed
           }
-          parent -> out.result()
-        }}), Duration.Inf)
+          val fresh = anti.localCheckpoint(false)
+          // probe mode (cyclic graphs): the count() both materializes
+          // the lazy checkpoint and answers the semi-naive emptiness
+          // question — one job per edge. Lazy mode (DAGs): NO action
+          // at all; everything materializes in the single job at the
+          // end of the closure (a DAG needs no convergence probe).
+          if (!probe || fresh.count() > 0L) {
+            known = Some(known.map(_.union(fresh)).getOrElse(fresh))
+            out += ((fk, fresh))
+          }
+        }
+        parent -> out.result()
+      }
       for ((parent, freshes) <- results; (fk, fresh) <- freshes) {
         keys += parent -> (keys.get(parent) match {
           case Some(k) => k.union(fresh)
@@ -636,6 +631,7 @@ object Subsetter {
       plan: Plan,
       existing: Map[String, DataFrame]): Map[String, DataFrame] = {
     val included = plan.included
+    val spark = tables.values.head.sparkSession
 
     // 1–2. seed: per-table deterministic sample at target size + forced rows
     val seeds: Map[String, DataFrame] = included.map { t =>
@@ -663,7 +659,7 @@ object Subsetter {
           t -> rows.select(graph.pks(t).map(col): _*).distinct()
             .localCheckpoint(false)
         }
-        // one materialization barrier: the child-pull futures consume
+        // one materialization barrier: the child-pull tasks consume
         // these sets CONCURRENTLY and must not race the lazy checkpoint
         if (k.nonEmpty)
           k.values.map(_.select(lit(1).as("__m"))).reduce(_ union _).count()
@@ -681,9 +677,6 @@ object Subsetter {
       // 8 window jobs. Only genuinely NEW child keys feed the
       // incremental re-closure (semi-naive deltas), so the second
       // closure costs proportional to what the pull actually added.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val snapshot = keys
       val pullEdges = graph.fks.filter(fk =>
         snapshot.contains(fk.parentTable) && included.contains(fk.childTable))
@@ -691,57 +684,54 @@ object Subsetter {
       // per-edge windowed pulls, dedup ONCE, anti-join ONCE, and let the
       // count() materialize the lazy checkpoint — one barrier per child
       // table instead of (window + distinct + anti + count) per edge.
-      val pulls = Await.result(
-        Future.sequence(pullEdges.groupBy(_.childTable).toSeq.map { case (ct, fks) =>
-          Future {
-            val pk = graph.pks(ct)
-            // project the child to pk + every out-edge FK column BEFORE
-            // the windowed pull: everything downstream (key delta,
-            // parent demands) reads only those, and un-projected wide
-            // columns (events.props at 100 TB) would otherwise ride
-            // through the window shuffle for nothing.
-            val outFkCols = graph.fks.filter(_.childTable == ct).flatMap(_.childCols)
-            val slim = tables(ct)
-              .select((pk ++ outFkCols).distinct.map(col): _*)
-            val pulled = fks.map(fk =>
-                childTopK(slim, pk, fk, snapshot(fk.parentTable), cfg.children))
-              .reduce(_ union _)
-              .localCheckpoint(false)
-            val fresh = (snapshot.get(ct) match {
-              case Some(k) => pulled.select(pk.map(col): _*).distinct()
-                .join(k, pk, "left_anti")
-              case None    => pulled.select(pk.map(col): _*).distinct()
-            }).localCheckpoint(false)
-            // one job: materializes `pulled` + `fresh`, answers emptiness
-            val n = fresh.count()
-            // parent demands along EVERY out-edge of the child (not just
-            // the pulling edges), straight from the pulled rows
-            val demands = graph.fks
-              .filter(fk => fk.childTable == ct && tables.contains(fk.parentTable))
-              .map { fk =>
-                fk.parentTable -> pulled.select(
-                  fk.childCols.zip(fk.parentCols).map { case (c, p) =>
-                    col(c).cast(tables(fk.parentTable).schema(p).dataType).as(p)
-                  }: _*).na.drop()
-              }
-            (ct, fresh, n, demands)
-          }
-        }), Duration.Inf)
+      val pulls = ConcurrentJobs.map(spark, pullEdges.groupBy(_.childTable).toSeq) {
+        case (ct, fks) =>
+          val pk = graph.pks(ct)
+          // project the child to pk + every out-edge FK column BEFORE
+          // the windowed pull: everything downstream (key delta,
+          // parent demands) reads only those, and un-projected wide
+          // columns (events.props at 100 TB) would otherwise ride
+          // through the window shuffle for nothing.
+          val outFkCols = graph.fks.filter(_.childTable == ct).flatMap(_.childCols)
+          val slim = tables(ct)
+            .select((pk ++ outFkCols).distinct.map(col): _*)
+          val pulled = fks.map(fk =>
+              childTopK(slim, pk, fk, snapshot(fk.parentTable), cfg.children))
+            .reduce(_ union _)
+            .localCheckpoint(false)
+          val fresh = (snapshot.get(ct) match {
+            case Some(k) => pulled.select(pk.map(col): _*).distinct()
+              .join(k, pk, "left_anti")
+            case None    => pulled.select(pk.map(col): _*).distinct()
+          }).localCheckpoint(false)
+          // one job: materializes `pulled` + `fresh`, answers emptiness
+          val n = fresh.count()
+          // parent demands along EVERY out-edge of the child (not just
+          // the pulling edges), straight from the pulled rows
+          val demands = graph.fks
+            .filter(fk => fk.childTable == ct && tables.contains(fk.parentTable))
+            .map { fk =>
+              fk.parentTable -> pulled.select(
+                fk.childCols.zip(fk.parentCols).map { case (c, p) =>
+                  col(c).cast(tables(fk.parentTable).schema(p).dataType).as(p)
+                }: _*).na.drop()
+            }
+          (ct, fresh, n, demands)
+      }
       pulls.foreach { case (t, fresh, n, _) =>
         if (n > 0L) keys += t -> keys.get(t).map(_.union(fresh)).getOrElse(fresh)
       }
       // merge per-parent demands (cheap: they read the materialized pull
       // checkpoints), dedup across children, keep only genuinely new keys
       val demandByParent = pulls.flatMap(_._4).groupBy(_._1).toSeq
-      val parentFresh = Await.result(
-        Future.sequence(demandByParent.map { case (parent, ds) => Future {
-          val need = ds.map(_._2).reduce(_ union _).distinct()
-          val fresh = (keys.get(parent) match {
-            case Some(k) => need.join(k, graph.pks(parent), "left_anti")
-            case None    => need
-          }).localCheckpoint(false)
-          (parent, fresh, fresh.count())
-        }}), Duration.Inf)
+      val parentFresh = ConcurrentJobs.map(spark, demandByParent) { case (parent, ds) =>
+        val need = ds.map(_._2).reduce(_ union _).distinct()
+        val fresh = (keys.get(parent) match {
+          case Some(k) => need.join(k, graph.pks(parent), "left_anti")
+          case None    => need
+        }).localCheckpoint(false)
+        (parent, fresh, fresh.count())
+      }
       val deltas = scala.collection.mutable.Map[String, DataFrame]()
       parentFresh.foreach { case (parent, fresh, n) =>
         if (n > 0L) {
@@ -756,7 +746,7 @@ object Subsetter {
       // single materializing consumer of the re-closure's lazy key
       // sets — a separate closure-end barrier would read every set
       // twice (the same fold the top-up loop already does). Earlier
-      // rounds keep the barrier: the next round's pull futures consume
+      // rounds keep the barrier: the next round's pull tasks consume
       // the sets CONCURRENTLY and would race the materialization.
       keys = closureFrom(tables, graph, keys, deltas.toMap,
         materialize = pullRound < cfg.childRounds)
@@ -772,9 +762,6 @@ object Subsetter {
     // is at-target or its source is exhausted. Counts are over PK key
     // sets (== rows when the PK is unique; a non-unique PK can
     // overshoot in rows, as any key-closed subsetter must).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     var round = 0
     var exhausted = Set.empty[String]
     var shortfalls = Map.empty[String, Long]
@@ -799,20 +786,19 @@ object Subsetter {
     while (shortfalls.nonEmpty &&
            (cfg.topUpRounds < 0 || round < cfg.topUpRounds)) {
       round += 1
-      val adds = Await.result(
-        Future.sequence(shortfalls.toSeq.map { case (t, gap) => Future {
-          val pk = graph.pks(t)
-          val remaining = keys.get(t) match {
-            case Some(k) => tables(t).join(k, pk, "left_anti")
-            case None    => tables(t)
-          }
-          val extra = remaining
-            .select(pk.map(col): _*).distinct()
-            .orderBy(pmod(xxhash64(pk.map(col): _*), lit(TopUpMod)) +: pk.map(col): _*)
-            .limit(math.min(gap, Int.MaxValue.toLong).toInt)
-            .localCheckpoint(false)
-          (t, extra, extra.count())
-        }}), Duration.Inf)
+      val adds = ConcurrentJobs.map(spark, shortfalls.toSeq) { case (t, gap) =>
+        val pk = graph.pks(t)
+        val remaining = keys.get(t) match {
+          case Some(k) => tables(t).join(k, pk, "left_anti")
+          case None    => tables(t)
+        }
+        val extra = remaining
+          .select(pk.map(col): _*).distinct()
+          .orderBy(pmod(xxhash64(pk.map(col): _*), lit(TopUpMod)) +: pk.map(col): _*)
+          .limit(math.min(gap, Int.MaxValue.toLong).toInt)
+          .localCheckpoint(false)
+        (t, extra, extra.count())
+      }
       val deltas = adds.collect { case (t, extra, n) if n > 0L =>
         if (n < shortfalls(t)) exhausted += t // source can't fill the gap
         keys += t -> keys.get(t).map(_.union(extra)).getOrElse(extra)
@@ -838,8 +824,11 @@ object Subsetter {
   // ---------------------------------------------------------------------
 
   /** Per-FK-edge orphan counts: child rows with a non-null FK value that
-    * resolves to no parent row. All-zero on a valid subset (and on the
-    * full source tables).
+    * resolves to no parent row, as `(edge, orphans)` ordered by edge.
+    * All-zero on a valid subset (and on the full source tables). Edges
+    * with an end missing from `tables` are skipped. A destination audit
+    * whose key columns fit the broadcast budget runs on the driver
+    * instead ([[SmallAudit]], through `SubsetCli.validateDest`).
     *
     * ONE scan per child table serves ALL its outgoing edges: the child's
     * FK projection chains a left join per parent (each against the

@@ -103,7 +103,7 @@ case class WordCount(child: Expression, words: Seq[String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tableRef = ctx.addReferenceObj("wordTable", table,
-      classOf[Array[UTF8String]].getName)
+      classOf[UTF8String].getName + "[]")
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.plans.GraftScores.wordCount($a, $tableRef);")
   }

@@ -116,10 +116,13 @@ class JdbcRoundTripSpec extends SparkSpecBase {
     val written = SubsetCli.run(spark, args)
     assert(written("customer") == 60L) // ceil(150*0.4), exact on the leaf
     assert(written("nation") >= 10L && written("region") >= 2L)
+    // the audit's driver side, or [distributed] its key-column snapshot
     val orphans = SubsetCli
       .validateDest(spark, dstUrl, written.keySet, SubsetCli.sourceGraph(args))
-      .select("orphans").collect().map(_.getLong(0))
-    assert(orphans.forall(_ == 0L))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(orphans.map(_._1) ==
+      Seq("customer->nation(c_nationkey)", "nation->region(n_regionkey)") &&
+      orphans.forall(_._2 == 0L), orphans)
   }
 
   test("reflection groups composite FK columns by KEY_SEQ runs") {

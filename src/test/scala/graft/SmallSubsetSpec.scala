@@ -17,7 +17,11 @@ import scala.util.Random
   * forced rows, exclude/full globs, `topUpRounds = -1`, `childRounds =
   * 2` and delta mode against a random destination. PKs are unique: on a
   * non-unique PK the driver side deliberately demands more parents (see
-  * graft.operators.SmallSubset). */
+  * graft.operators.SmallSubset).
+  *
+  * The same catalogs, audited raw (orphans included) with one table
+  * emptied and some maps partial, pin the RI audit's driver side
+  * (graft.operators.SmallAudit) to the distributed orphan counts. */
 class SmallSubsetSpec extends SparkSpecBase {
   import SmallSubsetSpec.Case
 
@@ -148,6 +152,49 @@ class SmallSubsetSpec extends SparkSpecBase {
     assert(driver.keySet == distributed.keySet)
     for (t <- driver.keys.toSeq.sorted)
       assert(driver(t) == distributed(t), s"$t key sets differ (graph ${c.graph}, ${c.cfg})")
+  }
+
+  /** The audit input of case `i`: the raw source tables (with their
+    * orphans, null and partly-null FKs), one table emptied and, on odd
+    * cases, another dropped from the map. */
+  private def auditTables(i: Int, c: Case): Map[String, DataFrame] = {
+    val rnd = new Random(2000L + i)
+    val names = c.tables.keys.toSeq.sorted
+    val emptied = names(rnd.nextInt(names.size))
+    val dropped = if (i % 2 == 1) names.filterNot(_ == emptied).take(1) else Nil
+    (c.tables -- dropped).map { case (t, df) =>
+      t -> (if (t == emptied) spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        df.schema) else df)
+    }
+  }
+
+  /** The driver side's audit rows at exact row counts, or None when it
+    * declines; a map left with no edge has nothing to audit. */
+  private def driverAudit(tables: Map[String, DataFrame], graph: FkGraph): Option[Seq[Row]] = {
+    val r = graft.operators.SmallAudit.orphans(tables, graph,
+      tables.map { case (t, df) => t -> df.count() })
+    assert(r.isEmpty || graph.fks.exists(fk =>
+      tables.contains(fk.childTable) && tables.contains(fk.parentTable)))
+    r.map(_.collect().toSeq)
+  }
+
+  for (i <- 0 until 8) test(s"driver orphan counts == distributed orphan counts, random catalog $i") {
+    val c = genCase(i)
+    val tables = auditTables(i, c)
+    val distributed = Subsetter.validateRI(tables, c.graph).collect().toSeq
+    val driver = driverAudit(tables, c.graph)
+    assert(driver.isDefined == distributed.nonEmpty, "an auditable map must stay on the driver")
+    driver.foreach(d => assert(d == distributed, s"graph ${c.graph}"))
+  }
+
+  test("the random audit catalogs carry orphans and partial maps") {
+    val runs = (0 until 8).map { i =>
+      val c = genCase(i)
+      val tables = auditTables(i, c)
+      val driver = driverAudit(tables, c.graph)
+      (driver.toSeq.flatten.map(_.getLong(1)).sum, tables.size < c.tables.size, driver.isDefined)
+    }
+    assert(runs.count(_._1 > 0L) >= 4 && runs.exists(_._2) && runs.count(_._3) >= 6, runs)
   }
 }
 

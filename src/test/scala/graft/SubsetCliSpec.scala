@@ -212,10 +212,12 @@ class SubsetCliSpec extends SparkSpecBase {
   test("summaryJson: one parseable line with per-table rows, orphans and the gate side") {
     val line = SubsetCli.summaryJson(
       Seq(("customer", 150L, 60L), ("nation", 25L, 10L)),
-      Map("customer" -> 60L, "nation" -> 12L, "region" -> 3L), orphans = 0L, onDriver = true)
+      Map("customer" -> 60L, "nation" -> 12L, "region" -> 3L), orphans = 0L, onDriver = true,
+      auditOnDriver = false)
     assert(!line.contains("\n"))
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
-    assert(root.get("orphans").asLong == 0L && root.get("key_sets").asText == "driver")
+    assert(root.get("orphans").asLong == 0L && root.get("key_sets").asText == "driver" &&
+      root.get("audit").asText == "distributed")
     val rows = root.get("tables")
     assert(rows.size == 3)
     assert(rows.get(0).get("table").asText == "customer" &&
@@ -225,7 +227,7 @@ class SubsetCliSpec extends SparkSpecBase {
     // a table written without a plan row (an excluded parent) has written rows only
     assert(rows.get(2).get("table").asText == "region" && !rows.get(2).has("source_rows") &&
       rows.get(2).get("written_rows").asLong == 3L)
-    assert(SubsetCli.summaryJson(Nil, Map.empty, 2L, onDriver = false)
-      .contains("\"key_sets\":\"distributed\""))
+    val other = SubsetCli.summaryJson(Nil, Map.empty, 2L, onDriver = false, auditOnDriver = true)
+    assert(other.contains("\"key_sets\":\"distributed\"") && other.contains("\"audit\":\"driver\""))
   }
 }

@@ -9,6 +9,19 @@ import org.apache.spark.sql.DataFrame
 class SubsetterSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Orphan counts from the audit's driver side (graft.operators.SmallAudit)
+    * when the broadcast threshold is on — checked against validateRI —
+    * and from validateRI alone when it is off. */
+  private def audit(tables: Map[String, DataFrame], graph: FkGraph): Seq[Long] = {
+    def orphans(r: DataFrame) = r.select("orphans").as[Long].collect().toSeq
+    val distributed = orphans(Subsetter.validateRI(tables, graph))
+    val driver = graft.operators.SmallAudit.orphans(tables, graph,
+      tables.map { case (t, df) => t -> df.count() })
+    assert(driver.isDefined == (spark.sessionState.conf.autoBroadcastJoinThreshold > 0))
+    driver.foreach(r => assert(orphans(r) == distributed))
+    distributed
+  }
+
   // --- target sizing: Db.assign_target semantics ----------------------
   test("targetSize: linear / logarithmic / full / edge cases") {
     assert(Subsetter.targetSize(0, 0.5) == 0)                    // empty source
@@ -169,26 +182,23 @@ class SubsetterSpec extends SparkSpecBase {
     assert(rows.exists(_.getAs[Long]("delta_rows") > 0L), "f 0.05 → 0.1 must grow")
   }
 
-  test("validateRI: detects orphans on broken data") {
+  bothGateSides("validateRI: detects orphans on broken data") {
     val child = Seq((1L, 99L)).toDF("cid", "pid") // 99 has no parent
     val parent = Seq((20L, "p")).toDF("pid", "pname")
     val graph = FkGraph(
       pks = Map("child" -> Seq("cid"), "parent" -> Seq("pid")),
       fks = Seq(Fk("child", Seq("pid"), "parent", Seq("pid"))))
-    val r = Subsetter.validateRI(Map("child" -> child, "parent" -> parent), graph)
-      .select("orphans").as[Long].head()
-    assert(r == 1L)
+    assert(audit(Map("child" -> child, "parent" -> parent), graph) == Seq(1L))
   }
 
-  test("validateRI: string-keyed FK edges use native types (no long cast)") {
+  bothGateSides("validateRI: string-keyed FK edges use native types (no long cast)") {
     val child = Seq((1L, "US"), (2L, "FR"), (3L, "XX")).toDF("cid", "ccode")
     val parent = Seq(("US", "United States"), ("FR", "France")).toDF("code", "cname")
     val graph = FkGraph(
       pks = Map("child" -> Seq("cid"), "parent" -> Seq("code")),
       fks = Seq(Fk("child", Seq("ccode"), "parent", Seq("code"))))
-    val r = Subsetter.validateRI(Map("child" -> child, "parent" -> parent), graph)
-      .select("orphans").as[Long].head()
-    assert(r == 1L) // only "XX" is orphaned; a long-cast would orphan all 3
+    // only "XX" is orphaned; a long-cast would orphan all 3
+    assert(audit(Map("child" -> child, "parent" -> parent), graph) == Seq(1L))
   }
 
   bothGateSides("subset + validateRI: string-keyed graph end to end") {
@@ -201,8 +211,7 @@ class SubsetterSpec extends SparkSpecBase {
     val out = Subsetter.subset(Map("parent" -> parent, "child" -> child), graph,
       Subsetter.Config(fraction = 0.25, children = 0))
     assert(out("child").count() == 13) // exact target via top-up
-    val orphans = Subsetter.validateRI(out, graph).select("orphans").as[Long].collect()
-    assert(orphans.forall(_ == 0L))
+    assert(audit(out, graph) == Seq(0L))
   }
 
   bothGateSides("subset: forced rows are present with their parent closure") {
