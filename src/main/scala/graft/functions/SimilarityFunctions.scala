@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.Kernels
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,34 +28,25 @@ object SimilarityFunctions {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
 
-  /** Codegen'd dot product — the native [[graft.plans.DotProduct]]
-    * kernel (one fused loop, whole-stage codegen), bitwise [[dot]]
+  /** Codegen'd dot product — the native `graft_dot` kernel
+    * ([[graft.plans.GraftVector.dot]]: one fused loop, whole-stage
+    * codegen), bitwise [[dot]]
     * (same 0.0 seed, same left association, same IEEE ops per element;
     * common-prefix on unequal lengths). Every PAIR-scale scoring site
     * uses this instead of the interpreted HOF evaluator (optimization
     * guide §4: no non-codegen expressions in the hot path — Spark HOFs
-    * are CodegenFallback). Constructed through the graftshim bridge, so
-    * no registry round-trip is needed. */
-  def dotN(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.GraftColumn.of(graft.plans.DotProduct(
-      org.apache.spark.sql.graftshim.GraftColumn.expr(a),
-      org.apache.spark.sql.graftshim.GraftColumn.expr(b)))
+    * are CodegenFallback). */
+  def dotN(a: Column, b: Column): Column = Kernels.call("graft_dot", a, b)
 
   /** [[dotN]] for int-quantized vectors: int multiply, long widen, long
     * adds — bitwise the aggregate(zip_with((x,y) => (x*y).cast(long)),
     * 0L, _+_) HOF. graft_dot_int8(v, v) is the quantized squared norm. */
-  def dotLongN(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.GraftColumn.of(graft.plans.DotProductInt8(
-      org.apache.spark.sql.graftshim.GraftColumn.expr(a),
-      org.apache.spark.sql.graftshim.GraftColumn.expr(b)))
+  def dotLongN(a: Column, b: Column): Column = Kernels.call("graft_dot_int8", a, b)
 
   /** Codegen'd positional equality count — bitwise
     * size(filter(zip_with(a, b, _ === _), identity)) for equal-length
     * inputs (the MinHash signature estimator). */
-  def matchCountN(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.GraftColumn.of(graft.plans.MatchCount(
-      org.apache.spark.sql.graftshim.GraftColumn.expr(a),
-      org.apache.spark.sql.graftshim.GraftColumn.expr(b)))
+  def matchCountN(a: Column, b: Column): Column = Kernels.call("graft_match_count", a, b)
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
@@ -123,8 +115,7 @@ object SimilarityFunctions {
     // bit-identical: same strings, same first-seen order as
     // array_distinct (UTF8String equality is byte equality);
     // SimilaritySpec pins kernel == HOF on the real corpus.
-    org.apache.spark.sql.graftshim.GraftColumn.of(graft.plans.ShingleStrings(
-      org.apache.spark.sql.graftshim.GraftColumn.expr(split(text, " ")), n))
+    Kernels.call("graft_shingle_strings", split(text, " "), lit(n))
 
   /** Exact pairwise n-gram-shingle Jaccard — same inverted-index
     * machinery as [[jaccardPairs]] on the [[shingles]] basis. Shingling
@@ -143,13 +134,12 @@ object SimilarityFunctions {
     * strings — measured ~3x on this tier at sf0.1. */
   def jaccardPairsNgram(docs: DataFrame, n: Int, minJaccard: Double,
                         maxDf: Int = 100000): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     // r18: gated widen of the shingle-kernel scan (the dedup_shingle_lsh
     // rationale, applied inside the tier so every consumer gets it) —
     // no-op at cluster scan widths and on in-memory relations
     jaccardPairsOver(
       widenTextScan(docs).select(col("doc_id"),
-        explode(call_function("graft_shingle_hashes",
+        explode(Kernels.call("graft_shingle_hashes",
           split(col("text"), " "), lit(n))).as("tok")),
       minJaccard, maxDf)
   }
@@ -177,7 +167,6 @@ object SimilarityFunctions {
   def jaccardPairsNgramLsh(docs: DataFrame, n: Int, minJaccard: Double,
                            numHashes: Int = 128, bands: Int = 32,
                            maxBucket: Int = 10000): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val toks = split(col("text"), " ")
     // one scan computes both per-doc set representations; the
     // checkpoint is read by the banding pass + both verify joins.
@@ -193,9 +182,9 @@ object SimilarityFunctions {
     // signature is bit-identical (PlansSpec pin) and the row pays ONE
     // shingle concat+hash pass instead of two.
     val base = widenTextScan(docs).select(col("doc_id"),
-        call_function("graft_shingle_hashes", toks, lit(n)).as("sh"))
+        Kernels.call("graft_shingle_hashes", toks, lit(n)).as("sh"))
       .withColumn("sig",
-        call_function("graft_minhash_hashes", col("sh"), lit(numHashes)))
+        Kernels.call("graft_minhash_hashes", col("sh"), lit(numHashes)))
       .filter(size(col("sig")) > 0)
       .localCheckpoint(false)
     val banded = capHotKeys(
@@ -215,7 +204,7 @@ object SimilarityFunctions {
       // r18 (guide §4): graft_intersect_count == size(array_intersect)
       // (PlansSpec pin) without materializing the intersection array
       // per candidate pair
-      .withColumn("c", call_function("graft_intersect_count",
+      .withColumn("c", Kernels.call("graft_intersect_count",
         col("sha"), col("shb")))
       .withColumn("jaccard", col("c").cast("double") /
         (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
@@ -272,7 +261,6 @@ object SimilarityFunctions {
     * corpus max df, where both tiers are fully exact.) */
   def jaccardPairsNgramPrefix(docs: DataFrame, n: Int, minJaccard: Double,
                               maxDf: Int = 100000): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     // r18: widen decision read from the RAW scan (before the base
     // widen below, which would mask it) — it drives BOTH the base
     // kernel scan's width and the prefix window's repartition
@@ -286,7 +274,7 @@ object SimilarityFunctions {
     // jaccardPairsNgramLsh finding, same trap)
     val base = (if (widen) docs.repartition(width) else docs)
       .select(col("doc_id"),
-        call_function("graft_shingle_hashes",
+        Kernels.call("graft_shingle_hashes",
           split(col("text"), " "), lit(n)).as("sh"))
       .filter(size(col("sh")) > 0)
       .withColumn("sz", size(col("sh")))
@@ -380,7 +368,7 @@ object SimilarityFunctions {
       .join(base.select(col("doc_id").as("idb"), col("sh").as("shb")), "idb")
       // r18 (guide §4): same fused intersect-count kernel as the LSH
       // tier's verify — see there
-      .withColumn("c", call_function("graft_intersect_count",
+      .withColumn("c", Kernels.call("graft_intersect_count",
         col("sha"), col("shb")))
       .withColumn("jaccard", col("c").cast("double") /
         (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
@@ -496,10 +484,9 @@ object SimilarityFunctions {
     * quadratic pair space (measured: 176 s -> ~2 s at sf0.1). */
   def minhashSignatures(docs: DataFrame, textCol: String, numHashes: Int,
                         nShingle: Int = 1): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
-        call_function("graft_minhash", split(col(textCol), " "),
+        Kernels.call("graft_minhash", split(col(textCol), " "),
           lit(nShingle), lit(numHashes)).as("sig"))
       .filter(size(col("sig")) > 0) // docs with fewer than nShingle tokens
   }
@@ -573,9 +560,8 @@ object SimilarityFunctions {
     * pass; same fingerprints (identical hash + vote scheme), one less
     * shuffle, ~2x faster at sf0.1. */
   def simhash(docs: DataFrame, textCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"),
-      call_function("graft_simhash", split(col(textCol), " ")).as("simhash"))
+      Kernels.call("graft_simhash", split(col(textCol), " ")).as("simhash"))
   }
 
   /** Hamming distance between two 64-bit hashes. */
@@ -675,9 +661,8 @@ object SimilarityFunctions {
     * fingerprint, which anchors the wide tier to the 64-bit one in
     * PlansSpec). Returns (doc_id, fps array<long>). */
   def simhashWide(docs: DataFrame, textCol: String, words: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"),
-      call_function("graft_simhash_wide",
+      Kernels.call("graft_simhash_wide",
         split(col(textCol), " "), lit(words)).as("fps"))
   }
 
@@ -737,14 +722,13 @@ object SimilarityFunctions {
     * drift (7.7 → 61.2 s on 3.3× docs). [[editdistBandedPairs]] is the
     * same relation with sub-quadratic candidates. */
   def editdistBlockPairs(c: DataFrame, maxDist: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(c.sparkSession)
     val a = c.select(col("doc_id").as("ida"), col("lang").as("la"),
       col("text").as("ta"), col("n_chars").as("na"))
     val b = c.select(col("doc_id").as("idb"), col("lang").as("lb"),
       col("text").as("tb"), col("n_chars").as("nb"))
     a.join(b, col("la") === col("lb") && col("na") === col("nb") &&
         col("ida") < col("idb"))
-      .withColumn("dist", call_function("graft_editdist",
+      .withColumn("dist", Kernels.call("graft_editdist",
         col("ta"), col("tb"), lit(maxDist)))
       .filter(col("dist") >= 0)
       .select("ida", "idb", "dist")
@@ -771,7 +755,6 @@ object SimilarityFunctions {
     * a DuckDB oracle reproduces candidates and verification exactly,
     * so the banded tier carries a FULL oracle, not a rows-only pin. */
   def editdistBandedPairs(c: DataFrame, maxDist: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(c.sparkSession)
     val nSeg = maxDist + 1
     val base = c.selectExpr("doc_id AS id", "lang AS l", "n_chars AS n", "text AS t")
     // stack(nSeg, segNo, start, len, ...): boundaries at integer
@@ -801,7 +784,7 @@ object SimilarityFunctions {
     cand
       .join(c.select(col("doc_id").as("ida"), col("text").as("ta")), "ida")
       .join(c.select(col("doc_id").as("idb"), col("text").as("tb")), "idb")
-      .withColumn("dist", call_function("graft_editdist",
+      .withColumn("dist", Kernels.call("graft_editdist",
         col("ta"), col("tb"), lit(maxDist)))
       .filter(col("dist") >= 0)
       .select("ida", "idb", "dist")
@@ -974,7 +957,6 @@ object SimilarityFunctions {
     * both sides of the candidate join and both verify joins (and the
     * auto variant's count reads it for free). */
   private def cosinePrep(emb: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     widenForCheckpoint(emb
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
       .withColumn("n", sqrt(dotN(col("e"), col("e")))))
@@ -988,7 +970,7 @@ object SimilarityFunctions {
     // The bucket projection sits ABOVE the checkpoint: only the keyed
     // branch computes it; the verify joins read (id, e, n) alone.
     val keyed = v
-      .withColumn("bks", call_function("graft_lsh_buckets",
+      .withColumn("bks", Kernels.call("graft_lsh_buckets",
         col("e"), lit(0), lit(planesPerTable), lit(nTables)))
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("tbl", "bucket")))
     val cand = keyed.as("a")
@@ -1081,10 +1063,9 @@ object SimilarityFunctions {
     * a data dimension, not an expression dimension. */
   private def assign(vecs: DataFrame,
                      cent: Array[(Int, Array[Double])]): DataFrame = {
-    graft.plans.GraftExtensions.register(vecs.sparkSession)
     val dim = cent.head._2.length
     vecs.withColumn("centroid_id",
-      call_function("graft_cosine_argmax", col("v"),
+      Kernels.call("graft_cosine_argmax", col("v"),
         typedlit(flatCentroids(cent)), lit(dim)))
   }
 
@@ -1160,7 +1141,6 @@ object SimilarityFunctions {
     * passes, the index projection and the final verify join (and the
     * auto variant's count reads it for free). */
   private def ivfPrep(candidates: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(candidates.sparkSession)
     // widen BEFORE the checkpoint when the gate says the scan is narrow
     // relative to the corpus: localCheckpoint freezes the scan's
     // partitioning, serializing every downstream corpus pass
@@ -1176,7 +1156,6 @@ object SimilarityFunctions {
                              k: Int, nprobe: Int, iters: Int,
                              maxCandidates: Int, fpBits: Int,
                              trained: Option[Array[(Int, Array[Double])]] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val nWords = (fpBits + 63) / 64
     def fps(df: DataFrame, vec: String): DataFrame = df
       .withColumn("fp", fpWords(col(vec), 4096, nWords))
@@ -1213,7 +1192,7 @@ object SimilarityFunctions {
         toDoubleArr(col("embedding")).as("qe")), "qe")
       .localCheckpoint(false) // small by construction; feeds 3 branches
     val probes = qv
-      .withColumn("__sims", call_function("graft_cosine_many",
+      .withColumn("__sims", Kernels.call("graft_cosine_many",
         col("qe"), typedlit(flatCentroids(cent)), lit(dim)))
       .withColumn("__ranked", array_sort(
         transform(sequence(lit(0), lit(cent.length - 1)),
@@ -1235,7 +1214,7 @@ object SimilarityFunctions {
     cand
       .join(broadcast(qv.select("qid", "qe")), "qid")
       .join(cv.select(col("vec_id").as("cid"), col("v").as("ce")), "cid")
-      .withColumn("score", call_function("graft_cosine", col("qe"), col("ce")))
+      .withColumn("score", Kernels.call("graft_cosine", col("qe"), col("ce")))
       .select(col("qid"), col("cid"), col("score"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
@@ -1275,7 +1254,7 @@ object SimilarityFunctions {
     * extra longs per row. */
   private def fpWords(vec: Column, base: Int, nWords: Int): Column =
     array((0 until nWords).map(w =>
-      call_function("graft_lsh_bits", vec, lit(base + 64 * w), lit(64))): _*)
+      Kernels.call("graft_lsh_bits", vec, lit(base + 64 * w), lit(64))): _*)
 
   /** Hamming distance between two fingerprint-word arrays. */
   private def fpHamming(a: Column, b: Column): Column =
@@ -1286,7 +1265,6 @@ object SimilarityFunctions {
                  nPlanes: Int = 8, dim: Int = 64, nTables: Int = 12,
                  probeHamming: Int = 2, maxCandidates: Int = 256,
                  fpBits: Int = 256): DataFrame = {
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val nWords = (fpBits + 63) / 64
     // fingerprint planes start far past the bucket planes (offset 4096)
     // so the estimator is independent of candidate generation. All sign
@@ -1318,7 +1296,7 @@ object SimilarityFunctions {
       .withColumn("cn", sqrt(dotN(col("ce"), col("ce"))))
       .localCheckpoint(false)
     def tableBuckets(vec: Column): Column =
-      call_function("graft_lsh_buckets", vec, lit(0), lit(nPlanes), lit(nTables))
+      Kernels.call("graft_lsh_buckets", vec, lit(0), lit(nPlanes), lit(nTables))
     val cKeyed = cv.select(col("cid"),
       posexplode(tableBuckets(col("ce"))).as(Seq("tbl", "bucket")))
     val qKeyed = qv.select(col("qid"),
@@ -1381,7 +1359,7 @@ object SimilarityFunctions {
     val cv = cosinePrep(candidates)
     val qv = cosinePrep(queries)
     def keyed(v: DataFrame, id: String): DataFrame = v
-      .withColumn("bks", call_function("graft_lsh_buckets",
+      .withColumn("bks", Kernels.call("graft_lsh_buckets",
         col("e"), lit(0), lit(planesPerTable), lit(nTables)))
       .select(col("vec_id").as(id), posexplode(col("bks")).as(Seq("tbl", "bucket")))
     // candidate-side occupancy cap (hard-negative tier): each
@@ -1445,7 +1423,6 @@ object SimilarityFunctions {
                      nTables: Int, planesPerTable: Int,
                      probeHamming: Int,
                      maxBucket: Option[Int] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val cvd = candidates.select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
     val qvd = queries.select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
     // one exact map-side max-agg; broadcast as a 1-row scalar attach
@@ -1457,7 +1434,7 @@ object SimilarityFunctions {
       .withColumn("nrm", sqrt(dotLongN(col("qv"), col("qv")).cast("double")))
       .filter(col("nrm") > 0.0)
     def keyed(v: DataFrame, id: String): DataFrame = v
-      .withColumn("bks", call_function("graft_lsh_buckets",
+      .withColumn("bks", Kernels.call("graft_lsh_buckets",
         col("e"), lit(0), lit(planesPerTable), lit(nTables)))
       .select(col("vec_id").as(id), posexplode(col("bks")).as(Seq("tbl", "bucket")))
     def capped(kdf: DataFrame, id: String): DataFrame = maxBucket.fold(kdf) { cap =>
@@ -1543,8 +1520,7 @@ object SimilarityFunctions {
     * Input `v` must be a (vec_id, e: array<double>) projection. */
   private[graft] def semanticLeaders(v: DataFrame,
                                      planes: Int): Array[(Long, Array[Double])] = {
-    graft.plans.GraftExtensions.register(v.sparkSession)
-    val withB = v.withColumn("__bks", call_function("graft_lsh_buckets",
+    val withB = v.withColumn("__bks", Kernels.call("graft_lsh_buckets",
         col("e"), lit(SemPlaneOffset), lit(planes), lit(1)))
       .select(col("vec_id"), element_at(col("__bks"), 1).as("bucket"))
     // fetch the ≤2^planes leader vectors with a BROADCAST of the tiny
@@ -1619,11 +1595,10 @@ object SimilarityFunctions {
     * PlanQualitySpec can pin the shuffle-free shape. */
   private[graft] def semanticScored(v: DataFrame,
       leaders: Array[(Long, Array[Double])]): DataFrame = {
-    graft.plans.GraftExtensions.register(v.sparkSession)
     val dim = leaders.head._2.length
     val flat = typedlit(leaders.flatMap(_._2).toSeq)
     val buckets = typedlit(leaders.map(_._1).toSeq)
-    v.withColumn("__sims", call_function("graft_cosine_many",
+    v.withColumn("__sims", Kernels.call("graft_cosine_many",
         col("e"), flat, lit(dim)))
       .withColumn("__idx",
         array_position(col("__sims"), array_max(col("__sims"))).cast("int"))

@@ -57,8 +57,7 @@ object TextFunctions {
     * two interpreted lambdas per token; bit-identical fold
     * (TextFunctionsSpec pin). */
   def fingerprint(text: Column): Column =
-    org.apache.spark.sql.graftshim.GraftColumn.of(graft.plans.Fingerprint(
-      org.apache.spark.sql.graftshim.GraftColumn.expr(tokens(text))))
+    graft.plans.Kernels.call("graft_fingerprint", tokens(text))
 
   /** Tiny per-language stopword tables for the n-gram/stopword-vote
     * language-ID heuristic. */

@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bounded (banded) Levenshtein kernel.
@@ -22,6 +19,7 @@ object GraftEditDistance {
 
   private final val Inf = Int.MaxValue / 2
 
+  /** `graft_editdist(a string, b string, k) -> int` — distance if <= k else -1. */
   def bounded(a: UTF8String, b: UTF8String, k: Int): Int = {
     val s = a.toString.codePoints().toArray()
     val t = b.toString.codePoints().toArray()
@@ -61,25 +59,4 @@ object GraftEditDistance {
     }
     if (prev(m) <= k) prev(m) else -1
   }
-}
-
-/** `graft_editdist(a string, b string, k) -> int` — distance if <= k else -1. */
-case class BoundedEditDistance(left: Expression, right: Expression, threshold: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_editdist"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GraftEditDistance.bounded(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], threshold)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.GraftEditDistance.bounded($a, $b, $threshold);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

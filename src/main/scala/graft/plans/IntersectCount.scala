@@ -1,12 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** Runtime helpers for [[IntersectCount]] — a minimal open-addressing
-  * long hash set (linear probing, power-of-two table, 0-as-empty
+/** Runtime helpers for [[GraftSets.intersectCount]] — a minimal
+  * open-addressing long hash set (linear probing, power-of-two table, 0-as-empty
   * sentinel with an explicit zero flag) so the kernel allocates two
   * flat long arrays per evaluation instead of the result array + two
   * boxed sets the built-in `array_intersect` path builds. */
@@ -60,12 +57,21 @@ object GraftSets {
       }
   }
 
-  /** |distinct(a) ∩ b| with `array_intersect`'s element semantics:
-    * distinct elements of `a` that occur in `b`, a null element counted
-    * once when both sides contain one — so the result equals
-    * `size(array_intersect(a, b))` for every non-null input pair
-    * (PlansSpec pins kernel == built-in on the real corpus and on
-    * randomized arrays with duplicates/nulls/empties). */
+  /** `graft_intersect_count(a array<bigint>, b array<bigint>) -> int`
+    * — the pair-verify kernel: |distinct(a) ∩ b| with
+    * `array_intersect`'s element semantics: distinct elements of `a`
+    * that occur in `b`, a null element counted once when both sides
+    * contain one — so the result equals `size(array_intersect(a, b))`
+    * for every non-null input pair (PlansSpec pins kernel == built-in
+    * on the real corpus and on randomized arrays with
+    * duplicates/nulls/empties). The built-in path materializes the
+    * intersection ARRAY just for `size` to read its length; every
+    * near-dup verify join evaluates one intersection per candidate
+    * PAIR, so the allocation + copy is pure hot-path overhead.
+    * NULL-input note: the kernel is NULL in, NULL out where
+    * `size(array_intersect(...))` yields -1 under legacy sizeOfNull —
+    * both outcomes fail the `jaccard >= t` verify filter identically,
+    * and the call sites feed non-null checkpointed arrays anyway. */
   def intersectCount(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements(); val nb = b.numElements()
     if (na == 0 || nb == 0) return 0
@@ -93,30 +99,4 @@ object GraftSets {
     }
     c
   }
-}
-
-/** `graft_intersect_count(a array<bigint>, b array<bigint>) -> int` —
-  * the pair-verify kernel: |distinct(a) ∩ b| in one fused pass, equal
-  * to `size(array_intersect(a, b))` on every non-null input (same
-  * distinct-on-left and null-element-once rules). The built-in path
-  * materializes the intersection ARRAY just for `size` to read its
-  * length; every near-dup verify join evaluates one intersection per
-  * candidate PAIR, so the allocation + copy is pure hot-path overhead.
-  * NULL-input note: the kernel is NULL in, NULL out where
-  * `size(array_intersect(...))` yields -1 under legacy sizeOfNull —
-  * both outcomes fail the `jaccard >= t` verify filter identically,
-  * and the call sites feed non-null checkpointed arrays anyway. */
-case class IntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_intersect_count"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GraftSets.intersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.GraftSets.intersectCount($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

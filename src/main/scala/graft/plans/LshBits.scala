@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native kernels for hyperplane sign-bit LSH — the hot loop of the
   * cosine-LSH dedup and ANN tiers.
@@ -45,7 +42,8 @@ object GraftLsh {
       out
     })
 
-  /** Sign bits of `vec` under planes `offset until offset+nPlanes`:
+  /** `graft_lsh_bits(vec array<double>, offset, nPlanes) -> long` —
+    * sign bits of `vec` under planes `offset until offset+nPlanes`:
     * bit j set iff fold(vec . plane_{offset+j}) > 0. */
   def lshBits(vec: ArrayData, offset: Int, nPlanes: Int): Long = {
     val dim = vec.numElements()
@@ -65,8 +63,9 @@ object GraftLsh {
     bits
   }
 
-  /** `nTables` independent buckets in one pass: table t uses planes
-    * `offset + t*nPlanes until offset + (t+1)*nPlanes`. */
+  /** `graft_lsh_buckets(vec array<double>, offset, nPlanes, nTables)
+    * -> array<long>` — `nTables` independent buckets in one pass:
+    * table t uses planes `offset + t*nPlanes until offset + (t+1)*nPlanes`. */
   def lshBuckets(vec: ArrayData, offset: Int, nPlanes: Int, nTables: Int): ArrayData = {
     val out = new Array[Long](nTables)
     var t = 0
@@ -76,42 +75,4 @@ object GraftLsh {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `graft_lsh_bits(vec array<double>, offset, nPlanes) -> long` */
-case class LshBits(child: Expression, offset: Int, nPlanes: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_lsh_bits"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftLsh.lshBits(a.asInstanceOf[ArrayData], offset, nPlanes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftLsh.lshBits($a, $offset, $nPlanes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_lsh_buckets(vec array<double>, offset, nPlanes, nTables) -> array<long>` */
-case class LshBuckets(child: Expression, offset: Int, nPlanes: Int, nTables: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_buckets"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftLsh.lshBuckets(a.asInstanceOf[ArrayData], offset, nPlanes, nTables)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftLsh.lshBuckets($a, $offset, $nPlanes, $nTables);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,15 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared kernels for the text-hash expressions. Static methods so the
+/** Shared kernels for the text-hash functions. Static methods so the
   * generated code is a single call — no lambda dispatch, no boxing per
   * element, and the expression stays inside whole-stage codegen.
+  *
+  * Null policy: every token kernel here drops a null token slot, so
+  * `k(a) == k(filter(a, x -> x is not null))` ([[nonNull]]; for hashes
+  * [[minhashFromHashes]] skips null slots the same way).
   *
   * Hashing matches Spark's `xxhash64` (XXH64 over UTF8String bytes,
   * seed 42), so these are drop-in replacements for the HOF
@@ -41,6 +42,18 @@ object GraftHashes {
     UTF8String.concat(parts: _*)
   }
 
+  /** `toks` without its null slots — the same object when it has none. */
+  private def nonNull(toks: ArrayData): ArrayData = {
+    val n = toks.numElements()
+    var i = 0
+    while (i < n && !toks.isNullAt(i)) i += 1
+    if (i == n) return toks
+    val out = Array.newBuilder[Any]
+    i = 0
+    while (i < n) { if (!toks.isNullAt(i)) out += toks.getUTF8String(i); i += 1 }
+    new GenericArrayData(out.result())
+  }
+
   /** Full-width XXH64 of the `n`-token shingle at `start` — the
     * identity basis for [[shingleHashes]]. NOT Mersenne-reduced: set
     * arithmetic over these hashes stands in for set arithmetic over
@@ -55,8 +68,9 @@ object GraftHashes {
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
   }
 
-  /** MinHash signature computed FROM the distinct shingle-hash array
-    * (r18): `minhash(toks, n, k)` folds min over every shingle
+  /** `graft_minhash_hashes(hashes array<long>, numHashes) ->
+    * array<long>` — MinHash signature computed FROM the distinct
+    * shingle-hash array (r18): `minhash(toks, n, k)` folds min over every shingle
     * POSITION, but a min over a multiset equals the min over its
     * distinct set, so folding over [[shingleHashes]]' output — the same
     * 64-bit values, deduped — yields the identical signature while
@@ -96,11 +110,13 @@ object GraftHashes {
     if (m < 0) m + MersennePrime else m
   }
 
-  /** MinHash signature over `nShingle`-token shingles of `toks`:
+  /** `graft_minhash(tokens array<string>, nShingle, numHashes) ->
+    * array<long>` — MinHash signature over `nShingle`-token shingles:
     * permutation k approximated by `(h*(1+2k) + 7919*(k+1)) mod p`.
     * One pass over the shingles, all `numHashes` minima in the same
     * loop. Empty result when the doc has no shingles. */
-  def minhash(toks: ArrayData, nShingle: Int, numHashes: Int): ArrayData = {
+  def minhash(tokens: ArrayData, nShingle: Int, numHashes: Int): ArrayData = {
+    val toks = nonNull(tokens)
     val nTok = toks.numElements()
     val nSh = nTok - nShingle + 1
     if (nSh <= 0) return new GenericArrayData(Array.empty[Long])
@@ -119,7 +135,8 @@ object GraftHashes {
     new GenericArrayData(mins)
   }
 
-  /** DISTINCT hashes of the `n`-token shingles of `toks`, first-seen
+  /** `graft_shingle_hashes(tokens array<string>, n) -> array<long>` —
+    * DISTINCT hashes of the `n`-token shingles, first-seen
     * order (deterministic given the token array). The long-keyed basis
     * for the exact inverted-index Jaccard tier: joining/sorting 8-byte
     * hashes instead of 20-40 byte shingle STRINGS more than halves the
@@ -130,7 +147,8 @@ object GraftHashes {
     * tiers' mod-2³¹−1 reduction), so that's ~|union|²/2⁶⁴ per pair —
     * vanishing, and the DuckDB oracle would surface one as a hash
     * mismatch. */
-  def shingleHashes(toks: ArrayData, n: Int): ArrayData = {
+  def shingleHashes(tokens: ArrayData, n: Int): ArrayData = {
+    val toks = nonNull(tokens)
     val nTok = toks.numElements()
     val nSh = nTok - n + 1
     if (nSh <= 0) return new GenericArrayData(Array.empty[Long])
@@ -147,7 +165,8 @@ object GraftHashes {
     new GenericArrayData(out)
   }
 
-  /** POSITIONAL `w`-token span strings of `toks` (space-joined, one per
+  /** `graft_span_strings(tokens array<string>, w) -> array<string>` —
+    * POSITIONAL `w`-token span strings (space-joined, one per
     * start position, duplicates kept) — the span-dedup tiers' window
     * basis. Byte-identical to the
     * `transform(sequence(1, n-w+1), i -> array_join(slice(toks,i,w), " "))`
@@ -155,7 +174,8 @@ object GraftHashes {
     * lambda (slice + array_join) per POSITION (r17, guide §4 — same
     * fix as [[shingleHashes]] but keeping position order and repeats,
     * which the coverage/lag arithmetic of the consumers needs). */
-  def spanStrings(toks: ArrayData, w: Int): ArrayData = {
+  def spanStrings(tokens: ArrayData, w: Int): ArrayData = {
+    val toks = nonNull(tokens)
     val nTok = toks.numElements()
     val nSp = nTok - w + 1
     if (nSp <= 0) return new GenericArrayData(Array.empty[Any])
@@ -168,14 +188,16 @@ object GraftHashes {
     new GenericArrayData(out)
   }
 
-  /** DISTINCT `n`-token shingle STRINGS of `toks`, first-seen order —
+  /** `graft_shingle_strings(tokens array<string>, n) -> array<string>`
+    * — DISTINCT `n`-token shingle STRINGS, first-seen order —
     * [[shingleHashes]]'s string twin, for the tiers whose oracle
     * replays md5(shingle_string) and therefore cannot key on hashes
     * (dedup_minhash_portable, distinct_kmv_portable). Byte-identical
     * to `array_distinct(transform(sequence, i -> concat_ws(...)))` —
     * UTF8String equality is byte equality, and first-seen order
     * matches array_distinct's. */
-  def shingleStrings(toks: ArrayData, n: Int): ArrayData = {
+  def shingleStrings(tokens: ArrayData, n: Int): ArrayData = {
+    val toks = nonNull(tokens)
     val nTok = toks.numElements()
     val nSh = nTok - n + 1
     if (nSh <= 0) return new GenericArrayData(Array.empty[Any])
@@ -192,11 +214,13 @@ object GraftHashes {
     new GenericArrayData(out)
   }
 
-  /** POSITIONAL span HASHES: `xxhash64` (seed 42) of each
+  /** `graft_span_hashes(tokens array<string>, w) -> array<long>` —
+    * POSITIONAL span HASHES: `xxhash64` (seed 42) of each
     * [[spanStrings]] element — bit-identical to
     * `xxhash64(array_join(slice(toks,i,w), " "))` per position, so the
     * hashed span tier keeps its string-tier oracle unchanged. */
-  def spanHashes(toks: ArrayData, w: Int): ArrayData = {
+  def spanHashes(tokens: ArrayData, w: Int): ArrayData = {
+    val toks = nonNull(tokens)
     val nTok = toks.numElements()
     val nSp = nTok - w + 1
     if (nSp <= 0) return new GenericArrayData(Array.empty[Long])
@@ -209,10 +233,12 @@ object GraftHashes {
     new GenericArrayData(out)
   }
 
-  /** 64-bit SimHash over the DISTINCT tokens of `toks`: per-bit ±1
+  /** `graft_simhash(tokens array<string>) -> long` — 64-bit SimHash
+    * over the DISTINCT tokens: per-bit ±1
     * votes over token hashes, bit set where votes are positive. One
     * pass, no shuffle (vs the explode + groupBy formulation). */
-  def simhash(toks: ArrayData): Long = {
+  def simhash(tokens: ArrayData): Long = {
+    val toks = nonNull(tokens)
     val n = toks.numElements()
     val votes = new Array[Int](64)
     val seen = new java.util.HashSet[Long]()
@@ -238,13 +264,15 @@ object GraftHashes {
     out
   }
 
-  /** WIDE SimHash: `words` independent 64-bit simhash words over the
+  /** `graft_simhash_wide(tokens array<string>, words) -> array<long>` —
+    * WIDE SimHash: `words` independent 64-bit simhash words over the
     * same distinct-token set, word w voting with hashes under XXH64
     * seed 42 + w — word 0 is bit-identical to [[simhash]] (seed 42),
     * which is what lets a spec anchor the wide tier to the 64-bit one.
     * Distinctness is judged by the word-0 hash, matching [[simhash]]'s
     * dedup rule exactly. One pass over the tokens computes all words. */
-  def simhashWide(toks: ArrayData, words: Int): ArrayData = {
+  def simhashWide(tokens: ArrayData, words: Int): ArrayData = {
+    val toks = nonNull(tokens)
     val n = toks.numElements()
     val votes = new Array[Int](words * 64)
     val seen = new java.util.HashSet[Long]()
@@ -282,157 +310,4 @@ object GraftHashes {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `graft_minhash(tokens array<string>, nShingle, numHashes) -> array<long>` */
-case class MinHashSignature(child: Expression, nShingle: Int, numHashes: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.minhash(a.asInstanceOf[ArrayData], nShingle, numHashes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.minhash($a, $nShingle, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_minhash_hashes(hashes array<long>, numHashes) -> array<long>`
-  * — see [[GraftHashes.minhashFromHashes]]. */
-case class MinHashFromHashes(child: Expression, numHashes: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_hashes"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.minhashFromHashes(a.asInstanceOf[ArrayData], numHashes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.minhashFromHashes($a, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_shingle_hashes(tokens array<string>, n) -> array<long>` */
-case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingle_hashes"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.shingleHashes(a.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.shingleHashes($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_shingle_strings(tokens array<string>, n) -> array<string>` */
-case class ShingleStrings(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingle_strings"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.shingleStrings(a.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.shingleStrings($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_span_strings(tokens array<string>, w) -> array<string>` */
-case class SpanStrings(child: Expression, w: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_span_strings"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.spanStrings(a.asInstanceOf[ArrayData], w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.spanStrings($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_span_hashes(tokens array<string>, w) -> array<long>` */
-case class SpanHashes(child: Expression, w: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_span_hashes"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.spanHashes(a.asInstanceOf[ArrayData], w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.spanHashes($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_simhash_wide(tokens array<string>, words) -> array<long>` */
-case class SimHashWide(child: Expression, words: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_simhash_wide"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.simhashWide(a.asInstanceOf[ArrayData], words)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.simhashWide($a, $words);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_simhash(tokens array<string>) -> long` */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def nullSafeEval(a: Any): Any =
-    GraftHashes.simhash(a.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftHashes.simhash($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Runtime helpers for the scan-local text-scoring kernels (r18,
@@ -46,7 +46,7 @@ object GraftScores {
     * token, exactly `ascii('')`), folded left in array order. All
     * integer arithmetic; h stays < 1e9+7 so h*31+x never overflows.
     * A null token makes the HOF fold NULL; here it returns
-    * [[NullFingerprint]], which `graft_fingerprint` maps to NULL. */
+    * [[NullFingerprint]], which [[fingerprintOrNull]] maps to NULL. */
   def fingerprint(tokens: ArrayData): Long = {
     val n = tokens.numElements()
     var h = 0L
@@ -63,6 +63,13 @@ object GraftScores {
   /** [[fingerprint]] of a token array with a null slot: outside the
     * fold's range [0, 1e9+7). */
   final val NullFingerprint = -1L
+
+  /** `graft_fingerprint(tokens array<string>) -> bigint` — [[fingerprint]]
+    * with a null token slot giving NULL, like the HOF fold. */
+  def fingerprintOrNull(tokens: ArrayData): java.lang.Long = {
+    val h = fingerprint(tokens)
+    if (h == NullFingerprint) null else h
+  }
 
   /** First Unicode code point of a UTF8String (0 when empty) — the
     * value `ascii(substring(t, 1, 1))` computes. */
@@ -88,7 +95,9 @@ object GraftScores {
 
 /** `graft_word_count(tokens array<string>) -> int` with the word table
   * carried in the expression (stopword tables are compile-time
-  * constants) — see [[GraftScores.wordCount]]. */
+  * constants) — see [[GraftScores.wordCount]]. Hand-written, not a
+  * [[Kernels]] row: the table rides into generated code as a reference
+  * object, which a static call's arguments cannot carry. */
 case class WordCount(child: Expression, words: Seq[String])
     extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes = Seq(ArrayType(StringType))
@@ -107,30 +116,6 @@ case class WordCount(child: Expression, words: Seq[String])
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.plans.GraftScores.wordCount($a, $tableRef);")
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_fingerprint(tokens array<string>) -> bigint` — see
-  * [[GraftScores.fingerprint]]. */
-case class Fingerprint(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_fingerprint"
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any): Any = {
-    val h = GraftScores.fingerprint(a.asInstanceOf[ArrayData])
-    if (h == GraftScores.NullFingerprint) null else h
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""${ev.value} = graft.plans.GraftScores.fingerprint($a);
-         |${ev.isNull} = ${ev.value} == ${GraftScores.NullFingerprint}L;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

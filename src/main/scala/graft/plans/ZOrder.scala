@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.types.{DataType, LongType}
-
 /** Morton (Z-order) curve key for two dimensions — the data-CLUSTERING
   * primitive: sort/range-partition a table by the interleaved key and
   * parquet min/max footer stats become selective on BOTH dimensions at
@@ -33,27 +29,8 @@ object GraftZOrder {
     x
   }
 
-  /** Morton key: bits of a on even positions, bits of b on odd. */
+  /** `graft_zorder(a bigint, b bigint) -> bigint` — Morton key: bits
+    * of a on even positions, bits of b on odd. */
   def interleave(a: Long, b: Long): Long =
     spread(a) | (spread(b) << 1)
-}
-
-/** `graft_zorder(a bigint, b bigint) -> bigint` — codegen'd Morton key. */
-case class ZOrder2(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_zorder"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GraftZOrder.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.GraftZOrder.interleave($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Catalog
 import graft.functions.SimilarityFunctions
+import graft.plans.Kernels
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1455,12 +1456,11 @@ object SimilarityQueries {
       |FROM ranked WHERE n_docs >= 2 AND rn = 1
       |ORDER BY component""".stripMargin
 
-  /** Same top-k as sim_topk_embeddings but through the native Catalyst
-    * `graft_cosine` expression (fused single-loop codegen — see
-    * graft.plans.CosineSimilarity). Bitwise-identical accumulation
+  /** Same top-k as sim_topk_embeddings but through the native
+    * `graft_cosine` kernel (fused single-loop codegen — see
+    * graft.plans.GraftVector.cosine). Bitwise-identical accumulation
     * order, so it hash-matches the same oracle SQL. */
   def simTopkNative(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), SimilarityFunctions.toDoubleArr(col("embedding")).as("qe"))
@@ -1468,7 +1468,7 @@ object SimilarityQueries {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
     c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score", call_function("graft_cosine", col("qe"), col("ce")))
+      .withColumn("score", Kernels.call("graft_cosine", col("qe"), col("ce")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 10)
       .select(col("qid"), col("cid"), col("score"), col("rnk"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Catalog
 import graft.functions.{SimilarityFunctions, TextFunctions}
+import graft.plans.Kernels
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -175,7 +176,7 @@ object TextQueries {
     dupSpansHashedOver(docs(s, dir), SpanW)
 
   private[graft] def dupSpansOver(d: DataFrame, w: Int): DataFrame =
-    dupSpansKeyed(d, w, ts => call_function("graft_span_strings", ts, lit(w)))
+    dupSpansKeyed(d, w, ts => Kernels.call("graft_span_strings", ts, lit(w)))
 
   /** The 100 TB variant: span keys are 8-byte xxhash64 values instead
     * of the span strings, so the df shuffle and semi join carry longs
@@ -184,7 +185,7 @@ object TextQueries {
     * in TextFunctionsSpec; the oracle tier keeps strings so DuckDB
     * reproduces the keys bitwise. */
   private[graft] def dupSpansHashedOver(d: DataFrame, w: Int): DataFrame =
-    dupSpansKeyed(d, w, ts => call_function("graft_span_hashes", ts, lit(w)))
+    dupSpansKeyed(d, w, ts => Kernels.call("graft_span_hashes", ts, lit(w)))
 
   private def dupSpansKeyed(d: DataFrame, w: Int,
                             spanFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
@@ -197,7 +198,6 @@ object TextQueries {
     // hash), TextFunctionsSpec pins kernel == HOF on the real corpus.
     // The explode is checkpointed below because two consumers (span-df
     // agg + semi join) would otherwise re-run it.
-    graft.plans.GraftExtensions.register(d.sparkSession)
     val toks = col("toks")
     val sp = d
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -275,13 +275,12 @@ object TextQueries {
   private[graft] def spanCleanTextOver(d: DataFrame, w: Int): DataFrame = {
     require(!d.columns.contains("__toks"),
       "spanCleanTextOver reserves the internal column name __toks; rename it on the input")
-    graft.plans.GraftExtensions.register(d.sparkSession)
     val toks = col("toks")
     // r17 (guide §4): native positional-span kernel, see dupSpansKeyed
     val sp = d
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"),
-        posexplode(call_function("graft_span_strings", toks, lit(w)))
+        posexplode(Kernels.call("graft_span_strings", toks, lit(w)))
           .as(Seq("p", "span")))
       .select(col("doc_id"), (col("p") + 1).as("i"), col("span"))
       .localCheckpoint(false) // feeds the keeper agg AND the flag join
@@ -1136,9 +1135,8 @@ object TextQueries {
   // jaccardPairsNgram (full 64-bit XXH64; collision odds ~2^-64 per
   // shared-shingle pair, surfaced by the oracle).
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val sh = docs(s, dir).select(col("doc_id"),
-      explode(call_function("graft_shingle_hashes",
+      explode(Kernels.call("graft_shingle_hashes",
         split(col("text"), " "), lit(3))).as("tok"))
     val ev = sh.filter(col("doc_id") % 50 === 0).select("tok").distinct()
     sh.filter(col("doc_id") % 50 =!= 0)
@@ -1590,7 +1588,6 @@ object TextQueries {
     * canonicalized survivors with the same model). */
   private[graft] def perplexityCols(s: SparkSession, dir: String)
       : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
-    graft.plans.GraftExtensions.register(s)
     val toks = split(col("text"), " ")
     val (c2, c1, vocabN) = lmCounts(s, dir)
     // native kernel (r14) — same O(|vocab|)-per-lookup fix as
@@ -1762,7 +1759,6 @@ object TextQueries {
     * so every microbatch of the streaming twin reads the same table),
     * which is what makes the stream==batch parity hold trivially. */
   private[graft] def dsirCols(s: SparkSession, dir: String): (Column, Column) = {
-    graft.plans.GraftExtensions.register(s)
     val (ct, cr, v, tTot, rTot) = dsirCountsCapped(s, dir, LmVocabCap)
     val toks = split(col("text"), " ")
     // native kernel (r14): the HOF formulation's element_at on a

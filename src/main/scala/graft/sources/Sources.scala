@@ -5,6 +5,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.plans.Kernels
 
 /** Source/sink surface beyond the parquet catalog — SURVEY.md §2b
   * "Scans / sources" + "Sinks". The reference reads/writes any
@@ -124,8 +125,7 @@ object Sources {
     * the skip counts against single-column layouts. */
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
                     numFiles: Int): Unit = {
-    import org.apache.spark.sql.functions.{call_function, col, lit, max, min}
-    graft.plans.GraftExtensions.register(df.sparkSession)
+    import org.apache.spark.sql.functions.{col, lit, max, min}
     // Min-max-normalize both dimensions to a common 20-bit resolution
     // before interleaving: raw domains of unequal width would otherwise
     // leave the wider column's high bits alone at the top of the key
@@ -139,7 +139,7 @@ object Sources {
     def norm(c: String, mn: Long, mx: Long) =
       (col(c).cast("long") - lit(mn)) * lit(bits) / lit(mx - mn + 1)
     df.withColumn("__z",
-        call_function("graft_zorder",
+        Kernels.call("graft_zorder",
           norm(colA, b.getLong(0), b.getLong(1)),
           norm(colB, b.getLong(2), b.getLong(3))))
       .repartitionByRange(numFiles, col("__z"))

@@ -10,8 +10,10 @@ import org.apache.spark.sql.graftshim.GraftColumn
   * silently runs interpreted (a WARN line is the only trace). Here each
   * kernel's projection runs with `spark.sql.codegen.fallback=false` and
   * `spark.sql.codegen.factoryMode=CODEGEN_ONLY`, so a compile error fails
-  * the test instead. The input is a repartitioned relation, so the
-  * optimizer cannot fold the projection into a local relation. */
+  * the test instead, and the executed plan must show the kernel's call
+  * inside a whole-stage-codegen `*(n)` node (a `StaticInvoke` outside
+  * one runs through reflection). The input is a repartitioned relation,
+  * so the optimizer cannot fold the projection into a local relation. */
 class KernelCodegenSpec extends SparkSpecBase {
 
   private lazy val input = {
@@ -55,22 +57,38 @@ class KernelCodegenSpec extends SparkSpecBase {
     "graft_editdist" -> call("graft_editdist", col("s"), col("s2"), lit(3)),
     "graft_word_count" -> GraftColumn.of(
       graft.plans.WordCount(GraftColumn.expr(col("toks")), Seq("the", "a"))),
-    "graft_fingerprint" -> GraftColumn.of(graft.plans.Fingerprint(GraftColumn.expr(col("toks")))))
+    "graft_fingerprint" -> call("graft_fingerprint", col("toks")))
 
   test("every session-registered kernel has a codegen case") {
     graft.plans.GraftExtensions.register(spark)
     val registered = spark.sessionState.functionRegistry.listFunction()
       .map(_.funcName).filter(_.startsWith("graft_")).toSet
-    assert(registered.nonEmpty && registered.subsetOf(kernels.map(_._1).toSet),
-      s"no codegen case for ${registered -- kernels.map(_._1)}")
+    val table = graft.plans.Kernels.table.map(_.name).toSet
+    val cases = kernels.map(_._1).toSet
+    assert(table.nonEmpty && table.subsetOf(registered), s"unregistered: ${table -- registered}")
+    assert(registered.subsetOf(cases), s"no codegen case for ${registered -- cases}")
   }
+
+  /** The text a kernel's call prints as in a physical plan: the static
+    * method for a kernel-table row, the function name otherwise. */
+  private def needle(name: String): String =
+    graft.plans.Kernels.table.find(_.name == name) match {
+      case Some(k) => s"${k.owner.getName.stripSuffix("$")}.${k.method}("
+      case None => s"$name("
+    }
 
   for ((name, kernel) <- kernels)
     test(s"$name: generated code compiles (no interpreted fallback)") {
       graft.plans.GraftExtensions.register(spark)
       withConf("spark.sql.codegen.fallback" -> "false",
           "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
-        assert(input.select(kernel.as("k")).collect().length == 2)
+        val df = input.select(kernel.as("k"))
+        assert(df.collect().length == 2)
+        val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+        val lines = plan.linesIterator.filter(_.contains(needle(name))).toSeq
+        assert(lines.nonEmpty, s"${needle(name)} missing from the plan:\n$plan")
+        assert(lines.forall(_.matches("""^[\s:+-]*\*\(\d+\) .*""")),
+          s"$name runs outside whole-stage codegen:\n$plan")
       }
     }
 }

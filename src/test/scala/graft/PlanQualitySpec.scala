@@ -196,8 +196,12 @@ class PlanQualitySpec extends SparkSpecBase {
     // the scale property: nothing in this plan explodes SHINGLES — the
     // only explode is the per-doc band keys (bands per doc, constant),
     // so no inverted-index relation exists to self-join
-    assert(!p.contains("graft_shingle_hashes(") ||
-      !p.linesIterator.exists(l => l.contains("Generate") && l.contains("graft_shingle_hashes")),
+    // (the shingle-hash call itself sits below the localCheckpoint, so
+    // the check is over the Generate lines that do exist: the band keys)
+    assert(p.linesIterator.exists(l => l.contains("Generate") && l.contains("sig#")),
+      "band keys must be exploded from the per-doc signature")
+    assert(!p.contains("GraftHashes.shingleHashes(") ||
+      !p.linesIterator.exists(l => l.contains("Generate") && l.contains("GraftHashes.shingleHashes(")),
       "shingle hashes must stay as per-doc arrays, never exploded")
   }
 
@@ -210,7 +214,7 @@ class PlanQualitySpec extends SparkSpecBase {
     // the verify joins must carry candidate ids back to the per-doc
     // ARRAYS (pair-local intersect-count kernel, r18 — previously
     // size(array_intersect)), not re-join the index
-    assert(p.contains("graft_intersect_count"),
+    assert(p.contains("GraftSets.intersectCount("),
       "prefix tier must verify pair-locally over the shingle arrays")
   }
 
@@ -251,7 +255,7 @@ class PlanQualitySpec extends SparkSpecBase {
     // explode is the constant-width band keys, so no inverted-index
     // relation exists for the keeper pipeline to self-join
     assert(!p.linesIterator.exists(l =>
-      l.contains("Generate") && l.contains("graft_shingle_hashes")),
+      l.contains("Generate") && l.contains("GraftHashes.shingleHashes(")),
       "keeper must not explode shingles into an inverted index")
   }
 
@@ -717,7 +721,7 @@ class PlanQualitySpec extends SparkSpecBase {
     // n×k cosine lives inside the fused kernel, no join, no Exchange
     val scored = graft.functions.SimilarityFunctions.semanticScored(e, leaders)
     val sp = plan(scored)
-    assert(sp.contains("graft_cosine_many"), "assignment must use the fused kernel")
+    assert(sp.contains("GraftVector.cosineMany("), "assignment must use the fused kernel")
     assert(!sp.contains("Exchange"), s"assignment must be scan-local:\n$sp")
     assert(!sp.contains("Join"), "assignment must not join the leader matrix")
     // candidate pairs: hash/merge join keyed on cluster, never a

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.SimilarityFunctions
-import graft.plans.GraftExtensions
+import graft.plans.{GraftExtensions, Kernels}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
@@ -169,7 +169,7 @@ class PlansSpec extends SparkSpecBase {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val arr = Literal.create(Array(3.0, 4.0), ArrayType(DoubleType))
-    val e = graft.plans.CosineSimilarity(arr, arr)
+    val e = Kernels.build("graft_cosine", Seq(arr, arr)).replacement
     assert(math.abs(e.eval(null).asInstanceOf[Double] - 1.0) < 1e-12)
   }
 
@@ -188,12 +188,11 @@ class PlansSpec extends SparkSpecBase {
   }
 
   test("graft_fingerprint: a null token slot is NULL, like the HOF it replaced") {
-    import org.apache.spark.sql.graftshim.GraftColumn
     val df = Seq(Seq("ab", null, "c"), Seq(null), Seq("ab", "c"), Seq.empty[String]).toDF("t")
     val hof = aggregate(
       transform($"t", t => (length(t) * lit(131) + ascii(substring(t, 1, 1))).cast("long")),
       lit(0L), (h, x) => (h * lit(31L) + x) % lit(1000000007L))
-    val kernel = GraftColumn.of(graft.plans.Fingerprint(GraftColumn.expr($"t")))
+    val kernel = Kernels.call("graft_fingerprint", $"t")
     val rows = df.select(kernel.as("k"), hof.as("h"))
       .as[(Option[Long], Option[Long])].collect()
     rows.foreach { case (k, h) => assert(k == h, s"kernel $k != HOF $h") }
@@ -201,7 +200,51 @@ class PlansSpec extends SparkSpecBase {
     // interpreted path agrees with codegen
     val lit3 = org.apache.spark.sql.catalyst.expressions.Literal.create(
       Array("ab", null, "c"), ArrayType(StringType))
-    assert(graft.plans.Fingerprint(lit3).eval(null) == null)
+    assert(Kernels.build("graft_fingerprint", Seq(lit3)).replacement.eval(null) == null)
+  }
+
+  // A null token slot: the seven token kernels drop it, so
+  // k(t) == k(filter(t, x -> x is not null)) (the rule graft_minhash_hashes
+  // pins for null hashes); graft_match_count counts it as a non-match.
+  private val nullSlotTokens =
+    Seq(Seq("the", null, "cat", "sat", null, "the", "cat"), Seq(null, null), Seq("a", null))
+  for ((name, params) <- Seq(
+      "graft_shingle_hashes" -> Seq(2), "graft_shingle_strings" -> Seq(2),
+      "graft_span_strings" -> Seq(2), "graft_span_hashes" -> Seq(2),
+      "graft_minhash" -> Seq(2, 8), "graft_simhash" -> Nil, "graft_simhash_wide" -> Seq(2)))
+    test(s"$name drops a null token slot: == $name(filter(t, x -> x is not null))") {
+      val ps = params.map(lit(_))
+      val rows = nullSlotTokens.toDF("t").select(
+        call_function(name, $"t" +: ps: _*),
+        call_function(name, filter($"t", _.isNotNull) +: ps: _*)).collect()
+      rows.foreach(r => assert(r.get(0) == r.get(1), s"$name: ${r.get(0)} != ${r.get(1)}"))
+    }
+
+  test("graft_match_count counts a null slot as a non-match, like its HOF") {
+    val df = Seq(
+      (Seq("a", null, "c", null, "e"), Seq("a", null, "x", "d", "e")),
+      (Seq[String](null), Seq[String](null))).toDF("a", "b")
+    val rows = df.select(
+      call_function("graft_match_count", $"a", $"b"),
+      size(filter(zip_with($"a", $"b", _ === _), m => m))).as[(Int, Int)].collect()
+    assert(rows.toSeq == Seq((2, 2), (0, 0)))
+  }
+
+  test("kernel parameters must be integer literals, through SQL and Kernels.call") {
+    val df = Seq((Seq("a", "b", "c"), 2)).toDF("t", "n")
+    def rejects(param: String)(body: => Any): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](body)
+      assert(e.getMessage.contains(s"$param must be an integer literal"), e.getMessage)
+    }
+    rejects("n")(df.select(Kernels.call("graft_shingle_hashes", $"t", $"n")))
+    rejects("nPlanes")(df.select(Kernels.call("graft_lsh_buckets",
+      $"t".cast("array<double>"), lit(0), lit(8L), lit(2))))
+    df.createOrReplaceTempView("kernel_params")
+    rejects("nShingle")(spark.sql("SELECT graft_minhash(t, n, 8) FROM kernel_params"))
+    rejects("threshold")(df.select(call_function("graft_editdist", $"t"(0), $"t"(1), $"n")))
+    // the literal forms of the same calls analyze
+    df.select(Kernels.call("graft_shingle_hashes", $"t", lit(2)),
+      call_function("graft_editdist", $"t"(0), $"t"(1), lit(2)))
   }
 
   test("LongSet: a capacity past the table limit fails fast instead of wrapping") {
