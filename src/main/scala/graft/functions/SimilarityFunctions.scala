@@ -63,13 +63,123 @@ object SimilarityFunctions {
       .withColumn("qn", sqrt(dotN(col("qe"), col("qe"))))
     val c = candidates.select(col("vec_id").as("cid"), toDoubleArr(col("embedding")).as("ce"))
       .withColumn("cn", sqrt(dotN(col("ce"), col("ce"))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score", dotN(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+      .withColumn("score", dotN(col("qe"), col("ce")) / (col("qn") * col("cn"))), k)
   }
+
+  // --- the candidate -> verify skeleton ----------------------------------
+  //
+  // Every pair and top-k tier below is one configuration of the same
+  // shape: generate candidate ids (band self-join, prefix index,
+  // multiprobe buckets, IVF cells), dedupe them, re-attach the payload
+  // by id, score, then keep a threshold or the top k per query. The
+  // four plan functions below write that shape once; each tier picks a
+  // candidate generator and a verifier.
+
+  /** Candidate pairs of a banded relation: the equi self-join on the
+    * band `keys` with `a.id < b.id`. Only ids go through the join's
+    * output and the `distinct` — payloads re-attach afterwards
+    * ([[verifyPairs]]), so the dedup shuffle carries two longs per
+    * candidate at any corpus size. Returns (ida, idb). */
+  private[graft] def bandPairs(keyed: DataFrame, id: String,
+                               keys: Seq[String]): DataFrame =
+    keyed.as("a")
+      .join(keyed.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("ida"), col(s"b.$id").as("idb"))
+      .distinct()
+
+  /** Verify candidate pairs: attach `side`'s `payload` columns by
+    * `ida` and then by `idb` (payload column `p` arrives as `pa` and
+    * `pb`), add the `score` columns in order (each its own projection,
+    * so a kernel result read twice by a later column runs once), keep
+    * the rows passing `keep`, and return (ida, idb) plus `out` — by
+    * default the last score column. `cand`'s other columns ride along
+    * and may be read by the score or named in `out`. */
+  private[graft] def verifyPairs(cand: DataFrame, side: DataFrame, id: String,
+                                 payload: String*)(
+      score: Seq[(String, Column)], keep: Column = lit(true),
+      out: Seq[String] = Nil): DataFrame = {
+    def attach(s: String): DataFrame =
+      side.select(col(id).as(s"id$s") +: payload.map(p => col(p).as(p + s)): _*)
+    score
+      .foldLeft(cand.join(attach("a"), "ida").join(attach("b"), "idb")) {
+        case (df, (name, c)) => df.withColumn(name, c)
+      }
+      .filter(keep)
+      .select((Seq("ida", "idb") ++ (if (out.isEmpty) Seq(score.last._1) else out))
+        .map(col): _*)
+  }
+
+  /** Multiprobe LSH candidates: `c` (cid, ce, ...) keyed by its
+    * `tables` hyperplane-bucket ids (optionally capped at `maxBucket`
+    * lowest cids per bucket, [[capHotKeys]]), probed by every query of
+    * `q` (qid, qe, ...) at each bucket within `probeHamming` sign-bit
+    * flips of its own ([[flipMasks]]). The probe relation (queries ×
+    * tables × masks) is broadcast; only ids leave the join and the
+    * `distinct`. Returns (qid, cid). */
+  private[graft] def probePairs(q: DataFrame, c: DataFrame, planes: Int,
+                                tables: Int, probeHamming: Int,
+                                maxBucket: Option[Int] = None): DataFrame = {
+    val probes = lshKeyed(q, "qid", "qe", planes, tables).select(col("qid"), col("tbl"),
+      explode(array(flipMasks(planes, probeHamming)
+        .map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
+    val keyed = lshKeyed(c, "cid", "ce", planes, tables)
+    maxBucket.fold(keyed)(capHotKeys(keyed, "cid", Seq("tbl", "bucket"), _))
+      .join(broadcast(probes), Seq("tbl", "bucket"))
+      .filter(col("qid") =!= col("cid"))
+      .select("qid", "cid")
+      .distinct()
+  }
+
+  /** The C(planes, ≤h) sign-bit flip masks of multiprobe, generated
+    * combinatorially so wide auto-plane buckets never enumerate 2^p
+    * masks; the oracle twins inline the same list as integer literals. */
+  private[graft] def flipMasks(planes: Int, h: Int): Seq[Long] =
+    (0 to h).flatMap(k =>
+      (0 until planes).combinations(k).map(_.foldLeft(0L)((m, i) => m | (1L << i))))
+
+  /** Per-query top k: the rows of `scored` (qid, cid, `score`, ...) with
+    * row_number() over (qid; `score` desc — asc when `ascending` —,
+    * cid) <= k, as (qid, cid, `score`, rnk). */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int,
+                                  score: String = "score",
+                                  ascending: Boolean = false): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    scored
+      .withColumn("rnk",
+        row_number().over(Window.partitionBy(col("qid")).orderBy(order, col("cid"))))
+      .filter(col("rnk") <= k)
+      .select(col("qid"), col("cid"), col(score), col("rnk"))
+  }
+
+  /** (id, tbl, bucket): one row per hyperplane table, bucket ids from
+    * the native graft_lsh_buckets kernel (codegen'd single pass; bitwise
+    * the lshBucket HOF and the DuckDB oracle's sign folds). The kernel
+    * sits inside the posexplode, not in a column of its own: Spark
+    * infers a `size(x) > 0 AND isnotnull(x)` filter for an exploded
+    * COLUMN and pushes it below the projection, which evaluates the
+    * kernel a second time per row. */
+  private def lshKeyed(v: DataFrame, id: String, vec: String, planes: Int,
+                       tables: Int): DataFrame =
+    v.select(col(id), posexplode(Kernels.call("graft_lsh_buckets",
+      col(vec), lit(0), lit(planes), lit(tables))).as(Seq("tbl", "bucket")))
+
+  /** |A∩B| / |A∪B| from the intersection and the two set sizes. */
+  private[graft] def jaccardOf(c: Column, na: Column, nb: Column): Column =
+    c.cast("double") / (na + nb - c).cast("double")
+
+  /** Exact Jaccard verify over per-doc distinct shingle-hash arrays
+    * (`base`: doc_id, sh) — shared by the LSH and prefix tiers.
+    * graft_intersect_count == size(array_intersect) (PlansSpec pin)
+    * without materializing the intersection array per candidate pair. */
+  private def jaccardVerify(cand: DataFrame, base: DataFrame,
+                            minJaccard: Double): DataFrame =
+    verifyPairs(cand, base, "doc_id", "sh")(Seq(
+      "c" -> Kernels.call("graft_intersect_count", col("sha"), col("shb")),
+      "jaccard" -> jaccardOf(col("c"), size(col("sha")), size(col("shb")))),
+      col("jaccard") >= minJaccard)
 
   // --- exact n-gram/token Jaccard (oracle tier) ------------------------
 
@@ -190,26 +300,8 @@ object SimilarityFunctions {
     val banded = capHotKeys(
       base.select(col("doc_id"),
         posexplode(bandKeys(col("sig"), bands)).as(Seq("band", "band_key"))),
-      Seq("band", "band_key"), maxBucket)
-    val pairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-      .distinct()
-    pairs
-      .join(base.select(col("doc_id").as("ida"), col("sh").as("sha")), "ida")
-      .join(base.select(col("doc_id").as("idb"), col("sh").as("shb")), "idb")
-      // r18 (guide §4): graft_intersect_count == size(array_intersect)
-      // (PlansSpec pin) without materializing the intersection array
-      // per candidate pair
-      .withColumn("c", Kernels.call("graft_intersect_count",
-        col("sha"), col("shb")))
-      .withColumn("jaccard", col("c").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("ida", "idb", "jaccard")
+      "doc_id", Seq("band", "band_key"), maxBucket)
+    jaccardVerify(bandPairs(banded, "doc_id", Seq("band", "band_key")), base, minJaccard)
   }
 
   /** EXACT n-gram Jaccard pairs via prefix filtering (the AllPairs /
@@ -363,17 +455,7 @@ object SimilarityFunctions {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("ida"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("idb"))
       .distinct()
-    cand
-      .join(base.select(col("doc_id").as("ida"), col("sh").as("sha")), "ida")
-      .join(base.select(col("doc_id").as("idb"), col("sh").as("shb")), "idb")
-      // r18 (guide §4): same fused intersect-count kernel as the LSH
-      // tier's verify — see there
-      .withColumn("c", Kernels.call("graft_intersect_count",
-        col("sha"), col("shb")))
-      .withColumn("jaccard", col("c").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("c")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("ida", "idb", "jaccard")
+    jaccardVerify(cand, base, minJaccard)
   }
 
   /** Drop every row whose `keyCols` group exceeds `cap` members.
@@ -392,15 +474,17 @@ object SimilarityFunctions {
     * removal: a token in >maxDf docs carries no dedup signal). LSH
     * band buckets use [[capHotKeys]] instead — see there. */
   private def dropHotKeys(rel: DataFrame, keyCols: Seq[String],
-                          cap: Int): DataFrame = {
-    val hot = rel.groupBy(keyCols.map(col): _*)
+                          cap: Int): DataFrame =
+    rel.join(broadcast(hotKeys(rel, keyCols, cap)), keyCols, "left_anti")
+
+  /** The `keyCols` groups of `rel` with more than `cap` rows. */
+  private def hotKeys(rel: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
+    rel.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > cap)
       .select(keyCols.map(col): _*)
-    rel.join(broadcast(hot), keyCols, "left_anti")
-  }
 
-  /** Cap every `keyCols` group at its `cap` LOWEST-`doc_id` members
+  /** Cap every `keyCols` group at its `cap` LOWEST-`id` members
     * (keep-first-N), instead of dropping over-cap groups whole.
     *
     * This is the BATCH half of the unified hot-bucket semantic: the
@@ -422,17 +506,17 @@ object SimilarityFunctions {
     * of hot buckets — rare by construction — semi-joined out by
     * broadcast; the big cold relation never shuffles. A single
     * degenerate bucket ranks in one window partition, bounded by that
-    * bucket's size, not the corpus. */
-  private[graft] def capHotKeys(rel: DataFrame, keyCols: Seq[String],
-                                cap: Int): DataFrame = {
-    val keys = keyCols.map(col)
-    val hot = rel.groupBy(keys: _*)
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > cap)
-      .select(keys: _*)
+    * bucket's size, not the corpus.
+    *
+    * With `id` unique within each group (every banded relation here:
+    * one row per id per band/table/word) the result equals, as a set,
+    * the uniform `row_number() over (keys order by id) <= cap` that the
+    * oracle twins replay as one QUALIFY — SimilaritySpec pins it. */
+  private[graft] def capHotKeys(rel: DataFrame, id: String,
+                                keyCols: Seq[String], cap: Int): DataFrame = {
+    val hot = hotKeys(rel, keyCols, cap)
     val cold = rel.join(broadcast(hot), keyCols, "left_anti")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys: _*).orderBy(col("doc_id"))
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(id))
     val cappedHot = rel.join(broadcast(hot), keyCols, "left_semi")
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") <= cap)
@@ -455,13 +539,9 @@ object SimilarityFunctions {
       .join(capped.as("b"), col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
       .agg(count(lit(1)).as("c"))
-    inter
-      .join(sizes.select(col("doc_id").as("ida"), col("n").as("na")), "ida")
-      .join(sizes.select(col("doc_id").as("idb"), col("n").as("nb")), "idb")
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("ida", "idb", "jaccard")
+    verifyPairs(inter, sizes, "doc_id", "n")(
+      Seq("jaccard" -> jaccardOf(col("c"), col("na"), col("nb"))),
+      col("jaccard") >= minJaccard)
   }
 
   // --- MinHash + LSH (scale tier) --------------------------------------
@@ -530,24 +610,14 @@ object SimilarityFunctions {
     val sigs = sigsIn.localCheckpoint(false)
     val bandedAll = sigs.select(col("doc_id"),
       posexplode(bandKeys(col("sig"), bands)).as(Seq("band", "band_key")))
-    val banded = capHotKeys(bandedAll, Seq("band", "band_key"), maxBucket)
+    val banded = capHotKeys(bandedAll, "doc_id", Seq("band", "band_key"), maxBucket)
     // Candidate pairs carry only ids through the shuffle+distinct; the
     // signatures (small: docs x numHashes longs) re-join afterwards —
     // broadcast when they fit, one pair-keyed shuffle when not.
-    val pairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-      .distinct()
-    pairs
-      .join(sigs.select(col("doc_id").as("ida"), col("sig").as("siga")), "ida")
-      .join(sigs.select(col("doc_id").as("idb"), col("sig").as("sigb")), "idb")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("siga"), col("sigb"), (x, y) => x === y), x => x))
-          .cast("double") / size(col("siga")).cast("double"))
-      .select("ida", "idb", "est_jaccard")
+    verifyPairs(bandPairs(banded, "doc_id", Seq("band", "band_key")), sigs,
+      "doc_id", "sig")(Seq("est_jaccard" ->
+        (size(filter(zip_with(col("siga"), col("sigb"), (x, y) => x === y), x => x))
+          .cast("double") / size(col("siga")).cast("double"))))
   }
 
   // --- SimHash (scale tier) --------------------------------------------
@@ -599,19 +669,10 @@ object SimilarityFunctions {
         .as(Seq("w", "word")))
     // hot-word cap: same quadratic-bucket safety valve as minhash LSH
     // (keep-first-N — unified with the streaming freeze-at-cap)
-    val words = capHotKeys(wordsAll, Seq("w", "word"), maxBucket)
-    val cand = words.as("a")
-      .join(words.as("b"),
-        col("a.w") === col("b.w") && col("a.word") === col("b.word") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-      .distinct()
-    cand
-      .join(h.select(col("doc_id").as("ida"), col("simhash").as("ha")), "ida")
-      .join(h.select(col("doc_id").as("idb"), col("simhash").as("hb")), "idb")
-      .withColumn("dist", hamming(col("ha"), col("hb")))
-      .filter(col("dist") <= maxHamming)
-      .select("ida", "idb", "dist")
+    val words = capHotKeys(wordsAll, "doc_id", Seq("w", "word"), maxBucket)
+    verifyPairs(bandPairs(words, "doc_id", Seq("w", "word")), h, "doc_id", "simhash")(
+      Seq("dist" -> hamming(col("simhasha"), col("simhashb"))),
+      col("dist") <= maxHamming)
   }
 
   /** Corpus-size ceiling for the 4×16-bit banding of [[simhashPairs]]:
@@ -697,19 +758,10 @@ object SimilarityFunctions {
     val h = simhashWide(docs, textCol, words).localCheckpoint(false)
     val wordsAll = h.select(col("doc_id"),
       posexplode(col("fps")).as(Seq("w", "word")))
-    val banded = capHotKeys(wordsAll, Seq("w", "word"), maxBucket)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.w") === col("b.w") && col("a.word") === col("b.word") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-      .distinct()
-    cand
-      .join(h.select(col("doc_id").as("ida"), col("fps").as("fa")), "ida")
-      .join(h.select(col("doc_id").as("idb"), col("fps").as("fb")), "idb")
-      .withColumn("dist", fpHamming(col("fa"), col("fb")))
-      .filter(col("dist") <= maxHamming)
-      .select("ida", "idb", "dist")
+    val banded = capHotKeys(wordsAll, "doc_id", Seq("w", "word"), maxBucket)
+    verifyPairs(bandPairs(banded, "doc_id", Seq("w", "word")), h, "doc_id", "fps")(
+      Seq("dist" -> fpHamming(col("fpsa"), col("fpsb"))),
+      col("dist") <= maxHamming)
   }
 
   // --- edit-distance near-dup: pigeonhole banding (scale tier) ---------
@@ -780,14 +832,10 @@ object SimilarityFunctions {
       .join(shortDocs.select(col("id").as("idb"), col("l").as("lb"), col("n").as("nb")),
         col("la") === col("lb") && col("na") === col("nb") && col("ida") < col("idb"))
       .select("ida", "idb")
-    val cand = banded.union(shortPairs).distinct()
-    cand
-      .join(c.select(col("doc_id").as("ida"), col("text").as("ta")), "ida")
-      .join(c.select(col("doc_id").as("idb"), col("text").as("tb")), "idb")
-      .withColumn("dist", Kernels.call("graft_editdist",
-        col("ta"), col("tb"), lit(maxDist)))
-      .filter(col("dist") >= 0)
-      .select("ida", "idb", "dist")
+    verifyPairs(banded.union(shortPairs).distinct(), c, "doc_id", "text")(
+      Seq("dist" -> Kernels.call("graft_editdist",
+        col("texta"), col("textb"), lit(maxDist))),
+      col("dist") >= 0)
   }
 
   // --- hyperplane-LSH ANN (scale tier) ---------------------------------
@@ -897,9 +945,8 @@ object SimilarityFunctions {
     scanParts * 2 <= width && bytes >= width * minPartBytes
 
   /** Per-partition byte floor under which a corpus is "small" for
-    * [[shouldWiden]] (compressed input bytes; env-tunable). */
-  private[graft] val PrepMinPartBytes: Long =
-    sys.env.getOrElse("GRAFT_PREP_MIN_PART_BYTES", (256L * 1024).toString).toLong
+    * [[shouldWiden]] (compressed input bytes). */
+  private[graft] val PrepMinPartBytes: Long = 256L * 1024
 
   /** Total compressed bytes behind a DataFrame's file scan (0 for
     * in-memory relations — those never need the widen shuffle). Driver
@@ -950,8 +997,7 @@ object SimilarityFunctions {
   private[graft] def widenTextScan(df: DataFrame): DataFrame =
     widenForCheckpoint(df, TextMinPartBytes)
 
-  private[graft] val TextMinPartBytes: Long =
-    sys.env.getOrElse("GRAFT_TEXT_MIN_PART_BYTES", (8L * 1024).toString).toLong
+  private[graft] val TextMinPartBytes: Long = 8L * 1024
 
   /** (id, vec, norm) projection, materialized once — it is reused on
     * both sides of the candidate join and both verify joins (and the
@@ -965,26 +1011,12 @@ object SimilarityFunctions {
 
   private def cosineLshPairsOver(v: DataFrame, nTables: Int,
                                  planesPerTable: Int, minCos: Double): DataFrame = {
-    // Buckets via the native graft_lsh_buckets kernel (codegen'd single
-    // pass; bitwise equal to the lshBucket HOF and the DuckDB oracle).
     // The bucket projection sits ABOVE the checkpoint: only the keyed
     // branch computes it; the verify joins read (id, e, n) alone.
-    val keyed = v
-      .withColumn("bks", Kernels.call("graft_lsh_buckets",
-        col("e"), lit(0), lit(planesPerTable), lit(nTables)))
-      .select(col("vec_id"), posexplode(col("bks")).as(Seq("tbl", "bucket")))
-    val cand = keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"))
-      .distinct()
-    cand
-      .join(v.select(col("vec_id").as("ida"), col("e").as("ea"), col("n").as("an")), "ida")
-      .join(v.select(col("vec_id").as("idb"), col("e").as("eb"), col("n").as("bn")), "idb")
-      .withColumn("score", dotN(col("ea"), col("eb")) / (col("an") * col("bn")))
-      .filter(col("score") >= minCos)
-      .select("ida", "idb", "score")
+    val keyed = lshKeyed(v, "vec_id", "e", planesPerTable, nTables)
+    verifyPairs(bandPairs(keyed, "vec_id", Seq("tbl", "bucket")), v, "vec_id", "e", "n")(
+      Seq("score" -> dotN(col("ea"), col("eb")) / (col("na") * col("nb"))),
+      col("score") >= minCos)
   }
 
   // --- IVF ANN (scale tier) --------------------------------------------
@@ -1201,25 +1233,39 @@ object SimilarityFunctions {
       .withColumn("__p", explode(slice(col("__ranked"), 1, nprobe)))
       .select(col("qid"), col("fp").as("qf"),
         col("__p").getField("cid").as("centroid_id"))
-    val wHam = Window.partitionBy(col("qid")).orderBy(col("ham").asc, col("cid"))
-    val cand = index
+    val cand = fpRankCap(index
       .join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("ham", fpHamming(col("qf"), col("cf")))
-      .select(col("qid"), col("cid"), col("ham"))
-      .withColumn("hr", row_number().over(wHam))
-      .filter(col("hr") <= maxCandidates)
-      .select("qid", "cid")
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    cand
+      .filter(col("qid") =!= col("cid")), maxCandidates)
+    topKPerQuery(cand
       .join(broadcast(qv.select("qid", "qe")), "qid")
       .join(cv.select(col("vec_id").as("cid"), col("v").as("ce")), "cid")
       .withColumn("score", Kernels.call("graft_cosine", col("qe"), col("ce")))
-      .select(col("qid"), col("cid"), col("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+      .select(col("qid"), col("cid"), col("score")), topK)
   }
+
+  /** 64-bit sign-fingerprint words under planes starting at `base` —
+    * an array so the estimator width (`fpBits`) is tunable: σ(θ) ≈
+    * π/√(4·bits), so 256 bits halve the 128-bit ranking noise for two
+    * extra longs per row. */
+  private def fpWords(vec: Column, base: Int, nWords: Int): Column =
+    array((0 until nWords).map(w =>
+      Kernels.call("graft_lsh_bits", vec, lit(base + 64 * w), lit(64))): _*)
+
+  /** Hamming distance between two fingerprint-word arrays. */
+  private def fpHamming(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
+      lit(0), (acc, x) => acc + x)
+
+  /** The fingerprint-ranked candidate cap of the ANN tiers: candidates
+    * (qid, cid, qf, cf) ranked per query by the hamming distance of
+    * their sign fingerprints (ties by cid); only the `maxCandidates`
+    * closest per query survive to exact scoring, so per-query verify
+    * cost stays corpus-independent however wide the probe net is.
+    * Returns (qid, cid). */
+  private def fpRankCap(cand: DataFrame, maxCandidates: Int): DataFrame =
+    topKPerQuery(cand.withColumn("ham", fpHamming(col("qf"), col("cf"))),
+      maxCandidates, "ham", ascending = true)
+      .select("qid", "cid")
 
   /** Bucketed ANN with multi-table OR-amplification plus MULTIPROBE
     * (the standard LSH index shape): `nTables` independent hyperplane
@@ -1248,19 +1294,6 @@ object SimilarityFunctions {
     * 64-double vectors re-attach by id-equi join only for the capped
     * survivors. Recall is measured against cosineTopK in tests AND
     * surfaced as the `ann_lsh_recall` query. */
-  /** 64-bit sign-fingerprint words under planes starting at `base` —
-    * an array so the estimator width (`fpBits`) is tunable: σ(θ) ≈
-    * π/√(4·bits), so 256 bits halve the 128-bit ranking noise for two
-    * extra longs per row. */
-  private def fpWords(vec: Column, base: Int, nWords: Int): Column =
-    array((0 until nWords).map(w =>
-      Kernels.call("graft_lsh_bits", vec, lit(base + 64 * w), lit(64))): _*)
-
-  /** Hamming distance between two fingerprint-word arrays. */
-  private def fpHamming(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
-      lit(0), (acc, x) => acc + x)
-
   def annLshTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                  nPlanes: Int = 8, dim: Int = 64, nTables: Int = 12,
                  probeHamming: Int = 2, maxCandidates: Int = 256,
@@ -1295,43 +1328,16 @@ object SimilarityFunctions {
     val cv = withKeys(candidates, "cid", "ce")
       .withColumn("cn", sqrt(dotN(col("ce"), col("ce"))))
       .localCheckpoint(false)
-    def tableBuckets(vec: Column): Column =
-      Kernels.call("graft_lsh_buckets", vec, lit(0), lit(nPlanes), lit(nTables))
-    val cKeyed = cv.select(col("cid"),
-      posexplode(tableBuckets(col("ce"))).as(Seq("tbl", "bucket")))
-    val qKeyed = qv.select(col("qid"),
-      posexplode(tableBuckets(col("qe"))).as(Seq("tbl", "bucket")))
-    // multiprobe: all bucket perturbations with <= probeHamming bit
-    // flips, generated combinatorially (C(p,0..h) masks) — the earlier
-    // 0..2^p enumeration was fine at the literal 8 planes but is
-    // 2^16+ scans once the auto knob widens the bucket space
-    val masks: Seq[Long] = (0 to probeHamming).flatMap(h =>
-      (0 until nPlanes).combinations(h).map(_.foldLeft(0L)((m, i) => m | (1L << i))))
-    val probes = qKeyed.select(col("qid"), col("tbl"),
-      explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    // candidate generation: hash join on (table, bucket); ids only
-    // through the join + distinct (VERDICT r2: never shuffle vectors
-    // into the dedup). Then rank by fingerprint hamming and cap.
-    val wHam = Window.partitionBy(col("qid"))
-      .orderBy(col("ham").asc, col("cid"))
-    val cand = cKeyed.join(broadcast(probes), Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-      .distinct()
+    // ids only through the probe join + distinct (VERDICT r2: never
+    // shuffle vectors into the dedup); then rank by fingerprint hamming
+    // and cap
+    val cand = fpRankCap(probePairs(qv, cv, nPlanes, nTables, probeHamming)
       .join(broadcast(qv.select(col("qid"), col("fp").as("qf"))), "qid")
-      .join(cv.select(col("cid"), col("fp").as("cf")), "cid")
-      .withColumn("ham", fpHamming(col("qf"), col("cf")))
-      .withColumn("hr", row_number().over(wHam))
-      .filter(col("hr") <= maxCandidates)
-      .select("qid", "cid")
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    cand
+      .join(cv.select(col("cid"), col("fp").as("cf")), "cid"), maxCandidates)
+    topKPerQuery(cand
       .join(broadcast(qv.select("qid", "qe", "qn")), "qid")
       .join(cv.select("cid", "ce", "cn"), "cid")
-      .withColumn("score", dotN(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+      .withColumn("score", dotN(col("qe"), col("ce")) / (col("qn") * col("cn"))), k)
   }
 
   /** PORTABLE-oracle ANN top-k (r15 verdict item 3): the same
@@ -1357,11 +1363,9 @@ object SimilarityFunctions {
                          maxCos: Option[Double] = None,
                          maxBucket: Option[Int] = None): DataFrame = {
     val cv = cosinePrep(candidates)
+      .select(col("vec_id").as("cid"), col("e").as("ce"), col("n").as("cn"))
     val qv = cosinePrep(queries)
-    def keyed(v: DataFrame, id: String): DataFrame = v
-      .withColumn("bks", Kernels.call("graft_lsh_buckets",
-        col("e"), lit(0), lit(planesPerTable), lit(nTables)))
-      .select(col("vec_id").as(id), posexplode(col("bks")).as(Seq("tbl", "bucket")))
+      .select(col("vec_id").as("qid"), col("e").as("qe"), col("n").as("qn"))
     // candidate-side occupancy cap (hard-negative tier): each
     // (table, bucket) enrolls only its `maxBucket` lowest vec_ids —
     // deterministic, so a SQL twin replays it with one QUALIFY
@@ -1370,36 +1374,16 @@ object SimilarityFunctions {
     // distinct measured OOM at the sf10 rung: ~350k candidate rows per
     // query at 780/bucket occupancy). The portable top-k anchor stays
     // cap-free — its recall contract is completeness at the gate SFs.
-    def capped(kdf: DataFrame, id: String): DataFrame = maxBucket.fold(kdf) { cap =>
-      val w = Window.partitionBy(col("tbl"), col("bucket")).orderBy(col(id))
-      kdf.withColumn("__r", row_number().over(w))
-        .filter(col("__r") <= cap).drop("__r")
-    }
-    // C(planes, 0..h) flip masks — the annLshTopK multiprobe, mirrored
-    // literally in the oracle SQL (each mask is an integer literal)
-    val masks: Seq[Long] = (0 to probeHamming).flatMap(h =>
-      (0 until planesPerTable).combinations(h)
-        .map(_.foldLeft(0L)((m, i) => m | (1L << i))))
-    val probes = keyed(qv, "qid").select(col("qid"), col("tbl"),
-      explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val cand = capped(keyed(cv, "cid"), "cid").join(broadcast(probes), Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-      .distinct()
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    cand
-      .join(broadcast(qv.select(col("vec_id").as("qid"),
-        col("e").as("qe"), col("n").as("qn"))), "qid")
-      .join(cv.select(col("vec_id").as("cid"),
-        col("e").as("ce"), col("n").as("cn")), "cid")
+    // The flip masks are mirrored literally in the oracle SQL.
+    val cand = probePairs(qv, cv, planesPerTable, nTables, probeHamming, maxBucket)
+    topKPerQuery(cand
+      .join(broadcast(qv), "qid")
+      .join(cv, "cid")
       .withColumn("score", dotN(col("qe"), col("ce")) / (col("qn") * col("cn")))
       // hard-negative mode: drop probable POSITIVES (near-identical
       // vectors — an exact/near dup is not a negative) BEFORE ranking,
       // so the k slots fill with the closest surviving negatives
-      .filter(maxCos.map(t => col("score") < t).getOrElse(lit(true)))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+      .filter(maxCos.map(t => col("score") < t).getOrElse(lit(true))), k)
   }
 
   /** The PRODUCTION ANN configuration: portable literal-plane LSH
@@ -1425,45 +1409,38 @@ object SimilarityFunctions {
                      maxBucket: Option[Int] = None): DataFrame = {
     val cvd = candidates.select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
     val qvd = queries.select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
-    // one exact map-side max-agg; broadcast as a 1-row scalar attach
-    val scale = cvd.agg(max(aggregate(col("e"), lit(0.0),
-      (acc, x) => greatest(acc, abs(x)))).as("m"))
-    def quant(v: DataFrame): DataFrame = v.crossJoin(broadcast(scale))
-      .select(col("vec_id"),
-        transform(col("e"), x => round(x / col("m") * 127, 0).cast("int")).as("qv"))
-      .withColumn("nrm", sqrt(dotLongN(col("qv"), col("qv")).cast("double")))
-      .filter(col("nrm") > 0.0)
-    def keyed(v: DataFrame, id: String): DataFrame = v
-      .withColumn("bks", Kernels.call("graft_lsh_buckets",
-        col("e"), lit(0), lit(planesPerTable), lit(nTables)))
-      .select(col("vec_id").as(id), posexplode(col("bks")).as(Seq("tbl", "bucket")))
-    def capped(kdf: DataFrame, id: String): DataFrame = maxBucket.fold(kdf) { cap =>
-      val w = Window.partitionBy(col("tbl"), col("bucket")).orderBy(col(id))
-      kdf.withColumn("__r", row_number().over(w))
-        .filter(col("__r") <= cap).drop("__r")
-    }
-    val masks: Seq[Long] = (0 to probeHamming).flatMap(h =>
-      (0 until planesPerTable).combinations(h)
-        .map(_.foldLeft(0L)((m, i) => m | (1L << i))))
-    val probes = keyed(qvd, "qid").select(col("qid"), col("tbl"),
-      explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val cand = capped(keyed(cvd, "cid"), "cid").join(broadcast(probes), Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .select("qid", "cid")
-      .distinct()
-    val cq = quant(cvd)
-    val qq = quant(qvd)
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    cand
+    val cand = probePairs(qvd.select(col("vec_id").as("qid"), col("e").as("qe")),
+      cvd.select(col("vec_id").as("cid"), col("e").as("ce")),
+      planesPerTable, nTables, probeHamming, maxBucket)
+    val cq = int8Quantize(cvd, cvd, col("e"))
+    val qq = int8Quantize(qvd, cvd, col("e"))
+    topKPerQuery(cand
       .join(broadcast(qq.select(col("vec_id").as("qid"),
         col("qv").as("qe"), col("nrm").as("qn"))), "qid")
       .join(cq.select(col("vec_id").as("cid"),
         col("qv").as("ce"), col("nrm").as("cn")), "cid")
-      .withColumn("dot", dotLongN(col("qe"), col("ce")))
-      .withColumn("score", col("dot").cast("double") / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+      .withColumn("score",
+        dotLongN(col("qe"), col("ce")).cast("double") / (col("qn") * col("cn"))), k)
+  }
+
+  /** Symmetric int8 quantization of the array<double> `vec` of a
+    * vec_id-keyed relation under ONE global scale m = max |component|
+    * over `scaleOver` (an exact map-side max-agg, attached as a
+    * broadcast 1-row scalar): q = round(x / m * 127, 0). Returns
+    * (vec_id, qv, nrm) with nrm the exact integer norm; zero-norm
+    * vectors (fully quantized away) are dropped rather than risking
+    * cross-engine NaN ordering. Every step is oracle-exact — small
+    * integer components, exact BIGINT dots, sqrt/divide of exact
+    * values. */
+  private[graft] def int8Quantize(v: DataFrame, scaleOver: DataFrame,
+                                  vec: Column): DataFrame = {
+    val scale = scaleOver.agg(max(aggregate(vec, lit(0.0),
+      (acc, x) => greatest(acc, abs(x)))).as("m"))
+    v.crossJoin(broadcast(scale))
+      .select(col("vec_id"),
+        transform(vec, x => round(x / col("m") * 127, 0).cast("int")).as("qv"))
+      .withColumn("nrm", sqrt(dotLongN(col("qv"), col("qv")).cast("double")))
+      .filter(col("nrm") > 0.0)
   }
 
   /** [[annLshTopK]] with the per-table plane count wired to the corpus

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Catalog
+import graft.functions.SimilarityFunctions
 import graft.operators.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -149,38 +150,25 @@ object MultimodalQueries {
     * (covers hamming <= 3 for 4 words regardless of word WIDTH), then
     * exact bit_count(xor) hamming over the full fingerprint.
     * `maxBucket` (wide tier only) caps each (word-index, word-value)
-    * bucket at its lowest media_ids — deterministic, so the SQL twin
-    * replays it with one QUALIFY row_number(); applied uniformly it
-    * equals the capHotKeys hot-only rewrite as a set. */
+    * bucket at its lowest media_ids ([[SimilarityFunctions.capHotKeys]]
+    * — a media_id sits once per word index, so the hot-only rewrite
+    * equals, as a set, the uniform QUALIFY row_number() the SQL twin
+    * replays). */
   private[graft] def phashBandedPairs(h0: DataFrame, maxBucket: Option[Int]): DataFrame = {
     val h = h0.localCheckpoint(false)
     val words = (0 to 3).map(i =>
         h.select(col("media_id"), lit(i).as("wi"), col(s"w$i").as("wv")))
       .reduce(_ union _)
-    val banded = maxBucket.fold(words) { cap =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("wi"), col("wv")).orderBy(col("media_id"))
-      words.withColumn("__r", row_number().over(w))
-        .filter(col("__r") <= cap).drop("__r")
-    }
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.wi") === col("b.wi") && col("a.wv") === col("b.wv") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("ida"), col("b.media_id").as("idb"))
-      .distinct()
+    val banded = maxBucket.fold(words)(
+      SimilarityFunctions.capHotKeys(words, "media_id", Seq("wi", "wv"), _))
     val ham = (0 to 3).map(i =>
         call_function("bit_count",
-          col(s"a$i").bitwiseXOR(col(s"b$i"))).cast("long"))
+          col(s"w${i}a").bitwiseXOR(col(s"w${i}b"))).cast("long"))
       .reduce(_ + _)
-    cand
-      .join(h.select(col("media_id").as("ida"), col("w0").as("a0"),
-        col("w1").as("a1"), col("w2").as("a2"), col("w3").as("a3")), "ida")
-      .join(h.select(col("media_id").as("idb"), col("w0").as("b0"),
-        col("w1").as("b1"), col("w2").as("b2"), col("w3").as("b3")), "idb")
-      .withColumn("hamming", ham)
-      .filter(col("hamming") <= 3)
-      .select("ida", "idb", "hamming")
+    SimilarityFunctions.verifyPairs(
+        SimilarityFunctions.bandPairs(banded, "media_id", Seq("wi", "wv")),
+        h, "media_id", (0 to 3).map(i => s"w$i"): _*)(
+        Seq("hamming" -> ham), col("hamming") <= 3)
       .orderBy("ida", "idb")
   }
 

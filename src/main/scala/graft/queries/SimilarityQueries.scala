@@ -350,25 +350,16 @@ object SimilarityQueries {
     }
     val bnd = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    val bc = SimilarityFunctions.capHotKeys(bnd, Seq("band", "band_key"), MhPortCap)
-    val cand = bc.as("a")
-      .join(bc.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-      .distinct()
+    val bc = SimilarityFunctions.capHotKeys(bnd, "doc_id", Seq("band", "band_key"), MhPortCap)
+    val cand = SimilarityFunctions.bandPairs(bc, "doc_id", Seq("band", "band_key"))
       // pair ids feed 4 consumers (est + both semi-join prunes + the
       // verify join) — materialize once; the relation is pair-scale
       .localCheckpoint(false)
     val sigArr = sig.select(col("doc_id"),
       array((0 until nH).map(i => col(s"mh$i")): _*).as("arr"), col("n"))
-    val est = cand
-      .join(sigArr.select(col("doc_id").as("ida"), col("arr").as("aa")), "ida")
-      .join(sigArr.select(col("doc_id").as("idb"), col("arr").as("ab")), "idb")
-      .withColumn("est_jaccard",
-        SimilarityFunctions.matchCountN(col("aa"), col("ab"))
-          .cast("double") / lit(nH.toDouble))
-      .select("ida", "idb", "est_jaccard")
+    val est = SimilarityFunctions.verifyPairs(cand, sigArr, "doc_id", "arr")(
+      Seq("est_jaccard" -> SimilarityFunctions.matchCountN(col("arra"), col("arrb"))
+        .cast("double") / lit(nH.toDouble)))
     // The exact-Jaccard verify touches only CANDIDATE docs — prune the
     // DOCUMENT relation to them (one broadcast semi-join per side)
     // BEFORE the shingle explode, so the verify side never tokenizes
@@ -388,14 +379,10 @@ object SimilarityQueries {
       .join(tokA, "ida")
       .join(tokB, Seq("idb", "tok"))
       .groupBy("ida", "idb").agg(count(lit(1)).as("c"))
-    val sizes = sig.select(col("doc_id"), col("n"))
-    est.join(inter, Seq("ida", "idb"))
-      .join(sizes.select(col("doc_id").as("ida"), col("n").as("na")), "ida")
-      .join(sizes.select(col("doc_id").as("idb"), col("n").as("nb")), "idb")
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
-      .filter(col("jaccard") >= MhPortMinJ)
-      .select("ida", "idb", "est_jaccard", "jaccard")
+    SimilarityFunctions.verifyPairs(est.join(inter, Seq("ida", "idb")),
+        sig.select(col("doc_id"), col("n")), "doc_id", "n")(
+        Seq("jaccard" -> SimilarityFunctions.jaccardOf(col("c"), col("na"), col("nb"))),
+        col("jaccard") >= MhPortMinJ, out = Seq("est_jaccard", "jaccard"))
       .orderBy("ida", "idb")
   }
 
@@ -631,30 +618,16 @@ object SimilarityQueries {
   // BOTH sides rather than risking cross-engine NaN ordering.
   // Recall@10 vs the float brute tier is spec-pinned; the brute shape
   // (broadcast queries, scan-bound candidates) is sim_topk's.
-  private val QuantScaleBits = 127
-
   def simTopkQuantized(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val de = SimilarityFunctions.toDoubleArr(col("embedding"))
-    val scale = e.agg(max(aggregate(de, lit(0.0),
-      (acc, x) => greatest(acc, abs(x)))).as("m"))
-    val sqNorm = (v: org.apache.spark.sql.Column) =>
-      sqrt(SimilarityFunctions.dotLongN(v, v).cast("double"))
-    val q = e.crossJoin(broadcast(scale))
-      .select(col("vec_id"),
-        transform(de, x => round(x / col("m") * QuantScaleBits, 0).cast("int")).as("qv"))
-      .withColumn("nrm", sqNorm(col("qv")))
-      .filter(col("nrm") > 0.0)
+    val q = SimilarityFunctions.int8Quantize(e, e,
+      SimilarityFunctions.toDoubleArr(col("embedding")))
     val qq = q.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("qv").as("qe"), col("nrm").as("qn"))
     val c = q.select(col("vec_id").as("cid"), col("qv").as("ce"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(qq), col("qid") =!= col("cid"))
-      .withColumn("dot", SimilarityFunctions.dotLongN(col("qe"), col("ce")))
-      .withColumn("score", col("dot").cast("double") / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    SimilarityFunctions.topKPerQuery(c.join(broadcast(qq), col("qid") =!= col("cid"))
+        .withColumn("score", SimilarityFunctions.dotLongN(col("qe"), col("ce"))
+          .cast("double") / (col("qn") * col("cn"))), 10)
       .orderBy("qid", "rnk")
   }
 
@@ -831,13 +804,9 @@ object SimilarityQueries {
       .select(col("vec_id").as("qid"), col("pe").as("qe"), col("nrm").as("qn"))
     val c = base.select(col("vec_id").as("cid"), col("pe").as("ce"),
       col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score",
-        SimilarityFunctions.dotN(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    SimilarityFunctions.topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+        .withColumn("score",
+          SimilarityFunctions.dotN(col("qe"), col("ce")) / (col("qn") * col("cn"))), 10)
       .orderBy("qid", "rnk")
   }
 
@@ -1465,13 +1434,8 @@ object SimilarityQueries {
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), SimilarityFunctions.toDoubleArr(col("embedding")).as("qe"))
     val c = e.select(col("vec_id").as("cid"), SimilarityFunctions.toDoubleArr(col("embedding")).as("ce"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score", Kernels.call("graft_cosine", col("qe"), col("ce")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    SimilarityFunctions.topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+        .withColumn("score", Kernels.call("graft_cosine", col("qe"), col("ce"))), 10)
       .orderBy("qid", "rnk")
   }
 
@@ -1616,9 +1580,7 @@ object SimilarityQueries {
     val tableSelects = (0 until tables).map { t =>
       s"SELECT vec_id, $t AS tbl, ${bucketExpr(t)} AS bucket FROM v"
     }.mkString("\n  UNION ALL ")
-    val masks: Seq[Long] = (0 to probe).flatMap(h =>
-      (0 until AnnPortPlanes).combinations(h)
-        .map(_.foldLeft(0L)((m, i) => m | (1L << i))))
+    val masks = SimilarityFunctions.flipMasks(AnnPortPlanes, probe)
     val dot = Det.sqlFoldChain(i => s"(vq.e[$i] * vc.e[$i])", 64)
     val nq = Det.sqlFoldChain(i => s"(vq.e[$i] * vq.e[$i])", 64)
     val nc = Det.sqlFoldChain(i => s"(vc.e[$i] * vc.e[$i])", 64)

@@ -1,6 +1,8 @@
 package graft
 
+import graft.functions.SimilarityFunctions
 import graft.queries.{CoreQueries, RelationalQueries, SimilarityQueries}
+import org.apache.spark.sql.graftshim.ActionPlans
 
 /** Plan-shape regression guard: the physical plans the 100 TB story
   * depends on must not silently regress — filters/projections reaching
@@ -245,18 +247,25 @@ class PlanQualitySpec extends SparkSpecBase {
   }
 
   test("dedup_keeper_quality rides the banded tier: no inverted-index self-join") {
-    val df = SimilarityQueries.dedupKeeperQuality(spark, dir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(!p.contains("BroadcastNestedLoopJoin"))
-    assert(!p.contains("CartesianProduct"))
-    // same scale property as dedup_shingle_lsh: shingle hashes stay as
-    // per-doc arrays (pair-local array_intersect verify); the only
-    // explode is the constant-width band keys, so no inverted-index
-    // relation exists for the keeper pipeline to self-join
-    assert(!p.linesIterator.exists(l =>
-      l.contains("Generate") && l.contains("GraftHashes.shingleHashes(")),
+    // The declared key's final plan is a LocalTableScan of components
+    // (operators/SmallGraph finishes small graphs locally), so
+    // the shape is checked on the tier the key rides — every plan it
+    // executes, the checkpointed shingle-hash base included. Same
+    // scale property as dedup_shingle_lsh: shingle hashes stay per-doc
+    // arrays (pair-local intersect verify); the only explode is the
+    // constant-width band keys, so no inverted-index relation exists
+    // for the pipeline to self-join
+    val docs = Catalog.table(spark, dir, "documents")
+    val lines = ActionPlans.of(spark) {
+      SimilarityFunctions.jaccardPairsNgramLsh(docs, 3, 0.4).collect()
+    }.flatMap(_.split("== Initial Plan ==").head.linesIterator)
+    def carries(node: String): Boolean = lines.exists(l =>
+      l.contains(node) && l.contains("GraftHashes.shingleHashes("))
+    assert(carries("Project"), "shingle hashes must be projected per doc")
+    assert(!carries("Generate"),
       "keeper must not explode shingles into an inverted index")
+    assert(!lines.exists(_.contains("BroadcastNestedLoopJoin")))
+    assert(!lines.exists(_.contains("CartesianProduct")))
   }
 
   test("text_perplexity: scoring is scan-local — broadcast model, zero corpus shuffle") {

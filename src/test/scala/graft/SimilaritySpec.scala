@@ -466,6 +466,32 @@ class SimilaritySpec extends SparkSpecBase {
     assert(simhashPairs(docs, "text").count() == 3)
   }
 
+  test("capHotKeys == the uniform lowest-id bucket cap, as a set, on random over-cap buckets") {
+    // the hot-only rewrite (count, broadcast anti/semi, window over hot
+    // buckets only) must keep exactly the rows of the uniform
+    // row_number() over (keys order by id) <= cap that the oracle twins
+    // replay as one QUALIFY — ids are unique per bucket, as in every
+    // banded relation (one row per id per table)
+    val rnd = new scala.util.Random(17)
+    for (_ <- 0 until 4) {
+      val cap = 1 + rnd.nextInt(4)
+      val rows = for {
+        tbl <- 0 until 3
+        id <- rnd.shuffle((0L until 60L).toList)
+      } yield (id, tbl,
+        // a third of the ids crowd two hot buckets; the rest spread thin
+        if (rnd.nextInt(3) == 0) rnd.nextInt(2).toLong else 2L + rnd.nextInt(40))
+      val byBucket = rows.groupBy(r => (r._2, r._3)).values
+      assert(byBucket.exists(_.size > cap), "fixture must hold over-cap buckets")
+      val uniform = byBucket.flatMap(_.sortBy(_._1).take(cap)).toSet
+      val got = capHotKeys(rows.toDF("id", "tbl", "bucket"), "id",
+        Seq("tbl", "bucket"), cap).select("id", "tbl", "bucket")
+        .as[(Long, Int, Long)].collect()
+      assert(got.length == got.toSet.size, "no row may come back twice")
+      assert(got.toSet == uniform, s"cap $cap")
+    }
+  }
+
   test("cosineLshPairs: verified subset of brute-force pairs, dups always found") {
     val rnd = new scala.util.Random(11)
     val base = (0L until 30L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
