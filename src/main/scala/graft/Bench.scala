@@ -113,6 +113,11 @@ object Bench {
     // A throwing query must NOT bench as ~0 s and silently pass: record
     // per-query success and surface it in the JSON line.
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+      // a stream key resumes from its fingerprint-keyed checkpoint; an
+      // untimed clear before every run makes each timed run stream
+      // instead of reading back the previous run's sink
+      if (name.startsWith("stream_"))
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("target/stream_sinks"))
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true }

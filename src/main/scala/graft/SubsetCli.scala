@@ -292,7 +292,7 @@ object SubsetCli {
     }
     if (appends.nonEmpty) {
       val pending = new java.io.File(args.dest, PendingDirName)
-      if (pending.exists()) deleteRecursive(pending)
+      org.apache.commons.io.FileUtils.deleteQuietly(pending)
       appends.foreach { case (t, df) =>
         df.write.parquet(new java.io.File(pending, s"$t.parquet").getPath)
       }
@@ -309,11 +309,6 @@ object SubsetCli {
   }
 
   private val PendingDirName = "_delta_pending"
-
-  private def deleteRecursive(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursive)
-    f.delete()
-  }
 
   /** Test seam for crash simulation: invoked before each staged-file
     * move with (table, global move index). Production no-op. */
@@ -344,7 +339,7 @@ object SubsetCli {
           moved += 1
         }
     }
-    deleteRecursive(pending)
+    org.apache.commons.io.FileUtils.deleteQuietly(pending)
   }
 
   /** Recover a crashed delta apply; run FIRST on every parquet-dest
@@ -364,7 +359,7 @@ object SubsetCli {
     } else {
       System.err.println(
         s"[subset] discarding uncommitted delta staging in $dest")
-      deleteRecursive(pending)
+      org.apache.commons.io.FileUtils.deleteQuietly(pending)
       false
     }
   }

@@ -364,6 +364,30 @@ object CoreQueries {
       |SELECT 'b', c_custkey, c_name, c_nationkey FROM customer
       |ORDER BY schema_name, c_custkey""".stripMargin
 
+  private def sfDirName(dir: String): String = new java.io.File(dir).getName
+
+  /** Once-per-JVM writers of session layouts (the subset dumps and the
+    * capability sinks): each (step, dir) runs once. The layouts are
+    * keyed by the dir's BASENAME (the oracle SQL pins static paths), so
+    * a second dir sharing a basename already claimed in this namespace
+    * would silently clobber and cross-read the first one's files — it
+    * fails loudly instead. */
+  private final class RunOnce(what: String) {
+    private val done = scala.collection.mutable.Set[(String, String)]()
+    private val byBasename = scala.collection.mutable.Map[String, String]()
+    def apply(step: String, dir: String)(write: => Unit): Unit = synchronized {
+      if (!done((step, dir))) {
+        val bn = sfDirName(dir)
+        byBasename.get(bn).filter(_ != dir).foreach(prev =>
+          throw new IllegalStateException(s"$what basename collision: '$bn' " +
+            s"already written from $prev, refusing to overwrite with $dir"))
+        byBasename(bn) = dir
+        write
+        done += ((step, dir))
+      }
+    }
+  }
+
   // --- §3b: end-to-end subsetter postcondition, ORACLE-checked --------
   // The flagship pipeline's output dumped to parquet once per session,
   // then audited from BOTH engines over the same files: DuckDB
@@ -379,26 +403,8 @@ object CoreQueries {
     // cannot overwrite the files the (static) oracle SQL reads. The
     // oracle pins the driver's correctness SF, sf0.01.
     val oracleSf = "sf0.01"
-    private def sfDirName(dir: String): String =
-      new java.io.File(dir).getName
-    private val done = scala.collection.mutable.Set[String]()
-    // dump files are keyed by BASENAME (the oracle SQL pins static
-    // paths), so two distinct dirs sharing a basename in one session
-    // would silently clobber and cross-read each other's dumps — make
-    // that loud instead
-    private val byBasename = scala.collection.mutable.Map[String, String]()
-    private def claimBasename(dir: String): Unit = {
-      val bn = sfDirName(dir)
-      byBasename.get(bn) match {
-        case Some(prev) if prev != dir => throw new IllegalStateException(
-          s"subset dump basename collision: '$bn' already dumped from $prev, " +
-            s"refusing to overwrite with $dir")
-        case _ => byBasename(bn) = dir
-      }
-    }
-    def ensure(s: SparkSession, dir: String): Unit = synchronized {
-      if (done.contains(dir)) return
-      claimBasename(dir)
+    private val once = new RunOnce("subset dump")
+    def ensure(s: SparkSession, dir: String): Unit = once("dump", dir) {
       val counts = Catalog.tableNames.map(t =>
         t -> graft.sources.Sources.footerRowCount(s, s"$dir/$t.parquet")).toMap
       val out = Subsetter.subset(Catalog.load(s, dir), FkGraph.default,
@@ -408,7 +414,6 @@ object CoreQueries {
         df.coalesce(1).write.mode("overwrite")
           .parquet(s"$root/${sfDirName(dir)}/$t")
       }
-      done += dir
     }
     def table(s: SparkSession, dir: String, t: String): DataFrame =
       s.read.parquet(s"$root/${sfDirName(dir)}/$t")
@@ -501,23 +506,8 @@ object CoreQueries {
     // correctness SF so a Bench run at another SF can't overwrite the
     // files the (static) SQL reads.
     val oracleSf = "sf0.01"
-    private def sfDirName(dir: String): String =
-      new java.io.File(dir).getName
-    private val done = scala.collection.mutable.Set[String]()
-    // same basename-collision guard as SubsetDump, same reason
-    private val byBasename = scala.collection.mutable.Map[String, String]()
-    private def claimBasename(dir: String): Unit = {
-      val bn = sfDirName(dir)
-      byBasename.get(bn) match {
-        case Some(prev) if prev != dir => throw new IllegalStateException(
-          s"delta dump basename collision: '$bn' already dumped from $prev, " +
-            s"refusing to overwrite with $dir")
-        case _ => byBasename(bn) = dir
-      }
-    }
-    def ensure(s: SparkSession, dir: String): Unit = synchronized {
-      if (done.contains(dir)) return
-      claimBasename(dir)
+    private val once = new RunOnce("delta dump")
+    def ensure(s: SparkSession, dir: String): Unit = once("dump", dir) {
       val sf = sfDirName(dir)
       val counts = Catalog.tableNames.map(t =>
         t -> graft.sources.Sources.footerRowCount(s, s"$dir/$t.parquet")).toMap
@@ -536,7 +526,6 @@ object CoreQueries {
       delta.toSeq.sortBy(_._1).foreach { case (t, df) =>
         df.coalesce(1).write.mode("overwrite").parquet(s"$root/$sf/delta/$t")
       }
-      done += dir
     }
     def dest(s: SparkSession, dir: String, t: String): DataFrame =
       s.read.parquet(s"$root/${sfDirName(dir)}/dest/$t")
@@ -678,32 +667,14 @@ object CoreQueries {
   // keys in PlanQualitySpec.
   private[graft] object CapabilitySinks {
     val root = "/root/repo/target/capability_sinks"
-    private val donePart = scala.collection.mutable.Set[String]()
-    private val doneBuck = scala.collection.mutable.Set[String]()
-    // layouts are keyed by BASENAME (table names / static paths), so
-    // two dirs sharing one in a session must fail loudly, not clobber
-    // (the SubsetDump rule)
-    private val byBasename = scala.collection.mutable.Map[String, String]()
-    private def claim(dir: String): Unit = {
-      val bn = sfName(dir)
-      byBasename.get(bn) match {
-        case Some(prev) if prev != dir => throw new IllegalStateException(
-          s"capability sink basename collision: '$bn' already written from " +
-            s"$prev, refusing to overwrite with $dir")
-        case _ => byBasename(bn) = dir
-      }
-    }
-    def sfName(dir: String): String = new java.io.File(dir).getName
-    def partPath(dir: String): String = s"$root/${sfName(dir)}/orders_by_status"
-    def ensurePartitioned(s: SparkSession, dir: String): Unit = synchronized {
-      if (donePart.contains(dir)) return
-      claim(dir)
+    private val once = new RunOnce("capability sink")
+    def partPath(dir: String): String = s"$root/${sfDirName(dir)}/orders_by_status"
+    def ensurePartitioned(s: SparkSession, dir: String): Unit = once("partitioned", dir) {
       graft.sources.Sources.writePartitioned(
         Catalog.table(s, dir, "orders"), partPath(dir), Seq("o_orderstatus"))
-      donePart += dir
     }
     def bucketTable(dir: String, tbl: String): String =
-      s"graft_b_${tbl}_${sfName(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
+      s"graft_b_${tbl}_${sfDirName(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
     // A fresh JVM's in-memory catalog has forgotten the table, but its
     // warehouse directory survives from the previous session — and
     // saveAsTable then refuses with LOCATION_ALREADY_EXISTS (the CREATE
@@ -712,34 +683,23 @@ object CoreQueries {
     private def resetTable(s: SparkSession, name: String): Unit = {
       s.sql(s"DROP TABLE IF EXISTS $name")
       val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-      }
-      val loc = new java.io.File(wh, name)
-      if (loc.exists()) rm(loc)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh, name))
     }
-    def ensureBucketed(s: SparkSession, dir: String): Unit = synchronized {
-      if (doneBuck.contains(dir)) return
-      claim(dir)
+    def ensureBucketed(s: SparkSession, dir: String): Unit = once("bucketed", dir) {
       Seq("orders", "customer").foreach(t => resetTable(s, bucketTable(dir, t)))
       graft.sources.Sources.writeBucketed(Catalog.table(s, dir, "orders"),
         bucketTable(dir, "orders"), 8, Seq("o_custkey"))
       graft.sources.Sources.writeBucketed(Catalog.table(s, dir, "customer"),
         bucketTable(dir, "customer"), 8, Seq("c_custkey"))
-      doneBuck += dir
     }
     val zorderFiles = 16
-    def zorderPath(dir: String): String = s"$root/${sfName(dir)}/events_zorder"
-    private val doneZ = scala.collection.mutable.Set[String]()
-    def ensureZOrdered(s: SparkSession, dir: String): Unit = synchronized {
-      if (doneZ.contains(dir)) return
-      claim(dir)
+    def zorderPath(dir: String): String = s"$root/${sfDirName(dir)}/events_zorder"
+    def ensureZOrdered(s: SparkSession, dir: String): Unit = once("zordered", dir) {
       val ev = Catalog.table(s, dir, "events").select(col("event_id"),
         col("user_id"),
         datediff(to_date(col("ts")), lit("2024-01-01")).cast("long").as("day"))
       graft.sources.Sources.writeZOrdered(ev, zorderPath(dir),
         "user_id", "day", zorderFiles)
-      doneZ += dir
     }
   }
 

@@ -415,10 +415,7 @@ object EventQueries {
   // batch min-event keepers and the oracle-checked dedup_url_canonical
   // keepers as its >=2-raw subset.
   def streamUrlFrontier(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.Catalog.dirFingerprint(dir, "events")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "|" + fp).getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val base = s"target/stream_sinks/url_frontier_$key"
+    val base = s"target/stream_sinks/url_frontier_${graft.Memo.digest(dir, "events")}"
     val q = graft.streaming.EventStreams.streamUrlDedup(s, dir)
       .writeStream
       .format("parquet")
@@ -449,10 +446,7 @@ object EventQueries {
   // stream==batch parity pin (incl. the over-cap freeze fixture) and
   // the batch tier's own accuracy anchors.
   def streamMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.Catalog.dirFingerprint(dir, "documents")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "|" + fp).getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val base = s"target/stream_sinks/minhash_pairs_$key"
+    val base = s"target/stream_sinks/minhash_pairs_${graft.Memo.digest(dir, "documents")}"
     val q = graft.streaming.EventStreams.streamNearDupPairs(s, dir)
       .writeStream
       .format("parquet")

@@ -29,100 +29,29 @@ object SimilarityQueries {
     graft.sources.Sources.footerRowCount(s, s"$dir/documents.parquet")
 
   // --- IVF coarse-quantizer persistence --------------------------------
-  // The same once-per-corpus rule as the LM/DSIR literal maps (r14
-  // verdict item 6): Lloyd training is a fixed-point of the corpus, not
-  // of the query, so rung benches should price the INDEX PROBE, not
-  // k-means. In-memory cache within a JVM; fingerprint-keyed tmpdir
-  // store across JVMs (atomic-rename commit, corrupt/truncated stores
-  // deleted and retrained; a regenerated fixture changes the
-  // fingerprint, so staleness is impossible by construction). The
-  // stored doubles round-trip bit-exactly (DataOutputStream.writeDouble
-  // is the IEEE bit pattern), so a load reproduces the training run
-  // that wrote it.
-  private val ivfCentCache = scala.collection.mutable
-    .Map[(String, Int, Int, String), Array[(Int, Array[Double])]]()
+  // Lloyd training is a fixed point of the corpus, not of the query, so
+  // the trained quantizer is a per-corpus artifact (graft.Memo): rung
+  // benches price the INDEX PROBE, not k-means.
 
-  private def ivfCentStorePath(dir: String, k: Int, iters: Int,
-      fp: String): java.io.File =
-    new java.io.File(graft.StoreDir.dir(),
-      "graft-ivfcent-" + java.security.MessageDigest.getInstance("MD5")
-        .digest((dir + "|" + k + "|" + iters + "|" + fp).getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString + ".bin")
-
-  private val IvfCentMagic = 0x47494331 // "GIC1"
-
-  private def storeIvfCent(f: java.io.File,
-      cent: Array[(Int, Array[Double])]): Unit = {
-    val tmp = java.io.File.createTempFile(f.getName + ".", ".tmp",
-      f.getParentFile)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(tmp)))
-    try {
-      out.writeInt(IvfCentMagic)
+  /** Store format of `k` trained centroids ("GIC1"): k, dim, then
+    * (id, dim doubles) per centroid. */
+  private def ivfCodec(k: Int) = graft.Memo.binary[Array[(Int, Array[Double])]](0x47494331)(
+    (out, cent) => {
       out.writeInt(cent.length)
       out.writeInt(if (cent.isEmpty) 0 else cent.head._2.length)
-      cent.foreach { case (id, v) =>
-        out.writeInt(id); v.foreach(out.writeDouble)
-      }
-    } finally out.close()
-    if (!tmp.renameTo(f)) { tmp.delete(); () }
-  }
+      cent.foreach { case (id, v) => out.writeInt(id); v.foreach(out.writeDouble) }
+    })(in => {
+      require(in.readInt() == k, s"stored quantizer does not have $k cells")
+      val dim = in.readInt()
+      require(dim >= 0, "negative centroid dimension")
+      Array.fill(k)((in.readInt(), Array.fill(dim)(in.readDouble())))
+    })
 
-  private def loadIvfCent(f: java.io.File, k: Int)
-      : Option[Array[(Int, Array[Double])]] = {
-    if (!f.exists()) return None
-    try {
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        new java.io.FileInputStream(f)))
-      try {
-        require(in.readInt() == IvfCentMagic && in.readInt() == k)
-        val dim = in.readInt()
-        Some(Array.fill(k)(
-          (in.readInt(), Array.fill(dim)(in.readDouble()))))
-      } finally in.close()
-    } catch {
-      // corruption signatures only (truncation/bad magic) — a transient
-      // read failure must not delete a valid store (r15 ADVICE)
-      case _ @ (_: java.io.IOException | _: IllegalArgumentException) =>
-        f.delete(); None
-    }
-  }
-
-  /** Trained coarse quantizer for `dir`'s embeddings at (k, iters) —
-    * memoized in-JVM and persisted across JVMs. Training runs OUTSIDE
-    * the monitor (a losing racer retrains the same deterministic-given-
-    * partitioning centroids; first store write wins). */
+  /** Trained coarse quantizer for `dir`'s embeddings at (k, iters). */
   private[graft] def ivfCentroidsMemo(s: SparkSession, dir: String,
-      k: Int, iters: Int = 3): Array[(Int, Array[Double])] = {
-    val fp = Catalog.dirFingerprint(dir, "embeddings")
-    val key = (dir, k, iters, fp)
-    ivfCentCache.synchronized(ivfCentCache.get(key)) match {
-      case Some(c) => c
-      case None =>
-        val store = ivfCentStorePath(dir, k, iters, fp)
-        val cent = loadIvfCent(store, k).getOrElse {
-          val trained = SimilarityFunctions.ivfCentroids(emb(s, dir), k, iters)
-          storeIvfCent(store, trained)
-          trained
-        }
-        ivfCentCache.synchronized {
-          // a regenerated fixture (new fp) evicts stale entries for dir
-          ivfCentCache.filterInPlace { case ((d, _, _, f), _) =>
-            d != dir || f == fp }
-          ivfCentCache.getOrElseUpdate(key, cent)
-        }
-    }
-  }
-
-  /** Test hook: drop the in-memory centroid cache (disk stores stay). */
-  private[graft] def dropIvfCentMemoryCache(): Unit =
-    ivfCentCache.synchronized(ivfCentCache.clear())
-
-  /** Test hook: the store file a (dir, k, iters) triple resolves to at
-    * the current embeddings fingerprint. */
-  private[graft] def ivfCentStoreFor(dir: String, k: Int,
-      iters: Int = 3): java.io.File =
-    ivfCentStorePath(dir, k, iters, Catalog.dirFingerprint(dir, "embeddings"))
+      k: Int, iters: Int = 3): Array[(Int, Array[Double])] =
+    graft.Memo("ivf", dir, "embeddings", k, iters)(ivfCodec(k))(
+      SimilarityFunctions.ivfCentroids(emb(s, dir), k, iters))
 
   /** Bench session-setup hook: warm the quantizers the selected IVF
     * queries will use (auto-k for the topk tier, fixed 16 for the
@@ -453,53 +382,47 @@ object SimilarityQueries {
 
   // --- brute-force cosine top-k (oracle tier) --------------------------
 
-  /** Session-level memo of the brute top-10 over the canonical query
-    * set (vec_id % 100). THREE queries consume this relation —
+  /** The brute top-10 over the canonical query set (vec_id % 100) is a
+    * per-corpus artifact (graft.Memo): THREE queries consume it —
     * `sim_topk_embeddings` and both `ann_*_recall` probes (it is their
-    * recall denominator) — and each probe previously re-ran the full
-    * queries × corpus scan per invocation: at the sf1 rung the two
-    * recall probes alone cost 35 + 62 s, mostly re-deriving the same
-    * brute answer. Same once-per-session rule as the subset dumps and
-    * the bigram-LM counts; keyed on (dir, embeddings file fingerprint)
-    * so a regenerated fixture recomputes. The memo holds the COLLECTED
-    * rows, not a checkpointed DataFrame: Bench/Verify call
-    * `Checkpoints.clearAll` at query boundaries (their premise is that
-    * nothing persisted is live across queries), which would free a
-    * checkpoint's only copy — driver-side rows survive it, exactly how
-    * the LM cache does. Size is the query's own OUTPUT (nq × 10 rows —
-    * what every consumer collects anyway). NOTE the query set here is
-    * vec_id % 100 (1% of the corpus), so this output IS corpus-scaled:
-    * at the bench rungs it is thousands of rows (driver memo), but
-    * above [[BruteMemoRowBudget]] estimated output rows the memo
-    * switches MEDIUM — the brute relation is written to parquet ONCE
-    * per session and the three consumers read the file instead of a
-    * driver collect (the 100 TB path: a corpus-scaled probe set never
-    * lands on the driver). Both paths are the same once-per-session
-    * rule; the spec forces each on a tiny fixture and pins them equal.
-    *
-    * Concurrency (r11 ADVICE): the memoized job is a full queries ×
-    * corpus scan, so it runs OUTSIDE the monitor (double-checked
-    * insert — a losing racer recomputes the same deterministic rows
-    * and the first writer wins); the monitor guards only map access.
-    * A regenerated fixture (new fingerprint) EVICTS every stale memo
-    * for the same dir at insert, so the cache is bounded by the
-    * number of live dirs, not the session's regeneration count. */
-  private sealed trait BruteMemo
-  private final case class BruteRows(rows: Seq[(Long, Long, Double, Int)]) extends BruteMemo
-  private final case class BruteStore(path: String) extends BruteMemo
-  private val bruteCache = scala.collection.mutable.Map[(String, String), BruteMemo]()
-  /** Uniquifier for the store path's temp dir (pid+thread+seq — no RNG). */
-  private val bruteTmpSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Estimated probe-output rows (n_queries × 10) above which the
-    * brute memo materializes to storage instead of the driver. The
-    * bench rungs sit far below it (sf3 ≈ 15k rows); the constant
-    * exists so the switch has a measured default, not so it is hit
-    * locally. */
+    * recall denominator) — and without the memo each probe re-runs the
+    * full queries × corpus scan per invocation (at the sf1 rung the two
+    * recall probes alone cost 35 + 62 s re-deriving the same answer).
+    * The memo holds COLLECTED rows, not a checkpointed DataFrame:
+    * Bench/Verify call `Checkpoints.clearAll` at query boundaries, which
+    * would free a checkpoint's only copy. The query set is 1% of the
+    * corpus, so the output IS corpus-scaled: above [[BruteMemoRowBudget]]
+    * estimated rows the memo switches MEDIUM to a parquet directory the
+    * three consumers read instead of a driver collect (the 100 TB path:
+    * a corpus-scaled probe set never lands on the driver). The spec
+    * forces each medium on a tiny fixture and pins them equal. */
   private[graft] val BruteMemoRowBudget = 2000000L
 
-  private[graft] def bruteCacheClear(): Unit =
-    bruteCache.synchronized(bruteCache.clear())
+  /** Store format of the driver medium ("GBR1"): count, then
+    * (qid, cid, score, rnk) per row. */
+  private val BruteRowsCodec = graft.Memo.binary[Seq[(Long, Long, Double, Int)]](0x47425231)(
+    (out, rows) => {
+      out.writeInt(rows.length)
+      rows.foreach { case (q, c, sc, r) =>
+        out.writeLong(q); out.writeLong(c); out.writeDouble(sc); out.writeInt(r) }
+    })(in => {
+      val n = in.readInt()
+      require(n >= 0, "negative row count")
+      Vector.fill(n)((in.readLong(), in.readLong(), in.readDouble(), in.readInt()))
+    })
+
+  /** The storage medium: a parquet directory, trusted only with
+    * parquet's _SUCCESS commit marker inside (the job committed before
+    * the rename); a tree without it is a partial write. */
+  private def bruteParquetCodec(s: SparkSession): graft.Memo.Codec[DataFrame] =
+    new graft.Memo.Codec[DataFrame] {
+      def write(df: DataFrame, to: java.io.File): Unit = df.write.parquet(to.getPath)
+      def read(from: java.io.File): DataFrame = {
+        if (!new java.io.File(from, "_SUCCESS").exists())
+          throw new java.io.IOException(s"brute memo store $from has no _SUCCESS marker")
+        s.read.parquet(from.getPath)
+      }
+    }
 
   private def bruteRelation(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
@@ -511,73 +434,16 @@ object SimilarityQueries {
   private[graft] def bruteTopkBudgeted(s: SparkSession, dir: String,
                                        rowBudget: Long): DataFrame = {
     import s.implicits._
-    val fp = Catalog.dirFingerprint(dir, "embeddings")
-    val key = (dir, fp)
-    def render(m: BruteMemo): DataFrame = m match {
-      case BruteRows(rows) => rows.toDF("qid", "cid", "score", "rnk")
-      case BruteStore(p)   => s.read.parquet(p)
-    }
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmTree); f.delete(); ()
-    }
-    bruteCache.synchronized(bruteCache.get(key)) match {
-      case Some(m) => render(m)
-      case None =>
-        // decide the medium from parquet footers — no extra scan job
-        val estRows = (graft.sources.Sources
-          .footerRowCount(s, s"$dir/embeddings.parquet") / 100 + 1) * 10
-        val computed: BruteMemo =
-          if (estRows > rowBudget) {
-            // deterministic per-(dir, fingerprint) DESTINATION, but the
-            // write lands in a caller-unique temp dir that is atomically
-            // renamed in (r12 ADVICE): two racers writing mode-overwrite
-            // to the SAME path could delete files a lazily-evaluated
-            // winner DataFrame was still reading. rename is atomic on a
-            // local fs; the loser's rename fails against the existing
-            // dest and its temp tree is discarded.
-            val out = new java.io.File(graft.StoreDir.dir().getPath,
-              "graft-brute-" + java.security.MessageDigest.getInstance("MD5")
-                .digest((dir + "|" + fp).getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString)
-            // a pre-existing dest is trusted only with parquet's
-            // _SUCCESS commit marker inside: a partial tree left here
-            // by a crashed run of the pre-r12 code (which wrote
-            // mode-overwrite directly to the final path) would
-            // otherwise be accepted forever (r13 ADVICE). The rename
-            // path always carries the marker — the job committed
-            // before the rename.
-            if (out.exists() && !new java.io.File(out, "_SUCCESS").exists())
-              rmTree(out)
-            if (!out.exists()) {
-              val tmp = new java.io.File(out.getParent,
-                out.getName + ".tmp-" + ProcessHandle.current().pid() +
-                  "-" + Thread.currentThread().getId +
-                  "-" + bruteTmpSeq.incrementAndGet())
-              bruteRelation(s, dir).write.mode("overwrite").parquet(tmp.getPath)
-              if (!tmp.renameTo(out)) {
-                rmTree(tmp)
-                require(out.exists(),
-                  s"brute memo store rename failed: $tmp -> $out")
-              }
-            }
-            BruteStore(out.getPath)
-          } else
-            BruteRows(bruteRelation(s, dir).collect().toSeq
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))))
-        val winner = bruteCache.synchronized {
-          bruteCache.get(key).getOrElse {
-            // evicted stale-fingerprint stores are dropped from the map
-            // but their parquet trees are NOT deleted within the live
-            // session (r12 ADVICE): an earlier-returned DataFrame may
-            // still lazily read them. The tmpdir bounds the leak to one
-            // store per fixture regeneration.
-            bruteCache.filterInPlace { case ((d, f), _) => d != dir || f == fp }
-            bruteCache(key) = computed
-            computed
-          }
-        }
-        render(winner)
-    }
+    // the medium from parquet footers — no extra scan job
+    val estRows = (graft.sources.Sources
+      .footerRowCount(s, s"$dir/embeddings.parquet") / 100 + 1) * 10
+    if (estRows > rowBudget)
+      graft.Memo("brute", dir, "embeddings")(bruteParquetCodec(s))(bruteRelation(s, dir))
+    else
+      graft.Memo("brute-rows", dir, "embeddings")(BruteRowsCodec)(
+        bruteRelation(s, dir).collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))))
+        .toDF("qid", "cid", "score", "rnk")
   }
 
   private def bruteTopk(s: SparkSession, dir: String): DataFrame =
@@ -683,23 +549,27 @@ object SimilarityQueries {
     val qvCol = transform(SimilarityFunctions.toDoubleArr(col("embedding")),
       x => round(x * 1000, 0).cast("long"))
     val base = e.select(col("vec_id"), qvCol.as("qv"))
-    def scaledDist(cs: Seq[Long]) =
-      aggregate(zip_with(col("qv"), typedlit(cs),
+    def scaledDist(qv: Column, cs: Seq[Long]) =
+      aggregate(zip_with(qv, typedlit(cs),
         (a, b) => (a * 10000L - b) * (a * 10000L - b)), lit(0L), _ + _)
     // argmin over the (non-empty) centroid set: min of (dist, idx)
     // structs — Spark struct ordering is field-lexicographic, so ties
     // break to the lowest cluster index, like the oracle's ORDER BY d, c
-    def assign(cents: Seq[(Long, Seq[Long])]) =
+    def assign(qv: Column, cents: Seq[(Long, Seq[Long])]) =
       array_min(array(cents.map { case (c, cs) =>
-        struct(scaledDist(cs).as("d"), lit(c).as("c")) }: _*))
+        struct(scaledDist(qv, cs).as("d"), lit(c).as("c")) }: _*))
     // init: k lowest vec_ids, scaled x10^4 (driver-held k x dim)
     val c0 = base.orderBy("vec_id").limit(KmK).collect().toSeq
       .sortBy(_.getLong(0)).zipWithIndex.map { case (r, i) =>
         (i.toLong, r.getSeq[Long](1).map(_ * 10000L)) }
-    // E1 + M1: one scan, one (cluster, pos)-keyed map-side-combined agg
-    val sums = base
-      .withColumn("c", assign(c0).getField("c"))
-      .select(col("c"), posexplode(col("qv")).as(Seq("pos", "x")))
+    // E1 + M1: one scan, one (cluster, pos)-keyed map-side-combined agg.
+    // The generator explodes the quantizer EXPRESSION, not a projected
+    // column: for an attribute input Spark infers `size(qv) > 0 AND
+    // isnotnull(qv)` and pushes it below the projection, where it
+    // re-evaluates the interpreted quantizer per row
+    val sums = e
+      .select(assign(qvCol, c0).getField("c").as("c"), col("embedding"))
+      .select(col("c"), posexplode(qvCol).as(Seq("pos", "x")))
       .groupBy("c", "pos")
       .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
       .collect()
@@ -709,7 +579,7 @@ object SimilarityQueries {
         .map(r => floorDiv(r.getLong(2) * 10000L, r.getLong(3))))
     }.sortBy(_._1)
     // E2: final scan-local assignment with the exact distance kept
-    base.withColumn("a", assign(c1))
+    base.withColumn("a", assign(col("qv"), c1))
       .select(col("vec_id"), col("a.c").as("cluster"), col("a.d").as("dist2"))
       .orderBy("vec_id")
   }

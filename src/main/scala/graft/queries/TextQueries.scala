@@ -1398,104 +1398,41 @@ object TextQueries {
   // an exact BIGINT (round(ln(p)·10⁶)) BEFORE summing, so the per-doc
   // sum is order-independent and hash-matches DuckDB exactly; ln is the
   // only transcendental (the text_bm25_topk precedent).
-  /** Hard bound on the bigram table the driver ever holds. The model
-    * keeps only the top-K bigrams by (count DESC, bigram ASC — the
-    * deterministic tiebreak the oracle mirrors); everything below the
-    * cap falls through to the add-one backoff the smoothing already
-    * provides (COALESCE(c,0)+1). On a 100 TB corpus the bigram
-    * vocabulary is O(10⁹), so the former unbounded collect was a
-    * driver OOM; the cap turns training into one
-    * TakeOrderedAndProject and bounds both literal maps — c1 is
-    * derived from the CAPPED c2, so it is ≤ K by construction.
-    * (The [[LmVocabCap]] constant itself lives at the top of the
-    * object — oracle-SQL init order.)
-    *
-    * Memoized bigram-LM training artifacts per corpus: the two count
-    * maps + vocab size are a driver-side constant of the corpus slice,
-    * and the queries composing the score (text_perplexity,
-    * pipeline_corpus_clean2, each × bench passes) must not re-run the
-    * two training jobs per invocation — the same once-per-session rule
-    * the subset audits follow via SubsetDump/DeltaDump. Keyed on
-    * (dir, cap, corpus file fingerprint) so a test fixture regenerated
-    * within one JVM session retrains instead of silently scoring with
-    * a stale model while the DuckDB oracle reads the new files. */
-  private val lmCache = scala.collection.mutable
-    .Map[(String, Int, String), (Map[String, Long], Map[String, Long], Long)]()
+  // The trained models are per-corpus artifacts (graft.Memo): the
+  // queries composing a score (text_perplexity, pipeline_corpus_clean2,
+  // the DSIR pair, each × bench passes) never re-run the training jobs
+  // within a JVM, and a fresh JVM loads the stored maps (≤ 2·cap
+  // entries) instead of retraining. Bench attributes the warm-up to
+  // `session_setup` via [[prepareLmModels]].
 
-  // --- cross-session persistence of the trained literal-map models ----
-  // (r14 verdict item 6): the in-memory caches amortize training WITHIN
-  // a JVM, but rung benches start a fresh JVM per run, so every cold
-  // rung re-priced once-per-corpus training (48.8 s of the sf10
-  // text_dsir_sample entry) inside whichever query trained first. The
-  // stores below persist the trained maps to tmpdir keyed on the SAME
-  // (dir, cap, corpus fingerprint) triple the caches use — the brute
-  // memo's store pattern specialized to a single file, where an atomic
-  // rename IS the commit marker (a crashed partial write never lands at
-  // the final path). Training now runs once per (fixture, cap) per
-  // machine; cold passes load <= 2*cap entries from disk. Bench
-  // attributes the warm-up to `session_setup` via [[prepareLmModels]].
-  // Corrupt/truncated stores are deleted and retrained; a regenerated
-  // fixture changes the fingerprint, so staleness is impossible by
-  // construction (same rule the caches enforce).
-
-  private def modelStorePath(kind: String, dir: String, cap: Int,
-      fp: String): java.io.File =
-    new java.io.File(graft.StoreDir.dir(),
-      "graft-" + kind + "-" + java.security.MessageDigest.getInstance("MD5")
-        .digest((dir + "|" + cap + "|" + fp).getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString + ".bin")
-
-  private val ModelMagic = 0x47524d31 // "GRM1"
-
-  private def storeModel(f: java.io.File, maps: Seq[Map[String, Long]],
-      scalars: Seq[Long]): Unit = {
-    val tmp = java.io.File.createTempFile(f.getName + ".", ".tmp",
-      f.getParentFile)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(tmp)))
-    try {
-      out.writeInt(ModelMagic)
-      out.writeInt(maps.size)
-      maps.foreach { m =>
-        out.writeInt(m.size)
-        m.foreach { case (k, v) => out.writeUTF(k); out.writeLong(v) }
-      }
-      out.writeInt(scalars.size)
-      scalars.foreach(out.writeLong)
-    } finally out.close()
-    // rename is atomic on a local fs; the loser of a concurrent race
-    // discards its tmp — the winner's store has identical content
-    if (!tmp.renameTo(f)) { tmp.delete(); () }
+  private def writeCounts(out: java.io.DataOutputStream, m: Map[String, Long]): Unit = {
+    out.writeInt(m.size)
+    m.foreach { case (k, v) => out.writeUTF(k); out.writeLong(v) }
   }
 
-  private def loadModel(f: java.io.File, nMaps: Int, nScalars: Int)
-      : Option[(Seq[Map[String, Long]], Seq[Long])] = {
-    if (!f.exists()) return None
-    try {
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        new java.io.FileInputStream(f)))
-      try {
-        require(in.readInt() == ModelMagic && in.readInt() == nMaps)
-        val maps = Seq.fill(nMaps) {
-          val n = in.readInt()
-          val b = Map.newBuilder[String, Long]
-          var i = 0
-          while (i < n) { b += in.readUTF() -> in.readLong(); i += 1 }
-          b.result()
-        }
-        require(in.readInt() == nScalars)
-        val scalars = Seq.fill(nScalars)(in.readLong())
-        Some((maps, scalars))
-      } finally in.close()
-    } catch {
-      // delete-and-retrain ONLY on corruption signatures (truncation =
-      // EOFException ⊂ IOException; bad magic/shape = the requires'
-      // IllegalArgumentException). A transient read failure of any
-      // other class must not destroy a valid store (r15 ADVICE).
-      case _ @ (_: java.io.IOException | _: IllegalArgumentException) =>
-        f.delete(); None
-    }
+  private def readCounts(in: java.io.DataInputStream): Map[String, Long] = {
+    val n = in.readInt()
+    require(n >= 0, "negative map size")
+    val b = Map.newBuilder[String, Long]
+    var i = 0
+    while (i < n) { b += in.readUTF() -> in.readLong(); i += 1 }
+    b.result()
   }
+
+  /** Store format of the bigram LM ("GLM1"): c2, c1, vocabulary size. */
+  private val LmCodec =
+    graft.Memo.binary[(Map[String, Long], Map[String, Long], Long)](0x474c4d31)(
+      (out, m) => { writeCounts(out, m._1); writeCounts(out, m._2); out.writeLong(m._3) })(
+      in => (readCounts(in), readCounts(in), in.readLong()))
+
+  /** Store format of the DSIR model ("GDS1"): target counts, raw vocab
+    * counts, |vocab|, target and raw bigram totals. */
+  private val DsirCodec = graft.Memo.binary[
+      (Map[String, Long], Map[String, Long], Long, Long, Long)](0x47445331)(
+      (out, m) => {
+        writeCounts(out, m._1); writeCounts(out, m._2)
+        out.writeLong(m._3); out.writeLong(m._4); out.writeLong(m._5)
+      })(in => (readCounts(in), readCounts(in), in.readLong(), in.readLong(), in.readLong()))
 
   /** Warm the LM and/or DSIR trained models for `dir` — Bench calls
     * this from its session-setup block (timed as `session_setup`, like
@@ -1508,57 +1445,44 @@ object TextQueries {
     if (dsir) { dsirCountsCapped(s, dir, LmVocabCap); () }
   }
 
-  /** Test hook: drop the IN-MEMORY model caches (disk stores stay), so
-    * a spec can force the load-from-store path within one JVM. */
-  private[graft] def dropModelMemoryCaches(): Unit = {
-    lmCache.synchronized(lmCache.clear())
-    dsirCache.synchronized(dsirCache.clear())
-  }
-
-  /** Test hook: the store file a (kind, dir, cap) triple resolves to at
-    * the CURRENT corpus fingerprint. */
-  private[graft] def modelStoreFor(kind: String, dir: String,
-      cap: Int): java.io.File =
-    modelStorePath(kind, dir, cap, corpusFingerprint(dir))
-
-  /** Cheap change-detection signature of `dir`/documents.parquet —
-    * shared helper since r11 (the brute-top-k memo keys on the same
-    * shape for embeddings). */
-  private def corpusFingerprint(dir: String): String =
-    Catalog.dirFingerprint(dir, "documents")
+  /** Word bigrams of a token array ("a b" per adjacent pair); empty
+    * under two tokens. Shared by the LM and DSIR trainers. */
+  private def bigrams(toks: Column): Column =
+    when(size(toks) >= 2,
+      transform(sequence(lit(1), size(toks) - 1), i => concat_ws(" ", slice(toks, i, lit(2)))))
+      .otherwise(array().cast("array<string>"))
 
   private def lmCounts(s: SparkSession, dir: String)
       : (Map[String, Long], Map[String, Long], Long) =
     lmCountsCapped(s, dir, LmVocabCap)
 
+  /** The bigram LM: (bigram counts, first-word counts, vocabulary size).
+    * The bigram table is capped at the top-`cap` bigrams by (count DESC,
+    * bigram ASC — the deterministic tiebreak the oracle mirrors);
+    * everything below the cap falls through to the add-one backoff the
+    * smoothing already provides (COALESCE(c,0)+1). On a 100 TB corpus
+    * the bigram vocabulary is O(10⁹), so an uncapped collect would be a
+    * driver OOM; the cap turns training into one TakeOrderedAndProject
+    * and bounds both maps — c1 is derived from the CAPPED c2, so it is
+    * ≤ cap by construction. (The [[LmVocabCap]] constant itself lives
+    * at the top of the object — oracle-SQL init order.) */
   private[graft] def lmCountsCapped(s: SparkSession, dir: String, cap: Int)
-      : (Map[String, Long], Map[String, Long], Long) = lmCache.synchronized {
-    val fp = corpusFingerprint(dir)
-    lmCache.getOrElseUpdate((dir, cap, fp), {
-      val store = modelStorePath("lm", dir, cap, fp)
-      loadModel(store, nMaps = 2, nScalars = 1) match {
-        case Some((Seq(c2, c1), Seq(vocabN))) => (c2, c1, vocabN)
-        case _ =>
-          val toks = split(col("text"), " ")
-          val bigramsCol = when(size(toks) >= 2,
-              transform(sequence(lit(1), size(toks) - 1),
-                i => concat_ws(" ", slice(toks, i, lit(2)))))
-            .otherwise(array().cast("array<string>"))
-          val train = docs(s, dir).filter(col("doc_id") % 10 === 0)
-          val c2 = train.select(explode(bigramsCol).as("bg"))
-            .groupBy("bg").agg(count(lit(1)).as("c"))
-            .orderBy(col("c").desc, col("bg"))
-            .limit(cap)
-            .collect().map(r => r.getString(0) -> r.getLong(1))
-          val c1 = c2.groupBy(_._1.takeWhile(_ != ' '))
-            .map { case (w, m) => w -> m.map(_._2).sum }
-          val vocabN = train.select(explode(toks).as("w"))
-            .agg(countDistinct(col("w"))).head().getLong(0)
-          storeModel(store, Seq(c2.toMap, c1.toMap), Seq(vocabN))
-          (c2.toMap, c1.toMap, vocabN)
-      }
-    })
-  }
+      : (Map[String, Long], Map[String, Long], Long) =
+    graft.Memo("lm", dir, "documents", cap)(LmCodec) {
+      val toks = split(col("text"), " ")
+      val bigramsCol = bigrams(toks)
+      val train = docs(s, dir).filter(col("doc_id") % 10 === 0)
+      val c2 = train.select(explode(bigramsCol).as("bg"))
+        .groupBy("bg").agg(count(lit(1)).as("c"))
+        .orderBy(col("c").desc, col("bg"))
+        .limit(cap)
+        .collect().map(r => r.getString(0) -> r.getLong(1))
+      val c1 = c2.groupBy(_._1.takeWhile(_ != ' '))
+        .map { case (w, m) => w -> m.map(_._2).sum }
+      val vocabN = train.select(explode(toks).as("w"))
+        .agg(countDistinct(col("w"))).head().getLong(0)
+      (c2.toMap, c1, vocabN)
+    }
 
   // --- broadcast transport of the trained models (r15 verdict item 2) --
   // One Broadcast per (SparkContext, kind, dir, cap, fingerprint): the
@@ -1577,7 +1501,8 @@ object TextQueries {
   private def modelBroadcast[T: scala.reflect.ClassTag](s: SparkSession,
       kind: String, dir: String, cap: Int)(mk: => T)
       : org.apache.spark.broadcast.Broadcast[T] = bcastCache.synchronized {
-    val key = (s.sparkContext.applicationId, kind, dir, cap, corpusFingerprint(dir))
+    val key = (s.sparkContext.applicationId, kind, dir, cap,
+      Catalog.dirFingerprint(dir, "documents"))
     bcastCache.getOrElseUpdate(key, s.sparkContext.broadcast(mk))
       .asInstanceOf[org.apache.spark.broadcast.Broadcast[T]]
   }
@@ -1677,65 +1602,41 @@ object TextQueries {
   private[graft] final val DsirTargetSources = Seq("src0", "src1", "src2")
   private val dsirTargetSqlList = DsirTargetSources.map(s => s"'$s'").mkString(", ")
 
-  /** Memoized DSIR training artifacts per (dir, cap, corpus
-    * fingerprint): (target bigram counts restricted to the vocab, the
-    * raw-side vocab counts, |vocab|, total target bigram occurrences,
-    * total raw bigram occurrences). The driver holds ≤ 2·cap entries +
-    * 3 scalars regardless of corpus size; fingerprint keying retrains
-    * on a regenerated fixture (the lmCache rule). */
-  private val dsirCache = scala.collection.mutable
-    .Map[(String, Int, String), (Map[String, Long], Map[String, Long], Long, Long, Long)]()
-
+  /** The DSIR model per (dir, cap): (target bigram counts restricted to
+    * the vocab, the raw-side vocab counts, |vocab|, total target bigram
+    * occurrences, total raw bigram occurrences). The driver holds
+    * ≤ 2·cap entries + 3 scalars regardless of corpus size. */
   private[graft] def dsirCountsCapped(s: SparkSession, dir: String, cap: Int)
       : (Map[String, Long], Map[String, Long], Long, Long, Long) =
-    dsirCache.synchronized {
-      val fp = corpusFingerprint(dir)
-      dsirCache.getOrElseUpdate((dir, cap, fp), {
-        val store = modelStorePath("dsir", dir, cap, fp)
-        loadModel(store, nMaps = 2, nScalars = 3) match {
-          case Some((Seq(ct, cr), Seq(v, tTot, rTot))) => (ct, cr, v, tTot, rTot)
-          case _ => trainDsir(s, dir, cap, store)
-        }
-      })
+    graft.Memo("dsir", dir, "documents", cap)(DsirCodec) {
+      val bigramsCol = bigrams(split(col("text"), " "))
+      val d = docs(s, dir)
+      val raw = d.filter(col("doc_id") % 10 === 0)
+      val tgt = d.filter(col("source").isin(DsirTargetSources: _*))
+      val rawVocab = raw.select(explode(bigramsCol).as("bg"))
+        .groupBy("bg").agg(count(lit(1)).as("c"))
+        .orderBy(col("c").desc, col("bg"))
+        .limit(cap)
+        .collect().map(r => r.getString(0) -> r.getLong(1))
+      // target counts RESTRICTED to the vocab BEFORE the collect — a
+      // broadcast LEFT SEMI join on the ≤cap vocab keys (replacing
+      // the earlier literal-map membership filter, whose 50k-entry
+      // map rode in every task binary — r15 verdict item 2; the
+      // broadcast hash relation ships once per executor and the
+      // lookup is a hash probe, not a key-array scan). What reaches
+      // the driver is ≤ cap rows even when the target slice is huge.
+      val vocabKeys = s.createDataset(rawVocab.map(_._1).toIndexedSeq)(
+        org.apache.spark.sql.Encoders.STRING).toDF("bg")
+      val tgtCounts = tgt.select(explode(bigramsCol).as("bg"))
+        .join(broadcast(vocabKeys), Seq("bg"), "left_semi")
+        .groupBy("bg").agg(count(lit(1)).as("c"))
+        .collect().map(r => r.getString(0) -> r.getLong(1))
+      val tTot = tgt.agg(coalesce(sum(size(bigramsCol).cast("long")), lit(0L)))
+        .head().getLong(0)
+      val rTot = raw.agg(coalesce(sum(size(bigramsCol).cast("long")), lit(0L)))
+        .head().getLong(0)
+      (tgtCounts.toMap, rawVocab.toMap, rawVocab.length.toLong, tTot, rTot)
     }
-
-  private def trainDsir(s: SparkSession, dir: String, cap: Int,
-      store: java.io.File)
-      : (Map[String, Long], Map[String, Long], Long, Long, Long) = {
-        val toks = split(col("text"), " ")
-        val bigramsCol = when(size(toks) >= 2,
-            transform(sequence(lit(1), size(toks) - 1),
-              i => concat_ws(" ", slice(toks, i, lit(2)))))
-          .otherwise(array().cast("array<string>"))
-        val d = docs(s, dir)
-        val raw = d.filter(col("doc_id") % 10 === 0)
-        val tgt = d.filter(col("source").isin(DsirTargetSources: _*))
-        val rawVocab = raw.select(explode(bigramsCol).as("bg"))
-          .groupBy("bg").agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("bg"))
-          .limit(cap)
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        // target counts RESTRICTED to the vocab BEFORE the collect — a
-        // broadcast LEFT SEMI join on the ≤cap vocab keys (replacing
-        // the earlier literal-map membership filter, whose 50k-entry
-        // map rode in every task binary — r15 verdict item 2; the
-        // broadcast hash relation ships once per executor and the
-        // lookup is a hash probe, not a key-array scan). What reaches
-        // the driver is ≤ cap rows even when the target slice is huge.
-        val vocabKeys = s.createDataset(rawVocab.map(_._1).toIndexedSeq)(
-          org.apache.spark.sql.Encoders.STRING).toDF("bg")
-        val tgtCounts = tgt.select(explode(bigramsCol).as("bg"))
-          .join(broadcast(vocabKeys), Seq("bg"), "left_semi")
-          .groupBy("bg").agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        val tTot = tgt.agg(coalesce(sum(size(bigramsCol).cast("long")), lit(0L)))
-          .head().getLong(0)
-        val rTot = raw.agg(coalesce(sum(size(bigramsCol).cast("long")), lit(0L)))
-          .head().getLong(0)
-        storeModel(store, Seq(tgtCounts.toMap, rawVocab.toMap),
-          Seq(rawVocab.length.toLong, tTot, rTot))
-        (tgtCounts.toMap, rawVocab.toMap, rawVocab.length.toLong, tTot, rTot)
-  }
 
   /** Per-document importance weight: sum over the doc's bigrams of
     * q6(ln( p̂_target(b) / p̂_raw(b) )) with add-one smoothing over the

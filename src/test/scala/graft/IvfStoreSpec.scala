@@ -13,14 +13,14 @@ class IvfStoreSpec extends SparkSpecBase {
   private val dir = "/root/testdata/sf0.001"
 
   test("centroid store: train -> persist -> load round-trips bit-exactly; corrupt retrains") {
-    val store = SimilarityQueries.ivfCentStoreFor(dir, 16)
+    val store = Memo.pathFor("ivf", dir, "embeddings", 16, 3)
     store.delete() // force a fresh training run regardless of prior sessions
-    SimilarityQueries.dropIvfCentMemoryCache()
+    Memo.dropMemory()
     val cent1 = SimilarityQueries.ivfCentroidsMemo(spark, dir, 16)
     assert(store.exists(), "training must persist the store")
     assert(cent1.length == 16 && cent1.head._2.nonEmpty)
 
-    SimilarityQueries.dropIvfCentMemoryCache()
+    Memo.dropMemory()
     val cent2 = SimilarityQueries.ivfCentroidsMemo(spark, dir, 16)
     assert(cent1.map(_._1).sameElements(cent2.map(_._1)))
     for (((_, a), (_, b)) <- cent1.zip(cent2))
@@ -30,7 +30,7 @@ class IvfStoreSpec extends SparkSpecBase {
 
     // corrupt/truncated store: discarded and retrained, never half-loaded
     java.nio.file.Files.write(store.toPath, Array[Byte](9, 9, 9))
-    SimilarityQueries.dropIvfCentMemoryCache()
+    Memo.dropMemory()
     val cent3 = SimilarityQueries.ivfCentroidsMemo(spark, dir, 16)
     assert(cent3.length == 16 && store.exists(),
       "corrupt store must retrain and re-persist")

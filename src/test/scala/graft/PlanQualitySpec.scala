@@ -448,6 +448,20 @@ class PlanQualitySpec extends SparkSpecBase {
       s"E-step must not hash-shuffle:\n${p.take(1200)}")
   }
 
+  test("cluster_kmeans: the M-step explode adds no filter that re-runs the quantizer") {
+    // exploding a projected COLUMN makes Spark infer `size(qv) > 0 AND
+    // isnotnull(qv)` and push it below the projection, where it
+    // re-evaluates the interpreted quantizer per row; every plan the
+    // key executes (the init and M-step collects run while it is built)
+    // must be free of such a filter
+    val lines = ActionPlans.of(spark) {
+      SimilarityQueries.clusterKmeans(spark, dir).collect(); ()
+    }.flatMap(_.split("== Initial Plan ==").head.linesIterator)
+    assert(lines.exists(_.contains("Generate")), "the M-step must be among the plans")
+    val bad = lines.filter(l => l.contains("Filter") && l.contains("transform("))
+    assert(bad.isEmpty, s"a filter re-evaluates the quantizer:\n${bad.mkString("\n")}")
+  }
+
   test("editdist near-dup candidates come from the blocking-key hash join, never BNLJ/cartesian") {
     val df = SimilarityQueries.dedupEditdistPairs(spark, dir)
     df.collect()

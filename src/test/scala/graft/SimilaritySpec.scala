@@ -1010,11 +1010,11 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("brute memo: storage path == driver path, and both memoize") {
     val dir = "/root/testdata/sf0.001"
-    graft.queries.SimilarityQueries.bruteCacheClear()
+    graft.Memo.dropMemory()
     val viaDriver = graft.queries.SimilarityQueries
       .bruteTopkBudgeted(spark, dir, Long.MaxValue)
       .as[(Long, Long, Double, Int)].collect().toSet
-    graft.queries.SimilarityQueries.bruteCacheClear()
+    graft.Memo.dropMemory()
     val viaStore = graft.queries.SimilarityQueries
       .bruteTopkBudgeted(spark, dir, 0L) // force the parquet medium
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -1026,7 +1026,7 @@ class SimilaritySpec extends SparkSpecBase {
       .bruteTopkBudgeted(spark, dir, 0L)
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(again == viaDriver)
-    graft.queries.SimilarityQueries.bruteCacheClear()
+    graft.Memo.dropMemory()
   }
 
   // --- r13: pigeonhole-banded editdist tier ----------------------------

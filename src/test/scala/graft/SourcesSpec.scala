@@ -156,4 +156,26 @@ class SourcesSpec extends SparkSpecBase {
       assert(kept == spark.sessionState.conf.filesMaxPartitionBytes)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", before)
   }
+
+  test("capability sinks: a second dir with a claimed basename fails loudly, a repeat is a no-op") {
+    import graft.queries.CoreQueries.CapabilitySinks
+    val bn = s"graft-runonce-${java.util.UUID.randomUUID()}"
+    def dirWithOrders(): String = {
+      val d = Files.createTempDirectory("graft-runonce").resolve(bn).toString
+      Seq((1L, "F"), (2L, "O"), (3L, "F")).toDF("o_orderkey", "o_orderstatus")
+        .write.parquet(s"$d/orders.parquet")
+      d
+    }
+    val (a, b) = (dirWithOrders(), dirWithOrders())
+    try {
+      CapabilitySinks.ensurePartitioned(spark, a)
+      val written = new java.io.File(CapabilitySinks.partPath(a))
+      val stamp = written.lastModified()
+      CapabilitySinks.ensurePartitioned(spark, a)
+      assert(written.lastModified() == stamp, "a repeat call must not rewrite the layout")
+      val e = intercept[IllegalStateException](CapabilitySinks.ensurePartitioned(spark, b))
+      assert(e.getMessage.contains("basename collision"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(CapabilitySinks.root, bn))
+  }
 }

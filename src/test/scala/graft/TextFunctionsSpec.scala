@@ -298,10 +298,10 @@ class TextFunctionsSpec extends SparkSpecBase {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val lm1 = TextQueries.lmCountsCapped(spark, tmp, 100)
     val ds1 = TextQueries.dsirCountsCapped(spark, tmp, 100)
-    val lmStore = TextQueries.modelStoreFor("lm", tmp, 100)
-    val dsStore = TextQueries.modelStoreFor("dsir", tmp, 100)
+    val lmStore = graft.Memo.pathFor("lm", tmp, "documents", 100)
+    val dsStore = graft.Memo.pathFor("dsir", tmp, "documents", 100)
     assert(lmStore.exists() && dsStore.exists(), "training must persist the stores")
-    TextQueries.dropModelMemoryCaches()
+    graft.Memo.dropMemory()
     assert(TextQueries.lmCountsCapped(spark, tmp, 100) == lm1,
       "store round-trip must reproduce the LM model exactly")
     assert(TextQueries.dsirCountsCapped(spark, tmp, 100) == ds1,
@@ -309,7 +309,7 @@ class TextFunctionsSpec extends SparkSpecBase {
     // a corrupt/truncated store must be discarded and retrained, never
     // half-loaded
     java.nio.file.Files.write(lmStore.toPath, Array[Byte](1, 2, 3))
-    TextQueries.dropModelMemoryCaches()
+    graft.Memo.dropMemory()
     assert(TextQueries.lmCountsCapped(spark, tmp, 100) == lm1,
       "corrupt store must retrain to the same model")
     assert(lmStore.exists(), "retraining must re-persist the store")
