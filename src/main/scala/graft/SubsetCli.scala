@@ -175,11 +175,14 @@ object SubsetCli {
   /** The run as one JSON line, printed after the human-readable table:
     * per table the source, target and written rows (a table written
     * without a plan row — an excluded parent its children needed — has
-    * written rows only), the orphan total, and which side of the
-    * subsetter's size gate computed the key sets and which side of the
-    * audit's gate counted the orphans. */
+    * written rows only), the orphan total, which side of the
+    * subsetter's size gate computed the key sets, whether the written
+    * rows came from the driver's collect (`driver`) or a re-read of the
+    * source (`source`), and which side of the audit's gate counted the
+    * orphans. */
   def summaryJson(planned: Seq[(String, Long, Long)], written: Map[String, Long],
-                  orphans: Long, onDriver: Boolean, auditOnDriver: Boolean): String = {
+                  orphans: Long, onDriver: Boolean, rowsOnDriver: Boolean,
+                  auditOnDriver: Boolean): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     val rows = root.putArray("tables")
@@ -192,7 +195,7 @@ object SubsetCli {
     }
     def side(driver: Boolean) = if (driver) "driver" else "distributed"
     root.put("orphans", orphans).put("key_sets", side(onDriver))
-      .put("audit", side(auditOnDriver))
+      .put("rows", if (rowsOnDriver) "driver" else "source").put("audit", side(auditOnDriver))
     mapper.writeValueAsString(root)
   }
 
@@ -207,8 +210,9 @@ object SubsetCli {
     * APPENDS it; an empty dest gets the full first-run subset. */
   def run(spark: SparkSession, args: CliArgs): Map[String, Long] = runGated(spark, args)._1
 
-  /** [[run]], also reporting whether the driver computed the key sets. */
-  private def runGated(spark: SparkSession, args: CliArgs): (Map[String, Long], Boolean) = {
+  /** [[run]], also reporting which side of the subsetter's gates ran. */
+  private def runGated(spark: SparkSession,
+                       args: CliArgs): (Map[String, Long], Subsetter.Sides) = {
     val graph = sourceGraph(args)
     if (isJdbc(args.src)) runJdbc(spark, args, graph)
     else runParquet(spark, args, graph)
@@ -223,25 +227,25 @@ object SubsetCli {
     * directory dest lands the subset as parquet — a DB→lake snapshot.
     * Delta/append detection remains a parquet-to-parquet feature. */
   private def runJdbc(spark: SparkSession, args: CliArgs,
-                      graph: FkGraph): (Map[String, Long], Boolean) = {
+                      graph: FkGraph): (Map[String, Long], Subsetter.Sides) = {
     val props = new java.util.Properties()
     val names = graph.tables
       .filterNot(t => Subsetter.globMatch(args.cfg.excludeTables, t))
     val tables = names.map(t =>
       t -> lowerCols(Sources.readJdbc(spark, args.src, t, props))).toMap
     val counts = jdbcRowCounts(args.src, names)
-    val (out, onDriver) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
+    val (out, sides) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
       existing = Map.empty, existingClosed = false)
     val order = graph.insertionOrder.filter(out.contains)
     order.foreach { t =>
       if (isJdbc(args.dest)) Sources.appendJdbc(out(t), args.dest, t, props)
       else Sources.writeParquet(out(t), s"${args.dest}/$t.parquet")
     }
-    (destRowCounts(spark, args.dest, order), onDriver)
+    (destRowCounts(spark, args.dest, order), sides)
   }
 
   private def runParquet(spark: SparkSession, args: CliArgs,
-                         graph: FkGraph): (Map[String, Long], Boolean) = {
+                         graph: FkGraph): (Map[String, Long], Subsetter.Sides) = {
     recoverPendingDelta(args.dest)
     val tables = Catalog.load(spark, args.src)
     val counts = Catalog.tableNames.map(t =>
@@ -263,7 +267,7 @@ object SubsetCli {
         s"[subset] WARNING: partial destination (${destExisting.size}/" +
           s"${Catalog.tableNames.size} tables present — interrupted run?); " +
           "treating existing rows as UNCLOSED and re-walking parent closure")
-    val (out, onDriver) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
+    val (out, sides) = Subsetter.subsetGated(tables, graph, args.cfg, counts,
       existing = Subsetter.destKeys(graph, destExisting), existingClosed = destComplete)
     // Crash-atomic delta apply — the upstream's whole-run transaction
     // (`create_subset_in` commits once at the end) re-expressed for
@@ -305,7 +309,7 @@ object SubsetCli {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       applyStagedDelta(args.dest)
     }
-    (destRowCounts(spark, args.dest, out.keys.toSeq), onDriver)
+    (destRowCounts(spark, args.dest, out.keys.toSeq), sides)
   }
 
   private val PendingDirName = "_delta_pending"
@@ -439,7 +443,7 @@ object SubsetCli {
           sys.exit(1)
         }
       }
-      val (written, onDriver) = runGated(spark, args)
+      val (written, sides) = runGated(spark, args)
       written.toSeq.sortBy(_._1).foreach { case (t, n) =>
         println(f"$t%-12s $n%10d rows")
       }
@@ -447,7 +451,7 @@ object SubsetCli {
         sourceGraph(args))
       val orphanTotal = orphans.collect().map(_.getLong(1)).sum
       println(s"referential integrity: $orphanTotal orphans")
-      println(summaryJson(planned, written, orphanTotal, onDriver, auditOnDriver))
+      println(summaryJson(planned, written, orphanTotal, sides.keys, sides.rows, auditOnDriver))
       if (orphanTotal != 0L) sys.exit(2)
     } finally spark.stop()
   }

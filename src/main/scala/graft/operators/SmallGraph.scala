@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{count, lit}
 /** Size gate between a distributed plan and a finish on the driver:
   * pick the execution strategy from the measured size of the input at
   * run time. It gates the iterative graph operators (connected
-  * components, label propagation), the subsetter's key sets
+  * components, label propagation), the subsetter's key sets and rows
   * ([[SmallSubset]]) and its referential-integrity audit ([[SmallAudit]]).
   *
   * Every distributed fixpoint round, closure wave or per-edge join is a

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{Fk, FkGraph}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions.{coalesce, col, lit, xxhash64}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,7 +11,8 @@ import scala.jdk.CollectionConverters._
 
 /** Steps 1–6 of [[Subsetter.subset]] — seed, parent closure, bounded
   * child pull, re-closure and completeness top-up — on the driver, for
-  * sources whose key columns fit the broadcast budget.
+  * sources whose key columns fit the broadcast budget, and step 7 too
+  * when their whole rows fit it.
   *
   * The distributed rounds pay several Spark jobs per closure wave, pull
   * and top-up round (~60 on a four-table live database) for key sets of
@@ -24,7 +26,18 @@ import scala.jdk.CollectionConverters._
   * Spark's ascending PK order (strings in binary UTF-8 order) for the
   * child pull, and `(pmod(h, 1000003), pk)` for the top-up.
   *
-  * The gate is [[SmallGraph.fits]]: Σ rows × planner row size of the key
+  * The written rows are the rows read. When the projections still fit
+  * with every source column after the key columns (decided once for the
+  * whole domain), the same collect carries the full rows, and the
+  * subset of a table is its collected rows whose keys survive the
+  * fixpoint, with the source's column types in the semi-join's column
+  * order (PK first): each source table is read once, at
+  * one moment, as rdbms-subsetter's `create_row_in` inserts the row it
+  * fetched. Otherwise (keys fit, rows do not, e.g. sf0.01 `lineitem`)
+  * only the key sets come back and step 7 re-reads the source through
+  * the shared semi-join.
+  *
+  * The gate is [[SmallGraph.fits]]: Σ rows × planner row size of the
   * projections ≤ `spark.sql.autoBroadcastJoinThreshold` (≤ 0 turns the
   * driver side off). The distributed rounds also run for key types whose
   * Row values do not compare like Spark's (anything but integral,
@@ -47,6 +60,10 @@ private[operators] object SmallSubset {
   /** One source row's key projection; `fks(i)` is the FK value of the
     * table's i-th out-edge in parent-PK type, null when any column is. */
   private final case class Rec(pk: Key, h: Long, pinned: Boolean, fks: Array[Key])
+
+  /** The driver side's answer: the key set of every domain table and,
+    * when the source rows rode the collect, the rows with those keys. */
+  final case class Result(keys: Map[String, DataFrame], rows: Option[Map[String, DataFrame]])
 
   private def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -82,11 +99,12 @@ private[operators] object SmallSubset {
     }
   }
 
-  /** The key sets of `plan.domain` as local relations, or None when the
-    * run is out of the driver side's scope (see the object doc). */
-  def keySets(tables: Map[String, DataFrame], graph: FkGraph, cfg: Subsetter.Config,
-              plan: Subsetter.Plan, existing: Map[String, DataFrame],
-              rowsOf: String => Long): Option[Map[String, DataFrame]] = {
+  /** The key sets of `plan.domain`, and their rows when those fit too, as
+    * local relations, or None when the run is out of the driver side's
+    * scope (see the object doc). */
+  def run(tables: Map[String, DataFrame], graph: FkGraph, cfg: Subsetter.Config,
+          plan: Subsetter.Plan, existing: Map[String, DataFrame],
+          rowsOf: String => Long): Option[Result] = {
     // out-edges to a source table: the only ones closure and pull walk
     val out: Map[String, IndexedSeq[Fk]] = plan.domain.map(t => t ->
       graph.fks.filter(fk => fk.childTable == t && tables.contains(fk.parentTable))
@@ -100,7 +118,7 @@ private[operators] object SmallSubset {
     }
     if (!inScope) return None
 
-    val proj: Seq[(String, DataFrame)] = plan.domain.map { t =>
+    val keyProj: Seq[(String, DataFrame, Seq[Column])] = plan.domain.map { t =>
       val pk = graph.pks(t)
       // delta mode: dest membership by the same USING join the
       // distributed seed's semi-join does
@@ -112,9 +130,25 @@ private[operators] object SmallSubset {
         .map(coalesce(_, lit(false))).reduceOption(_ || _).getOrElse(lit(false))
       val fkCols = out(t).flatMap(fk => fk.childCols.zip(fk.parentCols).map { case (c, p) =>
         col(c).cast(typeOf(fk.parentTable, p)) })
-      t -> src.select((pk.map(col) ++ Seq(xxhash64(pk.map(col): _*), pinned) ++ fkCols): _*)
+      (t, src, pk.map(col) ++ Seq(xxhash64(pk.map(col): _*), pinned) ++ fkCols)
     }
-    if (!SmallGraph.fits(proj.map { case (t, df) => df -> rowsOf(t) }: _*)) return None
+    // the semi-join's column order (USING keys first), so every write of
+    // a table, from either side of the gate, has one layout
+    def rowOrder(t: String): Seq[String] =
+      graph.pks(t) ++ tables(t).columns.filterNot(graph.pks(t).contains)
+    def projections(withRows: Boolean): Seq[(String, DataFrame)] = keyProj.map {
+      case (t, src, keyCols) =>
+        val rowCols = if (withRows) rowOrder(t).map(c => col(QuotingUtils.quoteIdentifier(c)))
+          else Nil
+        t -> src.select(keyCols ++ rowCols: _*)
+    }
+    val counts = plan.domain.map(t => t -> rowsOf(t)).toMap
+    def fit(proj: Seq[(String, DataFrame)]): Boolean =
+      SmallGraph.fits(proj.map { case (t, df) => df -> counts(t) }: _*)
+    val full = projections(withRows = true)
+    val withRows = fit(full)
+    val proj = if (withRows) full else projections(withRows = false)
+    if (!withRows && !fit(proj)) return None
 
     val spark = tables(plan.domain.head).sparkSession
     val collected = ConcurrentJobs.map(spark, proj) { case (t, df) => t -> df.collect() }.toMap
@@ -198,9 +232,21 @@ private[operators] object SmallSubset {
       else { close(); shortfalls = measure() }
     }
 
-    Some(plan.domain.map { t =>
+    val keySets = plan.domain.map { t =>
       val schema = StructType(graph.pks(t).map(c => tables(t).schema(c)))
       t -> spark.createDataFrame(keys(t).iterator.map(Row.fromSeq).toSeq.asJava, schema)
+    }.toMap
+    // 7. the collected rows whose keys survive, past the key columns, in
+    // one partition: one file, or one JDBC connection and transaction,
+    // per written table
+    val rows = Option.when(withRows)(plan.domain.map { t =>
+      val skip = graph.pks(t).size + 2 + out(t).map(_.childCols.size).sum
+      val kept = recs(t).iterator.zip(collected(t).iterator).collect {
+        case (r, row) if keys(t)(r.pk) => Row.fromSeq(row.toSeq.drop(skip))
+      }
+      val schema = StructType(rowOrder(t).map(tables(t).schema(_)))
+      t -> spark.createDataFrame(kept.toSeq.asJava, schema).coalesce(1)
     }.toMap)
+    Some(Result(keySets, rows))
   }
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *      (windowed top-k — `create_row_in` step 4);
   *   5. close parents once more (children may reference new parents);
   *   6. top up every table still short of its target, and re-close;
-  *   7. materialize each table by semi-join against its key set.
+  *   7. materialize each table's rows with a kept key.
   *
   * The output satisfies the reference's postcondition: zero orphaned
   * foreign keys ([[validateRI]]).
@@ -32,14 +32,16 @@ import org.apache.spark.sql.functions._
   * Scale: a size gate picks where steps 1–6 run. When the
   * key columns of every table (PK, out-FKs, a hash and a flag) fit
   * `spark.sql.autoBroadcastJoinThreshold`, [[SmallSubset]] collects them
-  * in one job per table and finishes the fixpoints on the driver.
+  * in one job per table and finishes the fixpoints on the driver; when
+  * the whole rows fit too, the same collect carries them and step 7
+  * keeps the collected rows, so each source table is read once.
   * Above it the key sets stay `DataFrame`s end-to-end and nothing
   * collects to the driver: each fixpoint pass is a handful of
   * semi-joins whose small side (the key set) AQE broadcast-joins when it
   * fits, and `localCheckpoint` truncates lineage so cyclic graphs cannot
-  * blow up the plan. Step 7 is shared: each table's rows come from a
-  * semi-join of the source against its key set, so wide payload columns
-  * never reach the driver.
+  * blow up the plan. There, and when only the keys fit, each table's
+  * rows come from a semi-join of the source against its key set, so
+  * wide payload columns never reach the driver.
   */
 object Subsetter {
 
@@ -553,21 +555,28 @@ object Subsetter {
       existingClosed: Boolean = false): Map[String, DataFrame] =
     subsetGated(tables, graph, cfg, rowCounts, existing, existingClosed)._1
 
-  /** [[subset]], also reporting whether the driver computed the key sets. */
+  /** Which side of the size gates a run took: whether the driver computed
+    * the key sets, and whether the written rows are the rows its collect
+    * read (else step 7 re-read them from the source). */
+  private[graft] final case class Sides(keys: Boolean, rows: Boolean)
+
+  /** [[subset]], also reporting which side of the size gates ran. */
   private[graft] def subsetGated(
       tables: Map[String, DataFrame],
       graph: FkGraph,
       cfg: Config,
       rowCounts: Map[String, Long],
       existing: Map[String, DataFrame],
-      existingClosed: Boolean): (Map[String, DataFrame], Boolean) = {
-    val (keys, onDriver) = keySets(tables, graph, cfg, rowCounts, existing, existingClosed)
-    // 7. materialize rows (delta mode: only rows NOT already in dest)
-    val rows = keys.map { case (t, k) =>
-      val kept = tables(t).join(k, graph.pks(t), "left_semi")
+      existingClosed: Boolean): (Map[String, DataFrame], Sides) = {
+    val gated = gatedKeys(tables, graph, cfg, rowCounts, existing, existingClosed)
+    val driverRows = gated.toOption.flatMap(_.rows)
+    // 7. materialize rows: the driver's collected rows, or a semi-join
+    // of the source (delta mode: only rows NOT already in dest)
+    val rows = gated.fold(identity, _.keys).map { case (t, k) =>
+      val kept = driverRows.fold(tables(t).join(k, graph.pks(t), "left_semi"))(_(t))
       t -> existing.get(t).fold(kept)(e => kept.join(e, graph.pks(t), "left_anti"))
     }
-    (rows, onDriver)
+    (rows, Sides(keys = gated.isRight, rows = driverRows.isDefined))
   }
 
   /** Steps 1–6: the PK key set of every table in the domain, and whether
@@ -579,7 +588,19 @@ object Subsetter {
       cfg: Config,
       rowCounts: Map[String, Long] = Map.empty,
       existing: Map[String, DataFrame] = Map.empty,
-      existingClosed: Boolean = false): (Map[String, DataFrame], Boolean) = {
+      existingClosed: Boolean = false): (Map[String, DataFrame], Boolean) =
+    gatedKeys(tables, graph, cfg, rowCounts, existing, existingClosed)
+      .fold(_ -> false, r => r.keys -> true)
+
+  /** Steps 1–6 on the side of the size gate they fit: the driver's result
+    * ([[SmallSubset]]) on the Right, the distributed key sets on the Left. */
+  private def gatedKeys(
+      tables: Map[String, DataFrame],
+      graph: FkGraph,
+      cfg: Config,
+      rowCounts: Map[String, Long],
+      existing: Map[String, DataFrame],
+      existingClosed: Boolean): Either[Map[String, DataFrame], SmallSubset.Result] = {
     val included = tables.keys.toSeq.sorted
       .filterNot(t => globMatch(cfg.excludeTables, t))
     // a forced row in a table outside the run (a typo, or an excluded
@@ -617,10 +638,8 @@ object Subsetter {
       seedsClosed = existing.nonEmpty && existingClosed &&
         cfg.force.isEmpty && cfg.forceComposite.isEmpty)
     val rowsOf = (t: String) => sourceN.getOrElse(t, rowCounts.getOrElse(t, tables(t).count()))
-    SmallSubset.keySets(tables, graph, cfg, plan, existing, rowsOf) match {
-      case Some(keys) => (keys, true)
-      case None       => (distributedKeys(tables, graph, cfg, plan, existing), false)
-    }
+    SmallSubset.run(tables, graph, cfg, plan, existing, rowsOf)
+      .toRight(distributedKeys(tables, graph, cfg, plan, existing))
   }
 
   /** Steps 1–6 as distributed semi-join rounds — the path at any scale. */

@@ -3,6 +3,7 @@ package graft
 import graft.operators.Subsetter
 import graft.sources.Sources
 import java.util.Properties
+import org.apache.spark.sql.graftshim.ActionPlans
 
 /** Grounds the real-DB parity claim: the upstream tool's entire habitat
   * is a live RDBMS reached over a DB-API connection. Embedded Apache
@@ -60,31 +61,35 @@ class JdbcRoundTripSpec extends SparkSpecBase {
     assert(orphans.forall(_ == 0L))
   }
 
-  // each run of the case below creates its schema in fresh databases
-  private val reflectRuns = new java.util.concurrent.atomic.AtomicInteger()
+  // real DDL with enforced PK/FK constraints — the catalog facts the
+  // reference reflects with SQLAlchemy and we reflect with
+  // java.sql.DatabaseMetaData
+  private val ddl = Seq(
+    """CREATE TABLE region (
+      |  r_regionkey INT NOT NULL PRIMARY KEY,
+      |  r_name VARCHAR(64))""".stripMargin,
+    """CREATE TABLE nation (
+      |  n_nationkey INT NOT NULL PRIMARY KEY,
+      |  n_name VARCHAR(64),
+      |  n_regionkey INT REFERENCES region (r_regionkey))""".stripMargin,
+    """CREATE TABLE customer (
+      |  c_custkey BIGINT NOT NULL PRIMARY KEY,
+      |  c_name VARCHAR(64),
+      |  c_nationkey INT REFERENCES nation (n_nationkey),
+      |  c_acctbal DOUBLE,
+      |  c_mktsegment VARCHAR(32))""".stripMargin)
 
-  bothGateSides("catalog reflection: subset a live Derby DB end-to-end with ZERO declared edges") {
-    val run = reflectRuns.incrementAndGet()
+  // each run of a case below creates its schema in fresh databases
+  private val dbRuns = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Fresh in-memory source and destination URLs; the source holds the
+    * sf0.001 region, nation and customer rows under [[ddl]], the
+    * destination the same empty schema when `destDdl`, else nothing. */
+  private def liveDbs(destDdl: Boolean): (String, String) = {
+    val run = dbRuns.incrementAndGet()
     val srcUrl = s"jdbc:derby:memory:graftsrc$run;create=true"
     val dstUrl = s"jdbc:derby:memory:graftdst$run;create=true"
-    // real DDL with enforced PK/FK constraints — the catalog facts the
-    // reference reflects with SQLAlchemy and we reflect with
-    // java.sql.DatabaseMetaData
-    val ddl = Seq(
-      """CREATE TABLE region (
-        |  r_regionkey INT NOT NULL PRIMARY KEY,
-        |  r_name VARCHAR(64))""".stripMargin,
-      """CREATE TABLE nation (
-        |  n_nationkey INT NOT NULL PRIMARY KEY,
-        |  n_name VARCHAR(64),
-        |  n_regionkey INT REFERENCES region (r_regionkey))""".stripMargin,
-      """CREATE TABLE customer (
-        |  c_custkey BIGINT NOT NULL PRIMARY KEY,
-        |  c_name VARCHAR(64),
-        |  c_nationkey INT REFERENCES nation (n_nationkey),
-        |  c_acctbal DOUBLE,
-        |  c_mktsegment VARCHAR(32))""".stripMargin)
-    for (url <- Seq(srcUrl, dstUrl)) {
+    for (url <- if (destDdl) Seq(srcUrl, dstUrl) else Seq(srcUrl)) {
       val conn = java.sql.DriverManager.getConnection(url)
       try {
         val st = conn.createStatement()
@@ -96,6 +101,11 @@ class JdbcRoundTripSpec extends SparkSpecBase {
     Seq("region", "nation", "customer").foreach { t =>
       Sources.appendJdbc(spark.read.parquet(s"$src/$t.parquet"), srcUrl, t, props)
     }
+    (srcUrl, dstUrl)
+  }
+
+  bothGateSides("catalog reflection: subset a live Derby DB end-to-end with ZERO declared edges") {
+    val (srcUrl, dstUrl) = liveDbs(destDdl = true)
 
     // reflection discovers the whole graph from the catalog
     val graph = FkGraph.reflect(srcUrl)
@@ -123,6 +133,48 @@ class JdbcRoundTripSpec extends SparkSpecBase {
     assert(orphans.map(_._1) ==
       Seq("customer->nation(c_nationkey)", "nation->region(n_regionkey)") &&
       orphans.forall(_._2 == 0L), orphans)
+  }
+
+  test("a driver-side run reads each source table once: the rows written are the rows read") {
+    val (srcUrl, dstUrl) = liveDbs(destDdl = true)
+    val args = SubsetCli.CliArgs(srcUrl, dstUrl,
+      Subsetter.Config(fraction = 0.4, children = 1), yes = true)
+    // the executed plan of every action the run starts (a write command
+    // prints its input's plan), AQE's initial plan dropped
+    val plans = ActionPlans.of(spark) { SubsetCli.run(spark, args); () }
+      .map(_.split("== Initial Plan ==").head)
+    val scans = Seq("region", "nation", "customer").map { t =>
+      t -> plans.map(_.split(java.util.regex.Pattern.quote(s"JDBCRelation($t)"), -1)
+        .length - 1).sum
+    }.toMap
+    assert(scans.values.forall(_ == 1), scans)
+  }
+
+  test("a source row re-pointed after the subset is computed cannot orphan the written copy") {
+    val (srcUrl, dstUrl) = liveDbs(destDdl = false)
+    val graph = FkGraph.reflect(srcUrl)
+    val src = graph.tables.map { t =>
+      val df = Sources.readJdbc(spark, srcUrl, t, props)
+      t -> df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
+    }.toMap
+    val counts = src.map { case (t, df) => t -> df.count() }
+    // children = 0: a few customers close over a handful of nations
+    val out = Subsetter.subset(src, graph,
+      Subsetter.Config(fraction = 0.05, children = 0), counts)
+    val kept = out("nation").select("n_nationkey").collect().map(_.getInt(0)).toSet
+    val outside = (0 until 25).find(n => !kept(n)).get
+    val cust = out("customer").select("c_custkey").head().getLong(0)
+    // a concurrent writer re-points a kept customer at a nation the
+    // subset does not hold, between the subset and its write
+    val conn = java.sql.DriverManager.getConnection(srcUrl)
+    try assert(conn.createStatement().executeUpdate(
+      s"UPDATE customer SET c_nationkey = $outside WHERE c_custkey = $cust") == 1)
+    finally conn.close()
+    graph.insertionOrder.filter(out.contains)
+      .foreach(t => Sources.writeJdbc(out(t), dstUrl, t, props))
+    val orphans = SubsetCli.validateDest(spark, dstUrl, out.keySet, graph)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(orphans.nonEmpty && orphans.forall(_._2 == 0L), orphans)
   }
 
   test("reflection groups composite FK columns by KEY_SEQ runs") {

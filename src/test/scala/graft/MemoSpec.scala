@@ -43,6 +43,17 @@ class MemoSpec extends SparkSpecBase {
     d
   }
 
+  /** Every kind's store at `d`'s current fingerprint: Memo never prunes
+    * one, so each test deletes those its fixtures made. */
+  private def rmStores(d: String): Unit = arts.foreach(a => rm(store(a, d)))
+
+  /** Runs `body` on fixture `seed`, then deletes its stores and, last
+    * (the fingerprint reads it), the fixture. */
+  private def withFixture(seed: Int)(body: String => Unit): Unit = {
+    val d = fixture(seed)
+    try body(d) finally { rmStores(d); rm(new File(d)) }
+  }
+
   private def writeTables(d: String, seed: Int): Unit = {
     val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta")
     (0 until 40).map { i =>
@@ -66,89 +77,94 @@ class MemoSpec extends SparkSpecBase {
 
   for (a <- arts) {
     test(s"${a.kind}: cold-JVM round trip is bit-exact; a damaged store recomputes and re-persists") {
-      val d = fixture(1)
-      val v1 = a.run(d)
-      assert(store(a, d).exists(), "the first call must persist the store")
-      Memo.dropMemory()
-      assert(a.run(d) == v1, "a load from the store must reproduce the value bit-exactly")
-      damage(store(a, d))
-      Memo.dropMemory()
-      assert(a.run(d) == v1, "a damaged store must recompute the same value")
-      assert(store(a, d).exists(), "recomputing must re-persist")
-      Memo.dropMemory()
-      assert(a.run(d) == v1)
+      withFixture(1) { d =>
+        val v1 = a.run(d)
+        assert(store(a, d).exists(), "the first call must persist the store")
+        Memo.dropMemory()
+        assert(a.run(d) == v1, "a load from the store must reproduce the value bit-exactly")
+        damage(store(a, d))
+        Memo.dropMemory()
+        assert(a.run(d) == v1, "a damaged store must recompute the same value")
+        assert(store(a, d).exists(), "recomputing must re-persist")
+        Memo.dropMemory()
+        assert(a.run(d) == v1)
+      }
     }
 
     test(s"${a.kind}: a regenerated fixture recomputes and evicts the stale entry") {
-      val d = fixture(1)
-      val table = new File(d, s"${a.table}.parquet")
-      val saved = new File(d, "saved")
-      val v1 = a.run(d)
-      // regenerate: the first version moves aside (rename keeps name,
-      // length and mtime, so moving it back restores its fingerprint)
-      assert(table.renameTo(saved))
-      writeTables(d + "/regen", 2)
-      assert(new File(d, s"regen/${a.table}.parquet").renameTo(table))
-      val v2 = a.run(d)
-      assert(v2 != v1, "a regenerated fixture must recompute")
-      // back at the first fingerprint with its store gone: a stale
-      // entry still in memory would answer without touching the disk
-      rm(table)
-      assert(saved.renameTo(table))
-      rm(store(a, d))
-      assert(a.run(d) == v1)
-      assert(store(a, d).exists(),
-        "the insert at the new fingerprint must have evicted the stale entry")
+      withFixture(1) { d =>
+        val table = new File(d, s"${a.table}.parquet")
+        val saved = new File(d, "saved")
+        val v1 = a.run(d)
+        // regenerate: the first version moves aside (rename keeps name,
+        // length and mtime, so moving it back restores its fingerprint)
+        assert(table.renameTo(saved))
+        writeTables(d + "/regen", 2)
+        assert(new File(d, s"regen/${a.table}.parquet").renameTo(table))
+        val v2 = a.run(d)
+        assert(v2 != v1, "a regenerated fixture must recompute")
+        rmStores(d) // the regenerated fingerprint's
+        // back at the first fingerprint with its store gone: a stale
+        // entry still in memory would answer without touching the disk
+        rm(table)
+        assert(saved.renameTo(table))
+        rm(store(a, d))
+        assert(a.run(d) == v1)
+        assert(store(a, d).exists(),
+          "the insert at the new fingerprint must have evicted the stale entry")
+      }
     }
 
     test(s"${a.kind}: a compute held for one directory does not block another directory") {
       val held = java.nio.file.Files.createTempDirectory("graft-memo-held").toString
-      val d = fixture(3)
-      Memo.dropMemory()
-      rm(store(a, d))
-      val started = new CountDownLatch(1)
-      val release = new CountDownLatch(1)
-      val intCodec = Memo.binary[Int](0x54535431)((o, v) => o.writeInt(v))(_.readInt())
-      val holder = new Thread(() => {
-        Memo(a.kind, held, a.table, a.params: _*)(intCodec) {
-          started.countDown(); release.await(); 7
+      withFixture(3) { d =>
+        Memo.dropMemory()
+        rm(store(a, d))
+        val started = new CountDownLatch(1)
+        val release = new CountDownLatch(1)
+        val intCodec = Memo.binary[Int](0x54535431)((o, v) => o.writeInt(v))(_.readInt())
+        val holder = new Thread(() => {
+          Memo(a.kind, held, a.table, a.params: _*)(intCodec) {
+            started.countDown(); release.await(); 7
+          }
+          ()
+        })
+        holder.start()
+        try {
+          assert(started.await(60, TimeUnit.SECONDS))
+          val other = new Thread(() => { a.run(d); () })
+          other.start()
+          other.join(180000)
+          assert(!other.isAlive, s"a ${a.kind} call for another directory waited on the held compute")
+          assert(store(a, d).exists())
+        } finally {
+          release.countDown()
+          holder.join()
+          rm(Memo.pathFor(a.kind, held, a.table, a.params: _*))
+          rm(new File(held))
         }
-        ()
-      })
-      holder.start()
-      try {
-        assert(started.await(60, TimeUnit.SECONDS))
-        val other = new Thread(() => { a.run(d); () })
-        other.start()
-        other.join(180000)
-        assert(!other.isAlive, s"a ${a.kind} call for another directory waited on the held compute")
-        assert(store(a, d).exists())
-      } finally {
-        release.countDown()
-        holder.join()
-        rm(Memo.pathFor(a.kind, held, a.table, a.params: _*))
       }
     }
   }
 
   test("a load failure that is not damage propagates and keeps the store") {
-    val d = fixture(4)
-    val codec = Memo.binary[Int](0x54535432)((o, v) => o.writeInt(v))(_.readInt())
-    assert(Memo("memospec", d, "documents")(codec)(5) == 5)
-    val f = Memo.pathFor("memospec", d, "documents")
-    Memo.dropMemory()
-    val failing = new Memo.Codec[Int] {
-      def write(v: Int, to: File): Unit = codec.write(v, to)
-      def read(from: File): Int = throw new IllegalStateException("transient")
+    withFixture(4) { d =>
+      val codec = Memo.binary[Int](0x54535432)((o, v) => o.writeInt(v))(_.readInt())
+      assert(Memo("memospec", d, "documents")(codec)(5) == 5)
+      val f = Memo.pathFor("memospec", d, "documents")
+      Memo.dropMemory()
+      val failing = new Memo.Codec[Int] {
+        def write(v: Int, to: File): Unit = codec.write(v, to)
+        def read(from: File): Int = throw new IllegalStateException("transient")
+      }
+      intercept[IllegalStateException](Memo("memospec", d, "documents")(failing)(6))
+      assert(f.exists(), "only a damaged store may be deleted")
+      assert(Memo("memospec", d, "documents")(codec)(6) == 5, "the valid store still loads")
+      rm(f)
     }
-    intercept[IllegalStateException](Memo("memospec", d, "documents")(failing)(6))
-    assert(f.exists(), "only a damaged store may be deleted")
-    assert(Memo("memospec", d, "documents")(codec)(6) == 5, "the valid store still loads")
-    rm(f)
   }
 
   test("brute medium: the parquet store is the same relation as the driver rows") {
-    val d = fixture(5)
-    assert(brute(0L)(d) == brute(Long.MaxValue)(d))
+    withFixture(5)(d => assert(brute(0L)(d) == brute(Long.MaxValue)(d)))
   }
 }

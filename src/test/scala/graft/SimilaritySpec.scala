@@ -244,14 +244,20 @@ class SimilaritySpec extends SparkSpecBase {
       vec(near).toDF("vec_id", "embedding")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     }
+    // Memo never prunes a store: delete this fingerprint's, either medium
+    def dropStores(): Unit = Seq("brute", "brute-rows").foreach(kind =>
+      org.apache.commons.io.FileUtils.deleteQuietly(graft.Memo.pathFor(kind, tmp, "embeddings")))
     write(5.0) // cid 1 points the same way as qid 0; cid 2 opposite
     def top1(): Long = graft.queries.SimilarityQueries
       .simTopkEmbeddings(spark, tmp)
       .filter($"qid" === 0L && $"rnk" === 1).select("cid").as[Long].head()
     assert(top1() == 1L)
+    dropStores()
     write(-5.0) // now cid 2 is the aligned one
     assert(top1() == 2L,
       "regenerated embeddings must invalidate the brute top-k memo")
+    dropStores()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   test("fixture property the LSH-tier oracle reuse relies on: qualifying pairs sit at j >= 0.8") {

@@ -2,18 +2,21 @@ package graft
 
 import graft.operators.Subsetter
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** The subsetter's size gate must not change answers: on random
   * catalogs the key sets computed on the driver equal, table by table,
-  * those of the distributed rounds (broadcast threshold -1). Catalogs
-  * are random FK DAGs over long, composite (string, int) and string PKs,
-  * with self-FK cycles, int FKs into long PKs, null and partly-null FKs,
-  * FK values with no parent row, and strings whose UTF-16 and UTF-8
-  * orders disagree (U+FF5E vs U+10000), so a child pull that orders by
-  * the wrong one picks other children. Runs vary fraction, children,
+  * those of the distributed rounds (broadcast threshold -1), and so do
+  * the written rows as multisets, whether they come from the driver's
+  * collect or, at a threshold the keys fit and the rows do not, from the
+  * semi-join. Catalogs are random FK DAGs over long, composite (string,
+  * int) and string PKs, with self-FK cycles, int FKs into long PKs, null
+  * and partly-null FKs, FK values with no parent row, and strings whose
+  * UTF-16 and UTF-8 orders disagree (U+FF5E vs U+10000), so a child pull
+  * that orders by the wrong one picks other children. Runs vary fraction, children,
   * forced rows, exclude/full globs, `topUpRounds = -1`, `childRounds =
   * 2` and delta mode against a random destination. PKs are unique: on a
   * non-unique PK the driver side deliberately demands more parents (see
@@ -152,6 +155,56 @@ class SmallSubsetSpec extends SparkSpecBase {
     assert(driver.keySet == distributed.keySet)
     for (t <- driver.keys.toSeq.sorted)
       assert(driver(t) == distributed(t), s"$t key sets differ (graph ${c.graph}, ${c.cfg})")
+  }
+
+  private type Written = Map[String, (Seq[String], Map[Seq[Any], Int])]
+
+  /** The written rows of a run per table, as its column names and the
+    * multiset of its rows over all columns, and the gate sides it took. */
+  private def subsetRows(c: Case): (Written, Subsetter.Sides) = {
+    val (out, sides) = Subsetter.subsetGated(c.tables, c.graph, c.cfg, Map.empty,
+      c.existing, c.closed)
+    (out.map { case (t, df) =>
+      t -> (df.columns.toSeq, df.collect().toSeq.groupMapReduce(_.toSeq)(_ => 1)(_ + _))
+    }, sides)
+  }
+
+  /** Case `c` with payload columns `w0`..`w<n-1>` before every table's
+    * own, so no PK leads its table's columns. */
+  private def widened(c: Case, n: Int): Case = c.copy(tables = c.tables.map { case (t, df) =>
+    t -> df.select((0 until n).map(j => lit(s"w$j").as(s"w$j")) ++ df.columns.map(col): _*)
+  })
+
+  private def assertSameRows(c: Case, driver: Written, distributed: Written): Unit = {
+    assert(driver.keySet == distributed.keySet)
+    for (t <- driver.keys.toSeq.sorted)
+      assert(driver(t) == distributed(t), s"$t rows differ (graph ${c.graph}, ${c.cfg})")
+  }
+
+  for (i <- 0 until 8) test(s"driver-written rows == distributed rows, random catalog $i") {
+    val c = widened(genCase(i), 1)
+    val (driver, sides) = subsetRows(c)
+    val (distributed, distributedSides) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(subsetRows(c))
+    assert(sides == Subsetter.Sides(keys = true, rows = true) &&
+      distributedSides == Subsetter.Sides(keys = false, rows = false))
+    assertSameRows(c, driver, distributed)
+  }
+
+  for (i <- Seq(2, 5)) test(s"keys fit, rows do not: the semi-join's rows, random catalog $i") {
+    // 60 payload strings add 1200 planner bytes a row; key projections
+    // take under 100 (a PK and up to three FKs of ≤ 24 bytes, hash,
+    // flag, row overhead), so 300 bytes a source row sits between them
+    val c0 = genCase(i)
+    assert(c0.existing.nonEmpty, "a delta run")
+    val c = widened(c0, 60)
+    val budget = 300L * c.tables.valuesIterator.map(_.count()).sum
+    val (driver, sides) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> budget.toString)(subsetRows(c))
+    val (distributed, _) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(subsetRows(c))
+    assert(sides == Subsetter.Sides(keys = true, rows = false))
+    assertSameRows(c, driver, distributed)
   }
 
   /** The audit input of case `i`: the raw source tables (with their

@@ -213,11 +213,11 @@ class SubsetCliSpec extends SparkSpecBase {
     val line = SubsetCli.summaryJson(
       Seq(("customer", 150L, 60L), ("nation", 25L, 10L)),
       Map("customer" -> 60L, "nation" -> 12L, "region" -> 3L), orphans = 0L, onDriver = true,
-      auditOnDriver = false)
+      rowsOnDriver = true, auditOnDriver = false)
     assert(!line.contains("\n"))
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(root.get("orphans").asLong == 0L && root.get("key_sets").asText == "driver" &&
-      root.get("audit").asText == "distributed")
+      root.get("rows").asText == "driver" && root.get("audit").asText == "distributed")
     val rows = root.get("tables")
     assert(rows.size == 3)
     assert(rows.get(0).get("table").asText == "customer" &&
@@ -227,7 +227,9 @@ class SubsetCliSpec extends SparkSpecBase {
     // a table written without a plan row (an excluded parent) has written rows only
     assert(rows.get(2).get("table").asText == "region" && !rows.get(2).has("source_rows") &&
       rows.get(2).get("written_rows").asLong == 3L)
-    val other = SubsetCli.summaryJson(Nil, Map.empty, 2L, onDriver = false, auditOnDriver = true)
-    assert(other.contains("\"key_sets\":\"distributed\"") && other.contains("\"audit\":\"driver\""))
+    val other = SubsetCli.summaryJson(Nil, Map.empty, 2L, onDriver = false,
+      rowsOnDriver = false, auditOnDriver = true)
+    assert(other.contains("\"key_sets\":\"distributed\"") &&
+      other.contains("\"rows\":\"source\"") && other.contains("\"audit\":\"driver\""))
   }
 }

@@ -266,6 +266,7 @@ class TextFunctionsSpec extends SparkSpecBase {
     assert(got(1L) > got(2L),
       s"target-like doc must outscore raw-only doc: ${got(1L)} <= ${got(2L)}")
     assert(got(0L) > got(10L), "same ordering for the training docs themselves")
+    dropCorpus(tmp, TextQueries.LmVocabCap)
   }
 
   test("bigram LM cache: retrains when the corpus files change") {
@@ -278,11 +279,13 @@ class TextFunctionsSpec extends SparkSpecBase {
     write("alpha beta gamma")
     val (a, _, _) = TextQueries.lmCountsCapped(spark, tmp, 100)
     assert(a.keySet == Set("alpha beta", "beta gamma"))
+    dropStores(tmp, 100) // this fingerprint's; the rewrite makes another
     Thread.sleep(1100) // ensure a distinct mtime even on coarse filesystems
     write("delta epsilon zeta")
     val (b, _, _) = TextQueries.lmCountsCapped(spark, tmp, 100)
     assert(b.keySet == Set("delta epsilon", "epsilon zeta"),
       "regenerated fixture must invalidate the memoized model")
+    dropCorpus(tmp, 100)
   }
 
   test("trained-model disk store: cross-JVM round trip, corrupt store retrains") {
@@ -313,6 +316,19 @@ class TextFunctionsSpec extends SparkSpecBase {
     assert(TextQueries.lmCountsCapped(spark, tmp, 100) == lm1,
       "corrupt store must retrain to the same model")
     assert(lmStore.exists(), "retraining must re-persist the store")
+    dropCorpus(tmp, 100)
+  }
+
+  /** Deletes the LM and DSIR stores of corpus `dir` at its current
+    * fingerprint for each vocabulary cap (Memo never prunes a store). */
+  private def dropStores(dir: String, caps: Int*): Unit =
+    for (kind <- Seq("lm", "dsir"); cap <- caps)
+      org.apache.commons.io.FileUtils.deleteQuietly(graft.Memo.pathFor(kind, dir, "documents", cap))
+
+  /** [[dropStores]], then the corpus itself, which the fingerprint reads. */
+  private def dropCorpus(dir: String, caps: Int*): Unit = {
+    dropStores(dir, caps: _*)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("canonicalUrl: case-fold, fragment, utm strip, slash trim, preserved differences") {
