@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * is declared in [[FkGraph]] — the analogue of the reference's
   * `--config` pseudo-constraints.
   *
-  * Scale: `spark.read.parquet` is metadata-only; the vectorized reader +
-  * Catalyst handle column pruning / predicate pushdown per query. Nothing
-  * here collects to the driver, and a 100 TB table is just more files
-  * behind the same path.
+  * Scale: `spark.read.parquet` reads footers only, in one small
+  * schema-inference job per call; the vectorized reader + Catalyst
+  * handle column pruning / predicate pushdown per query. Nothing here
+  * collects to the driver, and a 100 TB table is just more files behind
+  * the same path.
   */
 object Catalog {
 

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{ConcurrentJobs, SmallAudit, Subsetter}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Using
 
 /** CLI parity with the reference's console entry point
   * (`rdbms-subsetter <source> <dest> <fraction> [flags]` —
@@ -62,15 +63,17 @@ object SubsetCli {
     * plan needs (one COUNT(*) per table over one connection; the DB
     * aggregates, nothing moves). The parquet analogue is
     * [[Sources.footerRowCount]]. */
-  private def jdbcRowCounts(url: String, tables: Seq[String]): Map[String, Long] = {
-    val conn = java.sql.DriverManager.getConnection(url)
-    try tables.map { t =>
-      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
-      rs.next()
-      t -> rs.getLong(1)
-    }.toMap
-    finally conn.close()
-  }
+  private def jdbcRowCounts(url: String, tables: Seq[String]): Map[String, Long] =
+    Using.resource(java.sql.DriverManager.getConnection(url)) { conn =>
+      tables.map { t =>
+        Using.resource(conn.createStatement()) { st =>
+          Using.resource(st.executeQuery(s"SELECT COUNT(*) FROM $t")) { rs =>
+            rs.next()
+            t -> rs.getLong(1)
+          }
+        }
+      }.toMap
+    }
 
   /** Unquoted identifiers come back UPPER-cased from Derby-family
     * catalogs; the engine (and the reflected graph) is lower-case, and

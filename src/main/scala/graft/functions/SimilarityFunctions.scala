@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.{SmallGraph, SmallJaccard}
 import graft.plans.Kernels
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -350,7 +351,15 @@ object SimilarityFunctions {
     * cannot satisfy the prefix/overlap bounds — a strictly broader
     * miss condition than the exact tier's "every shared shingle
     * over-cap". Oracle-checked queries choose a cap above the
-    * corpus max df, where both tiers are fully exact.) */
+    * corpus max df, where both tiers are fully exact.)
+    *
+    * Small inputs skip the rounds: `base` (doc_id, sh, sz) is
+    * materialized once, observing Σ sz, and when those postings, the
+    * index walk and the kept pairs fit the broadcast budget (and no
+    * shingle is over the cap) [[graft.operators.SmallJaccard]] scores
+    * every sharing pair on the driver from one collect — the same rows,
+    * bit for bit, as a local relation. Otherwise the rounds below read
+    * the same materialization. */
   def jaccardPairsNgramPrefix(docs: DataFrame, n: Int, minJaccard: Double,
                               maxDf: Int = 100000): DataFrame = {
     // r18: widen decision read from the RAW scan (before the base
@@ -364,13 +373,26 @@ object SimilarityFunctions {
     // r18: the shingle-kernel scan itself is widened (gated) — for
     // un-widened callers it ran at the raw scan width (the
     // jaccardPairsNgramLsh finding, same trap)
-    val base = (if (widen) docs.repartition(width) else docs)
-      .select(col("doc_id"),
-        Kernels.call("graft_shingle_hashes",
-          split(col("text"), " "), lit(n)).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sz", size(col("sh")))
-      .localCheckpoint(false)
+    // Materialized once, observing the postings count (Σ sz): a small
+    // input finishes on the driver from this relation
+    // ([[graft.operators.SmallJaccard]]), a large one runs the rounds
+    // below over it.
+    val (base, postingRows) = SmallGraph.materialize(
+      (if (widen) docs.repartition(width) else docs)
+        .select(col("doc_id"),
+          Kernels.call("graft_shingle_hashes",
+            split(col("text"), " "), lit(n)).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .withColumn("sz", size(col("sh"))),
+      coalesce(sum(col("sz")), lit(0L)))
+    SmallJaccard.prefixTier(base, postingRows, minJaccard, maxDf)
+      .getOrElse(prefixDistributed(base, widen, width, minJaccard, maxDf))
+  }
+
+  /** [[jaccardPairsNgramPrefix]]'s distributed rounds over the
+    * materialized (doc_id, sh, sz) relation. */
+  private def prefixDistributed(base: DataFrame, widen: Boolean, width: Int,
+                                minJaccard: Double, maxDf: Int): DataFrame = {
     val postings = base.select(col("doc_id"), col("sz"),
       explode(col("sh")).as("tok"))
     val df = postings.groupBy("tok")
@@ -406,7 +428,7 @@ object SimilarityFunctions {
     // (1) the ranked-prefix relation feeds BOTH sides of the candidate
     // self-join, and AQE does not reuse the stage — explode + df join +
     // window all executed twice (task-metrics-verified). localCheckpoint
-    // materializes it once (the `base` precedent above).
+    // materializes it once (the `base` precedent).
     // (2) at gate SFs AQE coalesces the window's doc_id exchange to ONE
     // task (tiny bytes, dense CPU — 2.6 s single-task stage measured at
     // sf0.1, and the broadcast self-join inherits that width). A gated

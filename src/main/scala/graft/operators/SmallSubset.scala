@@ -70,7 +70,7 @@ private[operators] object SmallSubset {
     case _ => false
   }
 
-  private def keyType(dt: DataType): Boolean = dt match {
+  private[operators] def keyType(dt: DataType): Boolean = dt match {
     case s: StringType => s == StringType // the binary (UTF8_BINARY) collation
     case _: DecimalType | DateType | TimestampType => true
     case _ => isIntegral(dt)
@@ -82,17 +82,22 @@ private[operators] object SmallSubset {
   private[operators] def castsToKey(ct: DataType, pt: DataType): Boolean = keyType(pt) &&
     (ct == pt || (isIntegral(ct) && isIntegral(pt) && ct.defaultSize <= pt.defaultSize))
 
-  /** Spark's ascending order on non-null values of the key types. */
+  /** Spark's ascending order on non-null Row values of a key type. */
+  private[operators] val valueOrder: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+      case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+  }
+
+  /** [[valueOrder]], lexicographic over the key's columns. */
   private val pkOrder: Ordering[Key] = new Ordering[Key] {
     def compare(a: Key, b: Key): Int = {
       var i = 0
       var c = 0
       while (c == 0 && i < a.size) {
-        c = (a(i), b(i)) match {
-          case (x: String, y: String) =>
-            UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
-          case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
-        }
+        c = valueOrder.compare(a(i), b(i))
         i += 1
       }
       c

@@ -388,6 +388,12 @@ object CoreQueries {
     }
   }
 
+  /** `target/<name>` under the working directory, absolute: where the
+    * once-per-session dumps and sinks below are written, and where the
+    * oracle SQL built from the same value reads them. */
+  private def runDir(name: String): String =
+    new java.io.File("target", name).getAbsolutePath
+
   // --- §3b: end-to-end subsetter postcondition, ORACLE-checked --------
   // The flagship pipeline's output dumped to parquet once per session,
   // then audited from BOTH engines over the same files: DuckDB
@@ -396,7 +402,7 @@ object CoreQueries {
   // target when the source suffices) are driver-verified artifacts,
   // not just scalatest assertions.
   private object SubsetDump {
-    val root = "/root/repo/target/subset_oracle"
+    val root: String = runDir("subset_oracle")
     val fraction = 0.1
     // The dump is SF-scoped (…/subset_oracle/sf0.01/<table>) so a Bench
     // run at another SF between Verify and the driver's DuckDB compare
@@ -499,7 +505,7 @@ object CoreQueries {
   // DuckDB oracle read these same files — the round-5 fix for the
   // audit rebuilding a fresh f=0.05 pipeline inside every query call.
   private object DeltaDump {
-    val root = "/root/repo/target/subset_delta_oracle"
+    val root: String = runDir("subset_delta_oracle")
     val destFraction = 0.05
     val fraction = 0.1
     // SF-scoped like SubsetDump: the oracle SQL pins the driver's
@@ -666,7 +672,7 @@ object CoreQueries {
   // partition directory's files scanned) are guarded on the declared
   // keys in PlanQualitySpec.
   private[graft] object CapabilitySinks {
-    val root = "/root/repo/target/capability_sinks"
+    val root: String = runDir("capability_sinks")
     private val once = new RunOnce("capability sink")
     def partPath(dir: String): String = s"$root/${sfDirName(dir)}/orders_by_status"
     def ensurePartitioned(s: SparkSession, dir: String): Unit = once("partitioned", dir) {

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Pins the two properties the sf1 scale rung rests on (VERDICT r10
   * item 1): the generator's output is SCHEMA-IDENTICAL to the driver's
   * testdata (so every query/oracle runs unchanged at a generated rung)
@@ -14,7 +12,7 @@ class GenDataSpec extends SparkSpecBase {
   import spark.implicits._
 
   private lazy val genDir = {
-    val d = Files.createTempDirectory("graft-gendata").toString
+    val d = tempDir("graft-gendata").toString
     GenData.generate(spark, 0.001, d)
     d
   }
@@ -40,7 +38,7 @@ class GenDataSpec extends SparkSpecBase {
   }
 
   test("generation is deterministic: a second run produces identical rows") {
-    val d2 = Files.createTempDirectory("graft-gendata2").toString
+    val d2 = tempDir("graft-gendata2").toString
     GenData.generate(spark, 0.001, d2)
     for (t <- Seq("lineitem", "documents", "embeddings", "events")) {
       val a = spark.read.parquet(s"$genDir/$t.parquet")

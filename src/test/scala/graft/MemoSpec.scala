@@ -38,7 +38,7 @@ class MemoSpec extends SparkSpecBase {
 
   /** A fixture dir with both tables; `seed` changes every row. */
   private def fixture(seed: Int): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val d = tempDir("graft-memo").toString
     writeTables(d, seed)
     d
   }
@@ -116,7 +116,7 @@ class MemoSpec extends SparkSpecBase {
     }
 
     test(s"${a.kind}: a compute held for one directory does not block another directory") {
-      val held = java.nio.file.Files.createTempDirectory("graft-memo-held").toString
+      val held = tempDir("graft-memo-held").toString
       withFixture(3) { d =>
         Memo.dropMemory()
         rm(store(a, d))

@@ -208,16 +208,32 @@ class PlanQualitySpec extends SparkSpecBase {
   }
 
   test("dedup_ngram_prefix: candidates come from the prefix-postings hash join, never BNLJ/cartesian") {
-    val df = SimilarityQueries.dedupNgramPrefix(spark, dir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(!p.contains("BroadcastNestedLoopJoin"))
-    assert(!p.contains("CartesianProduct"))
-    // the verify joins must carry candidate ids back to the per-doc
-    // ARRAYS (pair-local intersect-count kernel, r18 — previously
-    // size(array_intersect)), not re-join the index
-    assert(p.contains("GraftSets.intersectCount("),
-      "prefix tier must verify pair-locally over the shingle arrays")
+    // the distributed tier's shape: with the broadcast budget on, this
+    // corpus finishes on the driver (operators.SmallJaccard)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = SimilarityQueries.dedupNgramPrefix(spark, dir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      assert(!p.contains("BroadcastNestedLoopJoin"))
+      assert(!p.contains("CartesianProduct"))
+      // the verify joins must carry candidate ids back to the per-doc
+      // ARRAYS (pair-local intersect-count kernel, r18 — previously
+      // size(array_intersect)), not re-join the index
+      assert(p.contains("GraftSets.intersectCount("),
+        "prefix tier must verify pair-locally over the shingle arrays")
+    }
+  }
+
+  test("dedup_jaccard_docs on the driver: no join and no window executes") {
+    // the slice's postings fit the broadcast budget, so the pairs come
+    // from one materialization and one collect (operators.SmallJaccard)
+    val plans = ActionPlans.of(spark) {
+      SimilarityQueries.dedupJaccardDocs(spark, dir).collect()
+    }.map(_.split("== Initial Plan ==").head)
+    assert(plans.exists(_.contains("GraftHashes.shingleHashes(")),
+      "the shingle hashes are still computed by Spark")
+    assert(plans.forall(p => !p.contains("Join") && !p.contains("Window")),
+      plans.mkString("\n----\n"))
   }
 
   test("text_dup_spans: span df rides one hash agg + a semi join; no BNLJ/cartesian") {

@@ -124,7 +124,7 @@ class SimilaritySpec extends SparkSpecBase {
     assert(missedHigh.isEmpty, s"high-jaccard pairs missed by banding: $missedHigh")
   }
 
-  test("jaccardPairsNgramPrefix: prefix-filtered tier IS the exact tier on the real corpus") {
+  bothGateSides("jaccardPairsNgramPrefix: prefix-filtered tier IS the exact tier on the real corpus") {
     // unlike the LSH tier this equality is a THEOREM (prefix-filter
     // completeness), not a fixture property — but pin it on the real
     // corpus anyway so a broken prefix-length or length-filter edge
@@ -139,7 +139,7 @@ class SimilaritySpec extends SparkSpecBase {
     assert(pref.toSeq == exact.toSeq)
   }
 
-  test("jaccardPairsNgramPrefix(n=1) == unigram jaccardPairs on the real corpus") {
+  bothGateSides("jaccardPairsNgramPrefix(n=1) == unigram jaccardPairs on the real corpus") {
     // r14: dedup_components' pair stage moved from the inverted-index
     // tier to the prefix tier at the UNIGRAM basis (n=1 shingles ==
     // distinct tokens, hashed). The two tiers must emit the identical
@@ -157,7 +157,7 @@ class SimilaritySpec extends SparkSpecBase {
     assert(pref.toSeq == exact.toSeq)
   }
 
-  test("jaccardPairsNgramPrefix == jaccardPairsNgram on random corpora at several thresholds") {
+  bothGateSides("jaccardPairsNgramPrefix == jaccardPairsNgram on random corpora at several thresholds") {
     // the completeness argument (df-ascending prefix of length
     // |x| - ceil(t|x|) + 1 + length filter) must hold on ANY corpus;
     // drive it with seeded random near-dup-rich corpora across
@@ -190,7 +190,7 @@ class SimilaritySpec extends SparkSpecBase {
     }
   }
 
-  test("maxDf over-cap semantics: index tier approximates scores, prefix tier stays exact but can miss") {
+  bothGateSides("maxDf over-cap semantics: index tier approximates scores, prefix tier stays exact but can miss") {
     // r14 ADVICE: above the df cap the two exact tiers DIVERGE — the
     // inverted-index tier drops over-cap tokens from index AND sizes
     // (approximate scores), the prefix tier from the index only (exact
@@ -230,11 +230,65 @@ class SimilaritySpec extends SparkSpecBase {
       s"prefix tier must keep exact scores and miss only over-cap-supported pairs, got $cappedPref")
   }
 
+  /** Exact Jaccard of (id, shingle set) documents by brute force; pairs
+    * sharing no shingle are not emitted. Jaccard as its bits. */
+  private def bruteJaccard(docs: Seq[(Long, Set[String])],
+                           t: Double): Set[(Long, Long, Long)] =
+    (for ((a, x) <- docs; (b, y) <- docs if a < b) yield {
+      val c = (x & y).size
+      (a, b, c, c.toDouble / (x.size + y.size - c).toDouble)
+    }).collect { case (a, b, c, j) if c > 0 && j >= t =>
+      (a, b, java.lang.Double.doubleToLongBits(j)) }.toSet
+
+  bothGateSides("prefix Jaccard tier == brute force, bit for bit, on random corpora") {
+    // both gate sides of operators.SmallJaccard against one reference:
+    // duplicate documents, documents with no shingles, shuffled ids
+    val onDriver = spark.sessionState.conf.autoBroadcastJoinThreshold > 0
+    def bits(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] = {
+      assert(df.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == onDriver)
+      df.as[(Long, Long, Double)].collect()
+        .map { case (a, b, j) => (a, b, java.lang.Double.doubleToLongBits(j)) }.toSet
+    }
+    val rnd = new scala.util.Random(7)
+    val vocab = ('a' to 'h').map(_.toString)
+    for (trial <- 1 to 2) {
+      val bases = Seq.fill(10)(Seq.fill(rnd.nextInt(14))(
+        vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      val texts = bases.flatMap { b =>
+        val toks = b.split(" ").toSeq
+        Seq(b, b, toks.drop(1).mkString(" "),
+          toks.updated(rnd.nextInt(toks.size), vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      }
+      val ids = rnd.shuffle(texts.indices.map(i => i * 7L - 50)).toSeq
+      val corpus = ids.zip(texts)
+      val docs = corpus.toDF("doc_id", "text")
+      val shingles3 = corpus.map { case (d, text) =>
+        val toks = text.split(" ", -1).toSeq
+        d -> (if (toks.size < 3) Set.empty[String] else toks.sliding(3).map(_.mkString(" ")).toSet)
+      }
+      for (t <- Seq(0.3, 0.5, 0.7, 0.9))
+        assert(bits(jaccardPairsNgramPrefix(docs, 3, t)) == bruteJaccard(shingles3, t),
+          s"trial $trial t=$t")
+    }
+  }
+
+  test("prefix Jaccard tier: the driver side keeps the distributed side's schema") {
+    val docs = Seq((3, "a b c d"), (1, "a b c e"), (2, "x y")).toDF("doc_id", "text")
+    val driver = jaccardPairsNgramPrefix(docs, 1, 0.5)
+    val distributed = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      jaccardPairsNgramPrefix(docs, 1, 0.5))
+    assert(driver.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(driver.schema == distributed.schema)
+    assert(driver.collect().toSet == distributed.collect().toSet)
+  }
+
   test("brute top-k memo: regenerated embeddings invalidate the session cache") {
     // bruteTopk is memoized per (dir, file fingerprint) — same contract
     // as the bigram-LM cache: a fixture regenerated within one JVM
     // session must recompute, never serve stale neighbours
-    val tmp = java.nio.file.Files.createTempDirectory("graft-brute").toString
+    val tmp = tempDir("graft-brute").toString
     def vec(near: Double): Seq[(Long, Array[Float])] = {
       def v(x: Double) = (0 until 64).map(i => if (i == 0) x.toFloat else 0.1f).toArray
       Seq((0L, v(1.0)), (1L, v(near)), (2L, v(-near)))
@@ -1090,7 +1144,7 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("widenForCheckpoint: prep lands at full shuffle width for a rung-shaped corpus, keeps the scan for a gate-SF one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-widen").toString
+    val dir = tempDir("graft-widen").toString
     spark.range(5000)
       .selectExpr("id as vec_id", "array(cast(id as double), cast(id+1 as double)) as e")
       .coalesce(1).write.mode("overwrite").parquet(dir)

@@ -7,7 +7,7 @@ class SourcesSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("csv and json roundtrip preserve data under explicit schemas") {
-    val dir = Files.createTempDirectory("graft-sources").toString
+    val dir = tempDir("graft-sources").toString
     val df = Seq((1L, "alpha", 1.5), (2L, "beta", -0.25), (3L, "gamma", 0.0))
       .toDF("id", "name", "score")
     Sources.writeCsv(df, s"$dir/csv")
@@ -22,7 +22,7 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("orc roundtrip preserves data and schema (self-describing)") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = tempDir("graft-orc").toString
     val df = Seq((1L, "alpha", 1.5), (2L, "beta", -0.25), (3L, "gamma", 0.0))
       .toDF("id", "name", "score")
     Sources.writeOrc(df, s"$dir/orc")
@@ -36,7 +36,7 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("binaryFile + text sources: per-file binary rows, per-line text rows") {
-    val dir = Files.createTempDirectory("graft-bin").toString
+    val dir = tempDir("graft-bin").toString
     val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     Files.write(java.nio.file.Paths.get(dir, "a.png"), png)
     Files.write(java.nio.file.Paths.get(dir, "b.txt"),
@@ -57,7 +57,7 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("partitioned parquet: directory pruning at planning time") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     val df = Catalog.table(spark, "/root/testdata/sf0.001", "events")
     Sources.writePartitioned(df, s"$dir/events", Seq("event_type"))
     val back = Sources.readParquet(spark, s"$dir/events")
@@ -104,7 +104,7 @@ class SourcesSpec extends SparkSpecBase {
 
   test("scanSplitBytes: high- and low-compression dirs land within 2x of the same decompressed bytes per split") {
     import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft-split").toString
+    val base = tempDir("graft-split").toString
     // fixture-like compressible text: 100 words from a 32-word vocab
     // (the driver corpus measures ~20x); incompressible: hex of hashes
     val vocabArr = array((0 until 32).map(i => lit(s"w$i")): _*)
@@ -151,7 +151,7 @@ class SourcesSpec extends SparkSpecBase {
         assert(v <= own, s"$t: chosen $v > own $own")
       }
       // a dir with none of the calibration tables leaves the conf as-is
-      val empty = Files.createTempDirectory("graft-nocal").toString
+      val empty = tempDir("graft-nocal").toString
       val kept = Sources.calibrateScanSplit(spark, empty)
       assert(kept == spark.sessionState.conf.filesMaxPartitionBytes)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", before)
@@ -161,7 +161,7 @@ class SourcesSpec extends SparkSpecBase {
     import graft.queries.CoreQueries.CapabilitySinks
     val bn = s"graft-runonce-${java.util.UUID.randomUUID()}"
     def dirWithOrders(): String = {
-      val d = Files.createTempDirectory("graft-runonce").resolve(bn).toString
+      val d = tempDir("graft-runonce").resolve(bn).toString
       Seq((1L, "F"), (2L, "O"), (3L, "F")).toDF("o_orderkey", "o_orderstatus")
         .write.parquet(s"$d/orders.parquet")
       d

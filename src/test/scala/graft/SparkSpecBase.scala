@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +10,20 @@ import org.scalatest.BeforeAndAfterAll
   * settings keep tiny-DataFrame tests fast. */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
+
+  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  def tempDir(prefix: String): Path = keep(Files.createTempDirectory(prefix))
+
+  /** A fresh temp file, deleted after the suite. */
+  def tempFile(prefix: String, suffix: String): Path = keep(Files.createTempFile(prefix, suffix))
+
+  private def keep(p: Path): Path = { temps.add(p); p }
+
+  override def afterAll(): Unit =
+    try temps.forEach(p => FileUtils.deleteQuietly(p.toFile))
+    finally super.afterAll()
 
   /** Runs `body` with the session confs `kv` set, restoring them after. */
   def withConf[T](kv: (String, String)*)(body: => T): T = {
@@ -39,7 +55,13 @@ object SparkSpecBase {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir", warehouse)
     .getOrCreate()
+
+  /** The test JVM's warehouse directory, deleted when the JVM exits. */
+  private lazy val warehouse: String = {
+    val d = Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(d))
+    d.toString
+  }
 }

@@ -75,7 +75,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming parquet sink: checkpointed exactly-once across restart") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val base = tempDir("graft-sink").toString
     val out = s"$base/out"
     val ckpt = s"$base/ckpt"
     val q1 = EventStreams.startDedupToParquet(spark, dir, out, ckpt)
@@ -177,7 +177,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("over-cap hot bucket: streaming freeze-at-cap == batch keep-first-N") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hotbucket").toString
+    val tmp = tempDir("graft-hotbucket").toString
     // six identical boilerplate docs — every band bucket holds all six,
     // over the cap of 3 — plus two unrelated docs as cold background
     val boiler = "the quick brown fox jumps over the lazy dog again and again"

@@ -24,7 +24,7 @@ class SubsetCliSpec extends SparkSpecBase {
   }
 
   test("parse: --config loads extra pseudo-FK edges from JSON") {
-    val f = Files.createTempFile("graft-config", ".json")
+    val f = tempFile("graft-config", ".json")
     Files.writeString(f,
       """[{"childTable": "documents", "childCols": ["doc_id"],
         |  "parentTable": "customer", "parentCols": ["c_custkey"]}]""".stripMargin)
@@ -32,7 +32,7 @@ class SubsetCliSpec extends SparkSpecBase {
     assert(a.extraFks == Seq(
       Fk("documents", Seq("doc_id"), "customer", Seq("c_custkey"), pseudo = true)))
     // malformed config fails loudly
-    val bad = Files.createTempFile("graft-config-bad", ".json")
+    val bad = tempFile("graft-config-bad", ".json")
     Files.writeString(bad, """{"not": "an array"}""")
     intercept[IllegalArgumentException] {
       SubsetCli.parse(Seq("/s", "/d", "0.1", "--config", bad.toString))
@@ -58,7 +58,7 @@ class SubsetCliSpec extends SparkSpecBase {
   }
 
   test("second run into a non-empty dest appends only the gap; RI holds on the total") {
-    val dest = Files.createTempDirectory("graft-subset-redest").toString
+    val dest = tempDir("graft-subset-redest").toString
     val src = "/root/testdata/sf0.001"
     val first = SubsetCli.run(spark, SubsetCli.parse(Seq(src, dest, "0.05")))
     val second = SubsetCli.run(spark, SubsetCli.parse(Seq(src, dest, "0.1")))
@@ -88,7 +88,7 @@ class SubsetCliSpec extends SparkSpecBase {
     // demand parents in the MISSING tables). The next run must not
     // assume closure — it re-walks the parent closure over the partial
     // dest's keys, so the merged dest is referentially complete.
-    val dest = Files.createTempDirectory("graft-subset-partial").toString
+    val dest = tempDir("graft-subset-partial").toString
     val src = "/root/testdata/sf0.001"
     val full = Subsetter.subset(Catalog.load(spark, src), FkGraph.default,
       Subsetter.Config(fraction = 0.05))
@@ -105,7 +105,7 @@ class SubsetCliSpec extends SparkSpecBase {
   }
 
   test("crash during delta STAGING: uncommitted staging is discarded, dest untouched") {
-    val dest = Files.createTempDirectory("graft-atomic1").toString
+    val dest = tempDir("graft-atomic1").toString
     val src = "/root/testdata/sf0.001"
     val first = SubsetCli.run(spark, SubsetCli.parse(Seq(src, dest, "0.05")))
     // simulate a crash mid-staging: staged files present, NO manifest
@@ -122,8 +122,8 @@ class SubsetCliSpec extends SparkSpecBase {
 
   test("crash mid-APPLY: committed delta recovers on the next run; result equals an uninterrupted run") {
     val src = "/root/testdata/sf0.001"
-    val crashed = Files.createTempDirectory("graft-atomic2").toString
-    val control = Files.createTempDirectory("graft-atomic2c").toString
+    val crashed = tempDir("graft-atomic2").toString
+    val control = tempDir("graft-atomic2c").toString
     for (d <- Seq(crashed, control))
       SubsetCli.run(spark, SubsetCli.parse(Seq(src, d, "0.05")))
     // the control gets the SAME number of delta passes as the crashed
@@ -162,7 +162,7 @@ class SubsetCliSpec extends SparkSpecBase {
   test("--validate mode parses; validateOnly audits a dest standalone") {
     assert(SubsetCli.parse(Seq("/s", "/d", "0.1", "--validate")).validateOnly)
     assert(!SubsetCli.parse(Seq("/s", "/d", "0.1")).validateOnly)
-    val dest = Files.createTempDirectory("graft-validate-only").toString
+    val dest = tempDir("graft-validate-only").toString
     val src = "/root/testdata/sf0.001"
     SubsetCli.run(spark, SubsetCli.parse(Seq(src, dest, "0.1")))
     assert(SubsetCli.validateOnly(spark, dest) == ((0L, Nil)), "clean dest audits clean")
@@ -174,13 +174,13 @@ class SubsetCliSpec extends SparkSpecBase {
     // partial dest: audits what's present WITHOUT crashing, but reports
     // the missing tables — main turns that into a non-zero exit, because
     // "0 orphans among what exists" does not certify closure
-    val partial = Files.createTempDirectory("graft-validate-partial").toString
+    val partial = tempDir("graft-validate-partial").toString
     spark.read.parquet(s"$dest/orders.parquet").write.parquet(s"$partial/orders.parquet")
     val (orphans, missing) = SubsetCli.validateOnly(spark, partial)
     assert(orphans == 0L && missing.nonEmpty)
     // a present-but-EMPTY table (zero-row parquet from a crashed write)
     // audits as 0 orphans for its edges, not an NPE
-    val withEmpty = Files.createTempDirectory("graft-validate-empty").toString
+    val withEmpty = tempDir("graft-validate-empty").toString
     for (t <- Catalog.tableNames)
       spark.read.parquet(s"$dest/$t.parquet").write.parquet(s"$withEmpty/$t.parquet")
     spark.read.parquet(s"$dest/lineitem.parquet").filter(lit(false))
@@ -189,7 +189,7 @@ class SubsetCliSpec extends SparkSpecBase {
   }
 
   test("subset sf0.001 -> destination parquet: RI holds on the written copy") {
-    val dest = Files.createTempDirectory("graft-subset-dest").toString
+    val dest = tempDir("graft-subset-dest").toString
     val args = SubsetCli.parse(Seq("/root/testdata/sf0.001", dest, "0.1",
       "--full-tables", "region,nation", "--force", "customer:1"))
     val written = SubsetCli.run(spark, args)

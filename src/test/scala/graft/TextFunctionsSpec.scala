@@ -250,7 +250,7 @@ class TextFunctionsSpec extends SparkSpecBase {
 
   test("dsir: target-like docs outscore raw-only docs") {
     import graft.queries.TextQueries
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsir").toString
+    val tmp = tempDir("graft-dsir").toString
     // doc 0 is in BOTH slices (raw via %10, target via src0); doc 10 is
     // raw-only; docs 1 and 2 are the scored probes — 1 repeats the
     // target-favored bigram, 2 the raw-only bigram
@@ -271,7 +271,7 @@ class TextFunctionsSpec extends SparkSpecBase {
 
   test("bigram LM cache: retrains when the corpus files change") {
     import graft.queries.TextQueries
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val tmp = tempDir("graft-lm").toString
     def write(text: String): Unit = {
       Seq((0L, text), (10L, text)).toDF("doc_id", "text")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -294,7 +294,7 @@ class TextFunctionsSpec extends SparkSpecBase {
     // the in-memory caches: the second call must serve bit-identical
     // models from the persisted store (both LM and DSIR families).
     import graft.queries.TextQueries
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lmstore").toString
+    val tmp = tempDir("graft-lmstore").toString
     Seq((0L, "alpha beta gamma", "src1"), (10L, "alpha beta delta", "src1"),
         (3L, "alpha beta gamma beta", "src3"))
       .toDF("doc_id", "text", "source")

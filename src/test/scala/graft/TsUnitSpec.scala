@@ -106,11 +106,11 @@ class TsUnitSpec extends SparkSpecBase {
   }
 
   private lazy val nanosDir = {
-    val d = Files.createTempDirectory("graft-ts-nanos").toString
+    val d = tempDir("graft-ts-nanos").toString
     writeNanosFixture(d); d
   }
   private lazy val microsDir = {
-    val d = Files.createTempDirectory("graft-ts-micros").toString
+    val d = tempDir("graft-ts-micros").toString
     writeMicrosFixture(d); d
   }
 
@@ -170,7 +170,7 @@ class TsUnitSpec extends SparkSpecBase {
 
   test("malformed fixture (string ts) fails loudly at the probe site") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-ts-bad").toString
+    val d = tempDir("graft-ts-bad").toString
     val tmp = s"$d/_tmp"
     Seq((1L, "not-a-timestamp", 7L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -197,7 +197,7 @@ class TsUnitSpec extends SparkSpecBase {
   }
 
   test("readEvents on a not-yet-landed directory still constructs (live-arrival)") {
-    val empty = Files.createTempDirectory("graft-ts-empty").toString
+    val empty = tempDir("graft-ts-empty").toString
     val df = EventStreams.readEvents(spark, empty)
     assert(df.isStreaming)
     assert(df.schema("ts").dataType == TimestampType)
@@ -209,7 +209,7 @@ class TsUnitSpec extends SparkSpecBase {
     // nanos column. The pinned behavior must be a LOUD streaming
     // failure, never silently-wrong windows (a nanos long read as µs
     // would put every event ~50,000 years in the future).
-    val d = Files.createTempDirectory("graft-ts-late-nanos").toString
+    val d = tempDir("graft-ts-late-nanos").toString
     val df = EventStreams.readEvents(spark, d)
     writeNanosFixture(d)
     val q = EventStreams.tumblingCounts(df)
@@ -236,7 +236,7 @@ class TsUnitSpec extends SparkSpecBase {
     // a garbage non-parquet file named events.parquet must fail
     // readEvents construction loudly — only PATH_NOT_FOUND /
     // UNABLE_TO_INFER_SCHEMA take the live-arrival µs default
-    val d = Files.createTempDirectory("graft-ts-garbage").toString
+    val d = tempDir("graft-ts-garbage").toString
     Files.write(Paths.get(s"$d/events.parquet"),
       "this is not a parquet file".getBytes("UTF-8"))
     intercept[Exception] {

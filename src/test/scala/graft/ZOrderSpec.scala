@@ -2,7 +2,6 @@ package graft
 
 import graft.plans.GraftZOrder
 import graft.sources.Sources
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Z-order clustering: key correctness against a naive bit loop, and
@@ -35,7 +34,7 @@ class ZOrderSpec extends SparkSpecBase {
   }
 
   test("z-ordered layout skips files on BOTH dimensions; single-column sort on one") {
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder").toString
     val events = Catalog.table(spark, "/root/testdata/sf0.01", "events")
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("2024-01-01")).cast("long").as("day"))
