@@ -1,7 +1,10 @@
 package graft.functions
 
+import graft.plans.{Kernels, WordTable}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftColumn
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 
 /** Text-analysis column functions for the documents pipeline —
   * north_star extensions (language-ID, quality scoring, token counting,
@@ -38,8 +41,8 @@ object TextFunctions {
     * lambda evaluator per token, five times per document in the
     * language-ID vote; bit-identical counts (TextFunctionsSpec pin). */
   def wordSetCount(text: Column, words: Seq[String]): Column =
-    org.apache.spark.sql.graftshim.GraftColumn.of(graft.plans.WordCount(
-      org.apache.spark.sql.graftshim.GraftColumn.expr(tokens(text)), words))
+    GraftColumn.of(Kernels.invoke(WordTable(words), "count", IntegerType,
+      ArrayType(StringType))(GraftColumn.expr(tokens(text))))
 
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column =
     wordSetCount(text, stopwords).cast("double") / tokenCount(text).cast("double")
@@ -57,7 +60,7 @@ object TextFunctions {
     * two interpreted lambdas per token; bit-identical fold
     * (TextFunctionsSpec pin). */
   def fingerprint(text: Column): Column =
-    graft.plans.Kernels.call("graft_fingerprint", tokens(text))
+    Kernels.call("graft_fingerprint", tokens(text))
 
   /** Tiny per-language stopword tables for the n-gram/stopword-vote
     * language-ID heuristic. */

@@ -46,12 +46,11 @@ import scala.jdk.CollectionConverters._
   * the parent's (an integral widening is fine), and for a null PK value,
   * seen only after the collect.
   *
-  * Two differences from the distributed rounds, both where those rounds
-  * fall short of their own postcondition: a cyclic closure runs to its
-  * fixpoint (the distributed one stops after 50 rounds), and a pulled
-  * child key demands the parents of every row with that key (the
-  * distributed pull demands the pulled row's only — the same on a unique
-  * PK; on a non-unique PK its sibling rows, also written, could orphan).
+  * One difference from the distributed rounds, where those rounds fall
+  * short of their own postcondition: a pulled child key demands the
+  * parents of every row with that key (the distributed pull demands the
+  * pulled row's only — the same on a unique PK; on a non-unique PK its
+  * sibling rows, also written, could orphan).
   */
 private[operators] object SmallSubset {
 

@@ -171,16 +171,6 @@ object Subsetter {
   // (SURVEY §2 row 10, §3b)
   // ---------------------------------------------------------------------
 
-  /** Expand per-table PK key sets along all FK edges until no set grows.
-    *
-    * `seeds` maps table -> DataFrame of (at least) that table's PK
-    * columns. Returns table -> distinct PK-column DataFrame for every
-    * table reachable via parent edges. Edges are walked in child-first
-    * topological intent (the declared `fks` order) and updates applied
-    * immediately, so a depth-d DAG converges in one pass + one
-    * confirmation pass; cycles (self-FKs) iterate until stable, exactly
-    * like the reference's exists-guard terminates its recursion.
-    */
   /** Child-first topological edge order (Kahn). Returns the ordered
     * edges and whether the table graph is acyclic: on a DAG one chained
     * pass reaches the fixpoint; cycles (self-FKs) fall back to
@@ -204,11 +194,20 @@ object Subsetter {
     if (settled == tables.size) (order.toSeq, true) else (graph.fks, false)
   }
 
+  /** Expand per-table PK key sets along all FK edges until no set grows.
+    *
+    * `seeds` maps table -> DataFrame of (at least) that table's PK
+    * columns. Returns table -> distinct PK-column DataFrame for every
+    * table reachable via parent edges. Edges are walked in child-first
+    * topological intent (the declared `fks` order) and updates applied
+    * immediately, so a depth-d DAG converges in one pass + one
+    * confirmation pass; cycles (self-FKs) iterate until stable, exactly
+    * like the reference's exists-guard terminates its recursion.
+    */
   def parentClosure(
       tables: Map[String, DataFrame],
       graph: FkGraph,
       seeds: Map[String, DataFrame],
-      maxIters: Int = 50,
       materialize: Boolean = true): Map[String, DataFrame] = {
     // LAZY checkpoints: no eager checkpoint job per table up front. Under
     // AQE the call still runs the `distinct` shuffle stage of each seed;
@@ -258,7 +257,7 @@ object Subsetter {
       keys += parent -> keys.get(parent).map(_.union(fresh)).getOrElse(fresh)
       deltas(parent) = fresh
     }
-    closureFrom(tables, graph, keys, deltas.toMap, maxIters, materialize)
+    closureFrom(tables, graph, keys, deltas.toMap, materialize)
   }
 
   /** Semi-naive closure: expand only from `deltas` (the keys that are
@@ -279,7 +278,6 @@ object Subsetter {
       graph: FkGraph,
       existing: Map[String, DataFrame],
       deltas: Map[String, DataFrame],
-      maxIters: Int = 50,
       materialize: Boolean = true): Map[String, DataFrame] = {
 
     def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
@@ -423,11 +421,11 @@ object Subsetter {
       if (materialize && keys.nonEmpty)
         keys.values.map(_.select(lit(1).as("__m"))).reduce(_ union _).count()
     } else {
-      // Cycles: classic semi-naive rounds until no delta survives.
+      // Cycles: classic semi-naive rounds until no delta survives. A
+      // round's deltas hold only keys new to `keys`, so each round adds a
+      // key or ends the loop: it stops within the key count.
       var delta = deltas
-      var iter = 0
-      while (delta.nonEmpty && iter < maxIters) {
-        iter += 1
+      while (delta.nonEmpty) {
         val next = scala.collection.mutable.Map[String, DataFrame]()
         for ((child, fks) <- grouped; d <- delta.get(child)) {
           expandWave(Seq((child, fks, d)), (fk, fresh) =>

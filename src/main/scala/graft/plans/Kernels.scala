@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.graftshim.GraftColumn
 import org.apache.spark.sql.types._
 
@@ -96,6 +96,20 @@ object Kernels {
   /** Column form of [[build]]: `Kernels.call("graft_minhash", toks, lit(5), lit(64))`. */
   def call(name: String, args: Column*): Column =
     GraftColumn.of(build(name, args.map(GraftColumn.expr)))
+
+  /** The object-call form, for a kernel that needs state a static call's
+    * arguments cannot carry (a word table, a trained model): an `Invoke`
+    * of `handle.method(args)` on an object literal. The generated code is
+    * one reference-object call inside whole-stage codegen, and the plan
+    * prints `handle.method(args)`, so a handle's `toString` is its stable
+    * plan name. `inputs` are the method's parameter types, to which the
+    * analyzer casts `args`; NULL in any argument is NULL out. Handles are
+    * value-equal, so equal handles make equal calls, which subexpression
+    * elimination evaluates once per row. The method returns a primitive. */
+  def invoke(handle: Serializable, method: String, dataType: DataType,
+             inputs: DataType*)(args: Expression*): Expression =
+    Invoke(Literal(handle, ObjectType(handle.getClass)), method, dataType, args, inputs,
+      returnNullable = false)
 }
 
 /** SQL registration of the kernel table and the literal-model LM
@@ -113,10 +127,8 @@ object GraftExtensions {
 
   private[plans] val descriptors = Kernels.table.map(k =>
     fn(k.name, classOf[Kernel])(Kernels.build(k.name, _))) ++ Seq(
-    fn("graft_dsir_score", classOf[LmScores.DsirScore])(c =>
-      LmScores.DsirScore(c(0), c(1), c(2), c(3), c(4))),
-    fn("graft_lm_nll", classOf[LmScores.LmNll])(c =>
-      LmScores.LmNll(c(0), c(1), c(2), c(3))))
+    fn("graft_dsir_score", classOf[LmScores.DsirModel])(LmScores.dsirScore),
+    fn("graft_lm_nll", classOf[LmScores.LmModel])(LmScores.lmNll))
 
   /** Idempotent in-session registration, for sessions built without
     * the extensions config that run SQL text over the kernels. */

@@ -1,11 +1,11 @@
 package graft.plans
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
-import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
+import org.apache.spark.sql.graftshim.GraftColumn
+import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native scoring kernels for the trained-map LM family (perplexity
@@ -19,85 +19,84 @@ import org.apache.spark.unsafe.types.UTF8String
   * count-shaped benches, where column pruning drops the score column
   * entirely; the resampling query's checkpoint made it visible).
   *
-  * These kernels precompute a java.util.HashMap from feature key to the
+  * A [[Model]] precomputes a java.util.HashMap from feature key to the
   * feature's FINAL quantized contribution — computed with arithmetic
   * bit-identical to the HOF (same op order, same `round(..., 0)`
   * HALF_UP, same double widths), so DuckDB oracles and the streaming
   * parity are unchanged. Per bigram the row path is then one hash
   * lookup (plus a first-word fallback for the LM's back-off term)
-  * instead of a 50k-entry scan: sf1 scoring drops 47 s → sub-second,
-  * and the plan stays inside whole-stage codegen via a
-  * reference-object call.
+  * instead of a 50k-entry scan: sf1 scoring drops 47 s → sub-second.
   *
-  * Model transport (r15 verdict item 2): the query layer ships the
-  * precomputed model through a BROADCAST variable ([[DsirScoreBcast]]/
-  * [[LmNllBcast]]) — one ~1.4 MiB block-manager fetch per executor —
-  * instead of the original literal-map children, whose serialized maps
-  * rode in EVERY task binary (TaskSetManager "very large task" warnings
-  * at the gate SFs; at 1000-executor scale, per-task overhead). The
-  * literal-children forms ([[DsirScore]]/[[LmNll]]) stay registered for
-  * SQL use and as the spec anchor; both forms score through the SAME
-  * model object, so they are bit-identical by construction. */
+  * Every form is one [[Kernels.invoke]] object call, `handle.score(
+  * tokens)`, inside whole-stage codegen. The query layer's handle is a
+  * [[Broadcasted]] model — one ~1.4 MiB block-manager fetch per
+  * executor instead of the model riding EVERY task binary. The SQL
+  * names `graft_dsir_score`/`graft_lm_nll` build their model from the
+  * literal map arguments once, at analysis, and the model is the
+  * handle. Both go through the same builders, so they are bit-identical
+  * by construction. */
 object LmScores {
 
   /** Spark's `round(x, 0)` for doubles (HALF_UP via BigDecimal) followed
     * by a long cast — bit-compatible with `round(col, 0).cast("long")`. */
-  private[plans] def q6(x: Double): Long =
+  private def q6(x: Double): Long =
     java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
 
-  private[plans] val Space = UTF8String.fromString(" ")
+  private val Space = UTF8String.fromString(" ")
 
-  private[plans] def litMap(e: Expression, what: String): (Array[UTF8String], Array[Long]) =
-    e match {
+  /** A foldable argument as the literal it evaluates to. */
+  private def folded(e: Expression): Expression =
+    if (e.foldable) Literal(e.eval(), e.dataType) else e
+
+  private def litMap(e: Expression, what: String): Map[String, Long] =
+    folded(e) match {
       case Literal(m: MapData, MapType(StringType, LongType, _)) =>
-        val n = m.numElements()
-        val keys = new Array[UTF8String](n)
-        val vals = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          keys(i) = m.keyArray().getUTF8String(i)
-          vals(i) = m.valueArray().getLong(i)
-          i += 1
-        }
-        (keys, vals)
+        val (ks, vs) = (m.keyArray(), m.valueArray())
+        Map.from((0 until m.numElements()).map(i => ks.getUTF8String(i).toString -> vs.getLong(i)))
       case other => throw new IllegalArgumentException(
         s"$what must be a map<string,bigint> literal, got $other")
     }
 
-  private[plans] def litDouble(e: Expression, what: String): Double = e match {
+  private def litDouble(e: Expression, what: String): Double = folded(e) match {
     case Literal(v: Double, _) => v
     case other => throw new IllegalArgumentException(
       s"$what must be a double literal, got $other")
   }
 
-  private def toHashMap(ks: Array[UTF8String], vs: Array[Long])
-      : java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](ks.length * 2)
-    var i = 0
-    while (i < ks.length) { m.put(ks(i), vs(i)); i += 1 }
-    m
+  private def toHashMap(m: Map[String, Long]): java.util.HashMap[UTF8String, java.lang.Long] = {
+    val h = new java.util.HashMap[UTF8String, java.lang.Long](m.size * 2)
+    m.foreach { case (k, v) => h.put(UTF8String.fromString(k), v) }
+    h
   }
 
-  private def utf8Arrays(m: Map[String, Long]): (Array[UTF8String], Array[Long]) = {
-    val ks = new Array[UTF8String](m.size)
-    val vs = new Array[Long](m.size)
-    var i = 0
-    m.foreach { case (k, v) =>
-      ks(i) = UTF8String.fromString(k); vs(i) = v; i += 1 }
-    (ks, vs)
+  // --- precomputed models ----------------------------------------------
+
+  /** A trained bigram scorer. `score` drops null token slots first, the
+    * token-kernel null policy of [[GraftHashes]]:
+    * `score(a) == score(filter(a, x -> x is not null))`. */
+  sealed trait Model extends Serializable {
+    def score(tokens: ArrayData): Long
   }
 
-  // --- precomputed models (the single arithmetic path both expression
-  // --- forms and both transports score through) ------------------------
+  /** A [[Model]] in a Broadcast: tasks carry the handle, executors fetch
+    * the model once, and each deserialized copy reads `bc.value` once.
+    * Equal broadcasts make equal handles, and the plan prints `name`. */
+  final case class Broadcasted(name: String, bc: Broadcast[_ <: Model]) {
+    @transient private lazy val model: Model = bc.value
+    def score(tokens: ArrayData): Long = model.score(tokens)
+    override def toString: String = name
+  }
 
   /** DSIR contribution table: per known feature the final quantized
     * log-ratio, plus the out-of-vocab constant. java.util.HashMap and
     * UTF8String are both Serializable, so the model broadcasts as-is. */
   final class DsirModel(
       val byKey: java.util.HashMap[UTF8String, java.lang.Long],
-      val oov: Long) extends Serializable {
-    def score(toks: ArrayData): Long = {
+      val oov: Long) extends Model {
+    override def toString: String = "graft_dsir_score"
+    def score(tokens: ArrayData): Long = {
+      val toks = GraftHashes.nonNull(tokens)
       val n = toks.numElements()
       if (n < 2) return 0L
       var acc = 0L
@@ -115,15 +114,13 @@ object LmScores {
   /** Σ over consecutive-token bigrams of
     * q6(ln(((t+1)·(rTot+V)) / ((r+1)·(tTot+V)))); out-of-vocab bigrams
     * (absent from BOTH maps) contribute the constant
-    * q6(ln((rTot+V)/(tTot+V))). */
-  private[plans] def buildDsirModel(
-      tk: Array[UTF8String], tv: Array[Long],
-      rk: Array[UTF8String], rv: Array[Long],
-      rtv: Double, ttv: Double): DsirModel = {
-    val t = toHashMap(tk, tv)
-    val r = toHashMap(rk, rv)
-    val out = new java.util.HashMap[UTF8String, java.lang.Long](
-      (tk.length + rk.length) * 2)
+    * q6(ln((rTot+V)/(tTot+V))). The one builder of both SQL forms and
+    * both transports, so they can never fork arithmetically. */
+  def dsirModel(target: Map[String, Long], raw: Map[String, Long],
+                rtv: Double, ttv: Double): DsirModel = {
+    val t = toHashMap(target)
+    val r = toHashMap(raw)
+    val out = new java.util.HashMap[UTF8String, java.lang.Long]((t.size + r.size) * 2)
     val keys = new java.util.HashSet[UTF8String](t.keySet)
     keys.addAll(r.keySet)
     val it = keys.iterator()
@@ -137,24 +134,16 @@ object LmScores {
     new DsirModel(out, q6(Math.log((1.0 * rtv) / (1.0 * ttv)) * 1000000.0))
   }
 
-  /** Driver-side constructor for the broadcast path — same builder the
-    * literal expression resolves through, so the two transports can
-    * never fork arithmetically. */
-  def dsirModel(target: Map[String, Long], raw: Map[String, Long],
-                rtv: Double, ttv: Double): DsirModel = {
-    val (tk, tv) = utf8Arrays(target)
-    val (rk, rv) = utf8Arrays(raw)
-    buildDsirModel(tk, tv, rk, rv, rtv, ttv)
-  }
-
   /** Bigram-LM NLL tables: contribution per known bigram (add-one
     * smoothing against the first word's unigram count), back-off per
     * known first word, double-unknown constant. */
   final class LmModel(
       val byBigram: java.util.HashMap[UTF8String, java.lang.Long],
       val byFirst: java.util.HashMap[UTF8String, java.lang.Long],
-      val unknown: Long) extends Serializable {
-    def score(toks: ArrayData): Long = {
+      val unknown: Long) extends Model {
+    override def toString: String = "graft_lm_nll"
+    def score(tokens: ArrayData): Long = {
+      val toks = GraftHashes.nonNull(tokens)
       val n = toks.numElements()
       if (n < 2) return 0L
       var acc = 0L
@@ -174,21 +163,16 @@ object LmScores {
     }
   }
 
-  private[plans] def buildLmModel(
-      bgk: Array[UTF8String], bgv: Array[Long],
-      w1k: Array[UTF8String], w1v: Array[Long],
-      vocabN: Double): LmModel = {
-    val w1 = toHashMap(w1k, w1v)
-    val byBigram = new java.util.HashMap[UTF8String, java.lang.Long](bgk.length * 2)
-    var i = 0
-    while (i < bgk.length) {
-      val k = bgk(i)
-      val sp = k.indexOf(Space, 0)
-      val first = k.substring(0, sp)
-      val c1 = w1.get(first)
+  /** The one LM builder (see [[dsirModel]]). */
+  def lmModel(bigrams: Map[String, Long], unigrams: Map[String, Long],
+              vocabN: Double): LmModel = {
+    val w1 = toHashMap(unigrams)
+    val byBigram = new java.util.HashMap[UTF8String, java.lang.Long](bigrams.size * 2)
+    bigrams.foreach { case (bigram, c2) =>
+      val k = UTF8String.fromString(bigram)
+      val c1 = w1.get(k.substring(0, k.indexOf(Space, 0)))
       val cw1 = if (c1 == null) 0L else c1.longValue()
-      byBigram.put(k, -q6(Math.log((bgv(i) + 1.0) / (cw1 + vocabN)) * 1000000.0))
-      i += 1
+      byBigram.put(k, -q6(Math.log((c2 + 1.0) / (cw1 + vocabN)) * 1000000.0))
     }
     val byFirst = new java.util.HashMap[UTF8String, java.lang.Long](w1.size() * 2)
     val it = w1.entrySet().iterator()
@@ -200,109 +184,36 @@ object LmScores {
     new LmModel(byBigram, byFirst, -q6(Math.log(1.0 / (0.0 + vocabN)) * 1000000.0))
   }
 
-  /** Driver-side constructor for the broadcast path (see [[dsirModel]]). */
-  def lmModel(bigrams: Map[String, Long], unigrams: Map[String, Long],
-              vocabN: Double): LmModel = {
-    val (bgk, bgv) = utf8Arrays(bigrams)
-    val (w1k, w1v) = utf8Arrays(unigrams)
-    buildLmModel(bgk, bgv, w1k, w1v, vocabN)
+  // --- SQL forms --------------------------------------------------------
+
+  /** `handle.score(tokens)` for a [[Model]] or a [[Broadcasted]] one
+    * ([[Kernels.invoke]]). */
+  private def scoreCall(handle: Serializable, tokens: Expression): Expression =
+    Kernels.invoke(handle, "score", LongType, ArrayType(StringType))(tokens)
+
+  /** Column form of [[scoreCall]]. */
+  def score(handle: Serializable, tokens: Column): Column =
+    GraftColumn.of(scoreCall(handle, GraftColumn.expr(tokens)))
+
+  private def arity(name: String, c: Seq[Expression], n: Int): Unit =
+    require(c.length == n, s"$name takes $n arguments, got ${c.length}")
+
+  /** `graft_dsir_score(tokens, target map<string,bigint>, raw
+    * map<string,bigint>, rtv double, ttv double)`: the model is built
+    * once, at analysis, from the foldable arguments. */
+  private[plans] def dsirScore(c: Seq[Expression]): Expression = {
+    arity("graft_dsir_score", c, 5)
+    scoreCall(dsirModel(litMap(c(1), "target counts"), litMap(c(2), "raw counts"),
+      litDouble(c(3), "rtv"), litDouble(c(4), "ttv")), c(0))
   }
 
-  // --- expressions ------------------------------------------------------
-
-  /** Base for the scorers: evaluates only the token-array child at
-    * runtime; the model is precomputed (from literal children or a
-    * broadcast). */
-  abstract class ScoreExpr extends Expression {
-    def tokens: Expression
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = tokens.nullable
-    override def foldable: Boolean = false
-    def score(toks: ArrayData): Long
-
-    override def eval(input: InternalRow): Any = {
-      val t = tokens.eval(input)
-      if (t == null) null else score(t.asInstanceOf[ArrayData])
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val ref = ctx.addReferenceObj("graftScore", this, classOf[ScoreExpr].getName)
-      val c = tokens.genCode(ctx)
-      ev.copy(code =
-        code"""
-          ${c.code}
-          boolean ${ev.isNull} = ${c.isNull};
-          long ${ev.value} = 0L;
-          if (!${ev.isNull}) ${ev.value} = $ref.score(${c.value});
-        """)
-    }
-  }
-
-  /** DSIR importance weight over LITERAL map children (`typedlit`) —
-    * the SQL-registrable form; the model rides in the plan/task binary. */
-  case class DsirScore(tokens: Expression, tMapL: Expression, rMapL: Expression,
-                       rtvL: Expression, ttvL: Expression) extends ScoreExpr {
-    override def children: Seq[Expression] = Seq(tokens, tMapL, rMapL, rtvL, ttvL)
-    override def prettyName: String = "graft_dsir_score"
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(tokens = newChildren(0), tMapL = newChildren(1), rMapL = newChildren(2),
-        rtvL = newChildren(3), ttvL = newChildren(4))
-
-    @transient private lazy val model: DsirModel = {
-      val (tk, tv) = litMap(tMapL, "target counts")
-      val (rk, rv) = litMap(rMapL, "raw counts")
-      buildDsirModel(tk, tv, rk, rv, litDouble(rtvL, "rtv"), litDouble(ttvL, "ttv"))
-    }
-    override def score(toks: ArrayData): Long = model.score(toks)
-  }
-
-  /** [[DsirScore]] with the model in a Broadcast: tasks carry the
-    * handle, executors fetch the table once. Not registrable (a
-    * Broadcast is not an Expression child) — built via the
-    * GraftColumn shim. */
-  case class DsirScoreBcast(tokens: Expression, model: Broadcast[DsirModel])
-      extends ScoreExpr {
-    override def children: Seq[Expression] = Seq(tokens)
-    override def prettyName: String = "graft_dsir_score_bcast"
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(tokens = newChildren(0))
-    @transient private lazy val m: DsirModel = model.value
-    override def score(toks: ArrayData): Long = m.score(toks)
-  }
-
-  /** Bigram-LM negative log likelihood (q6-quantized) over LITERAL map
-    * children: Σ over bigrams of −q6(ln((c2(b)+1) / (c1(w1)+V))) —
-    * add-one smoothing against the first word's unigram count, V =
-    * vocabulary size. */
-  case class LmNll(tokens: Expression, bgMapL: Expression, w1MapL: Expression,
-                   vocabL: Expression) extends ScoreExpr {
-    override def children: Seq[Expression] = Seq(tokens, bgMapL, w1MapL, vocabL)
-    override def prettyName: String = "graft_lm_nll"
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(tokens = newChildren(0), bgMapL = newChildren(1), w1MapL = newChildren(2),
-        vocabL = newChildren(3))
-
-    @transient private lazy val model: LmModel = {
-      val (bgk, bgv) = litMap(bgMapL, "bigram counts")
-      val (w1k, w1v) = litMap(w1MapL, "unigram counts")
-      buildLmModel(bgk, bgv, w1k, w1v, litDouble(vocabL, "vocabN"))
-    }
-    override def score(toks: ArrayData): Long = model.score(toks)
-  }
-
-  /** [[LmNll]] with the model in a Broadcast (see [[DsirScoreBcast]]). */
-  case class LmNllBcast(tokens: Expression, model: Broadcast[LmModel])
-      extends ScoreExpr {
-    override def children: Seq[Expression] = Seq(tokens)
-    override def prettyName: String = "graft_lm_nll_bcast"
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(tokens = newChildren(0))
-    @transient private lazy val m: LmModel = model.value
-    override def score(toks: ArrayData): Long = m.score(toks)
+  /** `graft_lm_nll(tokens, bigrams map<string,bigint>, unigrams
+    * map<string,bigint>, vocabN double)`: Σ over bigrams of
+    * −q6(ln((c2(b)+1) / (c1(w1)+V))), add-one smoothing against the
+    * first word's unigram count, V the vocabulary size. */
+  private[plans] def lmNll(c: Seq[Expression]): Expression = {
+    arity("graft_lm_nll", c, 4)
+    scoreCall(lmModel(litMap(c(1), "bigram counts"), litMap(c(2), "unigram counts"),
+      litDouble(c(3), "vocabN")), c(0))
   }
 }

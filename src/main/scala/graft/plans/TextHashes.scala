@@ -43,7 +43,7 @@ object GraftHashes {
   }
 
   /** `toks` without its null slots — the same object when it has none. */
-  private def nonNull(toks: ArrayData): ArrayData = {
+  private[plans] def nonNull(toks: ArrayData): ArrayData = {
     val n = toks.numElements()
     var i = 0
     while (i < n && !toks.isNullAt(i)) i += 1

@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Runtime helpers for the scan-local text-scoring kernels (r18,
@@ -13,7 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the interpreted lambda evaluator runs per TOKEN per row, and the
   * language-ID vote evaluates five of them per document. These kernels
   * are one codegen'd pass each, bit-identical by construction
-  * (TextFunctionsSpec pins kernel == HOF on the real corpus). */
+  * (TextFunctionsSpec pins kernel == HOF on the real corpus):
+  * `graft_fingerprint` is a [[Kernels]] table row, `graft_word_count` a
+  * [[Kernels.invoke]] call on the [[WordTable]] that carries its words. */
 object GraftScores {
 
   /** Count of tokens (occurrences, not distinct) equal to any of
@@ -93,30 +92,12 @@ object GraftScores {
   }
 }
 
-/** `graft_word_count(tokens array<string>) -> int` with the word table
-  * carried in the expression (stopword tables are compile-time
-  * constants) — see [[GraftScores.wordCount]]. Hand-written, not a
-  * [[Kernels]] row: the table rides into generated code as a reference
-  * object, which a static call's arguments cannot carry. */
-case class WordCount(child: Expression, words: Seq[String])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_word_count"
-
+/** The word table of `graft_word_count(tokens array<string>) -> int`,
+  * the [[Kernels.invoke]] handle of `TextFunctions.wordSetCount`: equal
+  * word lists make equal calls. See [[GraftScores.wordCount]]. */
+final case class WordTable(words: Seq[String]) {
   @transient private lazy val table: Array[UTF8String] =
     words.map(UTF8String.fromString).toArray
-
-  override def nullSafeEval(a: Any): Any =
-    GraftScores.wordCount(a.asInstanceOf[ArrayData], table)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("wordTable", table,
-      classOf[UTF8String].getName + "[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.GraftScores.wordCount($a, $tableRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def count(tokens: ArrayData): Int = GraftScores.wordCount(tokens, table)
+  override def toString: String = "graft_word_count"
 }

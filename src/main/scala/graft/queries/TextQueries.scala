@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Catalog
 import graft.functions.{SimilarityFunctions, TextFunctions}
-import graft.plans.Kernels
+import graft.plans.{Kernels, LmScores}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1485,26 +1485,30 @@ object TextQueries {
     }
 
   // --- broadcast transport of the trained models (r15 verdict item 2) --
-  // One Broadcast per (SparkContext, kind, dir, cap, fingerprint): the
+  // One Broadcast per (SparkContext, name, dir, fingerprint): the
   // typedlit literal-map children rode the serialized maps in EVERY
   // task binary (TaskSetManager "very large task (1425 KiB)" warnings),
   // which at 1000-executor scale is per-task serialization overhead a
   // broadcast pays once per executor. The model object is precomputed
-  // on the driver through the SAME builder the literal kernels resolve
+  // on the driver through the SAME builder the SQL forms resolve
   // through (LmScores.lmModel/dsirModel), so outputs are bit-identical
   // by construction — LmScoresSpec pins it on the real corpus. Keyed on
   // applicationId so a restarted context in the same JVM can never
-  // reuse a dead broadcast.
-  private val bcastCache = scala.collection.mutable
-    .Map[(String, String, String, Int, String), org.apache.spark.broadcast.Broadcast[_]]()
+  // reuse a dead broadcast. One cached handle per broadcast keeps the
+  // calls equal, so subexpression elimination shares them.
+  private val scorers = scala.collection.mutable
+    .Map[(String, String, String, String), LmScores.Broadcasted]()
 
-  private def modelBroadcast[T: scala.reflect.ClassTag](s: SparkSession,
-      kind: String, dir: String, cap: Int)(mk: => T)
-      : org.apache.spark.broadcast.Broadcast[T] = bcastCache.synchronized {
-    val key = (s.sparkContext.applicationId, kind, dir, cap,
-      Catalog.dirFingerprint(dir, "documents"))
-    bcastCache.getOrElseUpdate(key, s.sparkContext.broadcast(mk))
-      .asInstanceOf[org.apache.spark.broadcast.Broadcast[T]]
+  /** The `text` column's score under the model `mk` builds, shipped
+    * through the cached broadcast handle `name`. */
+  private def broadcastScore(s: SparkSession, name: String, dir: String)(
+      mk: => LmScores.Model): Column = {
+    val handle = scorers.synchronized {
+      scorers.getOrElseUpdate(
+        (s.sparkContext.applicationId, name, dir, Catalog.dirFingerprint(dir, "documents")),
+        LmScores.Broadcasted(name, s.sparkContext.broadcast(mk)))
+    }
+    LmScores.score(handle, split(col("text"), " "))
   }
 
   /** The (n_pairs, nll_q6) scoring columns of the bigram LM, trained on
@@ -1515,16 +1519,9 @@ object TextQueries {
       : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
     val toks = split(col("text"), " ")
     val (c2, c1, vocabN) = lmCounts(s, dir)
-    // native kernel (r14) — same O(|vocab|)-per-lookup fix as
-    // graft_dsir_score: per-bigram contributions (and the per-first-word
-    // back-off) precomputed with bit-identical arithmetic, scored via
-    // hash lookups; kernel == HOF pinned in LmScoresSpec. r16: the
-    // model ships via Broadcast (see [[modelBroadcast]]).
-    val bc = modelBroadcast(s, "lm", dir, LmVocabCap)(
-      graft.plans.LmScores.lmModel(c2, c1, vocabN.toDouble))
-    val nll = org.apache.spark.sql.graftshim.GraftColumn.of(
-      graft.plans.LmScores.LmNllBcast(
-        org.apache.spark.sql.graftshim.GraftColumn.expr(toks), bc))
+    // native kernel (r14): see graft.plans.LmScores
+    val nll = broadcastScore(s, "graft_lm_nll_bcast", dir)(
+      LmScores.lmModel(c2, c1, vocabN.toDouble))
     val nPairs = when(size(toks) >= 2, size(toks) - 1).otherwise(0).cast("long")
     (nPairs, nll)
   }
@@ -1662,20 +1659,9 @@ object TextQueries {
   private[graft] def dsirCols(s: SparkSession, dir: String): (Column, Column) = {
     val (ct, cr, v, tTot, rTot) = dsirCountsCapped(s, dir, LmVocabCap)
     val toks = split(col("text"), " ")
-    // native kernel (r14): the HOF formulation's element_at on a
-    // 50k-entry literal map is an O(|vocab|) LINEAR scan per bigram —
-    // 47 s for 50k docs at sf1, hidden from count-shaped benches by
-    // column pruning until the resampling checkpoint surfaced it.
-    // The kernel precomputes each key's quantized contribution once
-    // (bit-identical arithmetic — LmScoresSpec pins kernel == HOF on
-    // the real corpus) and scores via hash lookups; r16: the model
-    // ships via Broadcast (see [[modelBroadcast]]).
-    val bc = modelBroadcast(s, "dsir", dir, LmVocabCap)(
-      graft.plans.LmScores.dsirModel(ct, cr,
-        (rTot + v).toDouble, (tTot + v).toDouble))
-    val w = org.apache.spark.sql.graftshim.GraftColumn.of(
-      graft.plans.LmScores.DsirScoreBcast(
-        org.apache.spark.sql.graftshim.GraftColumn.expr(toks), bc))
+    // native kernel (r14): see graft.plans.LmScores
+    val w = broadcastScore(s, "graft_dsir_score_bcast", dir)(
+      LmScores.dsirModel(ct, cr, (rTot + v).toDouble, (tTot + v).toDouble))
     val nFeats = when(size(toks) >= 2, size(toks) - 1).otherwise(0).cast("long")
     (nFeats, w)
   }

@@ -5,12 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column <-> Catalyst-Expression bridge for expressions built without
-  * the FunctionRegistry: the kernel table's `graft.plans.Kernels.call`,
-  * which needs no session registration, and expressions no registered
-  * builder can make (a builder receives only `Seq[Expression]`
-  * children, so one carrying a `Broadcast` handle — the
-  * graft.plans.LmScores broadcast scorers — has no registry-compatible
-  * constructor). Spark 4 scopes the direct
+  * the FunctionRegistry: the kernel table's `graft.plans.Kernels.call`
+  * and the object calls of `graft.plans.Kernels.invoke`, neither of
+  * which needs a session registration. Spark 4 scopes the direct
   * constructors `private[sql]` (`ExpressionUtils.column/expression` in
   * `org.apache.spark.sql.classic`), so this one-object shim lives in an
   * `org.apache.spark.sql` subpackage to re-export them — the standard

@@ -63,7 +63,7 @@ class LmScoresSpec extends SparkSpecBase {
 
   test("broadcast transport == literal-children kernels (both models)") {
     // r16: the query layer ships the models via Broadcast
-    // (LmNllBcast/DsirScoreBcast); the literal forms stay registered
+    // (LmScores.Broadcasted handles); the literal forms stay registered
     // for SQL. Both resolve through the same model builders — pinned
     // here end to end on the real corpus.
     graft.plans.GraftExtensions.register(spark)
@@ -98,5 +98,28 @@ class LmScoresSpec extends SparkSpecBase {
     val oov = rows.find(_.getString(0).startsWith("zzqx9")).get
     assert(oov.getLong(1) == 3L) // 3 bigrams, every one out-of-vocab
     assert(oov.getLong(2) != 0L || oov.getLong(4) != 0L) // constant contributions apply
+  }
+
+  test("null token slots are skipped: score(a) == score(filter(a, x -> x is not null))") {
+    graft.plans.GraftExtensions.register(spark)
+    val rows = Seq(
+      (Seq("the", null, "cat"), Seq("the", "cat")),
+      (Seq(null, "the", null, null, "cat", "sat", null), Seq("the", "cat", "sat")),
+      (Seq("the", null), Seq("the")))
+      .toDF("a", "clean").repartition(2)
+    def dsir(t: String) = call_function("graft_dsir_score", col(t),
+      typedlit(Map("the cat" -> 4L, "cat sat" -> 1L)), typedlit(Map("the cat" -> 1L)),
+      lit(30.0), lit(40.0))
+    def nll(t: String) = call_function("graft_lm_nll", col(t),
+      typedlit(Map("the cat" -> 3L, "cat sat" -> 2L)), typedlit(Map("the" -> 5L, "cat" -> 2L)),
+      lit(20.0))
+    val got = rows.select(dsir("a"), dsir("clean"), nll("a"), nll("clean")).collect()
+    assert(got.length == 3)
+    got.foreach { r =>
+      assert(r.getLong(0) == r.getLong(1), s"graft_dsir_score: $r")
+      assert(r.getLong(2) == r.getLong(3), s"graft_lm_nll: $r")
+    }
+    // the known bigram "the cat" scores, not two out-of-vocab ones
+    assert(got.exists(r => r.getLong(1) != 0L && r.getLong(3) != 0L))
   }
 }

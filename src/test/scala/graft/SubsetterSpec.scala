@@ -79,6 +79,12 @@ class SubsetterSpec extends SparkSpecBase {
     val keys2 = Subsetter.parentClosure(
       Map("emp" -> emp), graph, Map("emp" -> emp.filter($"id" === 5L)))
     assert(keys2("emp").as[Long].collect().toSet == Set(5L, 6L))
+    // a 60-deep chain 1 <- 2 <- ... <- 60 seeded at its tail takes 59
+    // semi-naive rounds, more than the 50 the closure once stopped at
+    val chain = (1L to 60L).map(i => (i, Option.when(i > 1L)(i - 1L))).toDF("id", "mgr")
+    val keys3 = Subsetter.parentClosure(
+      Map("emp" -> chain), graph, Map("emp" -> chain.filter($"id" === 60L)))
+    assert(keys3("emp").as[Long].collect().toSet == (1L to 60L).toSet)
   }
 
   test("parentClosure: NULL FK values require no parent") {
